@@ -61,11 +61,7 @@ def _windows(x: np.ndarray, kh: int, kw: int, sh: int, sw: int) -> np.ndarray:
 #     many tiny GEMMs, 18–22% slower encode single-process.
 # 2M elements keeps every typical layer on the batched path with buffers that
 # glibc's adaptive threshold serves from the reused heap arena.
-# LATEX_OCR_IM2COL_ELEMS overrides for A/B sweeps (read once at import —
-# set it via spark.executorEnv to reach the workers).
-import os as _os
-
-_IM2COL_MAX_ELEMS = int(_os.environ.get("LATEX_OCR_IM2COL_ELEMS", "2000000"))
+_IM2COL_MAX_ELEMS = 2_000_000
 
 
 def conv2d(

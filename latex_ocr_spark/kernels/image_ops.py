@@ -59,13 +59,6 @@ def pad_to_bucket(
     return canvas, new_w, new_h
 
 
-def bucket_of(img_h: int, img_w: int, pad_size=PAD_SIZE, buckets=BUCKETS) -> tuple[int, int]:
-    """Bucket key for a cropped image of shape (img_h, img_w) — computable
-    without materializing the canvas (used for the shuffle key, G1)."""
-    top, left, bottom, right = pad_size
-    return get_new_size((img_w + left + right, img_h + top + bottom), buckets)
-
-
 def downsample(img: np.ndarray, ratio: int = DOWN_RATIO) -> np.ndarray:
     """P5 — every ratio-th pixel on both axes
     (/root/reference/model/utils/image.py:74-81)."""

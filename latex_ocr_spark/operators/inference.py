@@ -181,16 +181,7 @@ def decode_partitions(cores: int, n_groups_est: int | None = None) -> int:
     ~groups/10 (≈60 partitions for ~600 groups) wins at 8, 16 AND 32
     cores (local[8]: 27.6 s vs 32.3 s with 2×cores; local[16]: 12.0 vs
     15.4; local[32]: 64 ≈ both formulas). Floor of 2× total cores keeps
-    small corpora from under-splitting. LATEX_OCR_DECODE_FACTOR overrides
-    with a core multiple (A/B knob); LATEX_OCR_DECODE_PARTS pins exactly."""
-    import os as _os
-
-    if _os.environ.get("LATEX_OCR_DECODE_PARTS"):
-        return int(_os.environ["LATEX_OCR_DECODE_PARTS"])
-    if _os.environ.get("LATEX_OCR_DECODE_FACTOR"):
-        return max(
-            int(float(_os.environ["LATEX_OCR_DECODE_FACTOR"]) * cores), 16
-        )
+    small corpora from under-splitting."""
     if n_groups_est:
         return max(round(n_groups_est / 10), 2 * cores, 16)
     return max(2 * cores, 16)

@@ -1,11 +1,8 @@
 """Multimodal column operators: opaque binary media + typed metadata.
 
-Images are FULLY implemented (PNG decode + feature extraction — the
-extraction pipeline's real path). Audio/video decode need codec libraries the
-container doesn't ship, so those kernels are STUBBED behind clearly-marked
-deterministic fakes / NotImplementedError — but the Spark-side plumbing
-(schema, partitioning, mapInPandas batch shape) is real and tested, per the
-round brief.
+Images are fully implemented (PNG decode + feature extraction — the
+extraction pipeline's real path). PDF input is handled only as far as an
+embedded PNG image (``rasterize_pdf``); a full rasterizer is not shipped.
 """
 
 from __future__ import annotations
@@ -13,7 +10,6 @@ from __future__ import annotations
 import numpy as np
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..fixtures.png import decode_png
 from ..kernels import image_ops
@@ -74,62 +70,3 @@ def rasterize_pdf(pdf_bytes: bytes) -> np.ndarray:
         )
     return decode_png(pdf_bytes[start : end + 8])  # IEND + length/type/CRC
 
-
-# --------------------------------------------------------------------------
-# audio / video: schema-correct plumbing, stubbed decode kernels
-# --------------------------------------------------------------------------
-
-AUDIO_FEATURES_SCHEMA = "media_ref string, sample_rate int, n_samples long, rms double"
-VIDEO_FRAMES_SCHEMA = "media_ref string, frame_idx int, ts_ms long, frame_png binary"
-
-
-def _decode_audio_stub(data: bytes) -> np.ndarray:
-    """STUB: no audio codec in this container. A real deployment plugs in
-    soundfile/ffmpeg here. Deterministic fake: interpret bytes as int16 PCM."""
-    if len(data) < 2:
-        raise NotImplementedError("audio decode requires a codec library")
-    return np.frombuffer(data[: len(data) - len(data) % 2], dtype=np.int16)
-
-
-def audio_features(media: DataFrame, audio_col: str = "image") -> DataFrame:
-    """Audio feature extraction plumbing (mapInPandas, Arrow batches).
-    Uses the deterministic PCM fake so the distributed path is testable."""
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for ref, blob in zip(pdf["media_ref"], pdf[audio_col]):
-                pcm = _decode_audio_stub(bytes(blob)).astype(np.float64)
-                out.append(
-                    {
-                        "media_ref": ref,
-                        "sample_rate": 16000,  # fake header value
-                        "n_samples": len(pcm),
-                        "rms": round(float(np.sqrt(np.mean(pcm**2))), 4) if len(pcm) else 0.0,
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return media.select("media_ref", audio_col).mapInPandas(
-        run, schema=AUDIO_FEATURES_SCHEMA
-    )
-
-
-def video_frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing. The decode kernel is a hard stub —
-    calling the action raises NotImplementedError (no video codec shipped);
-    the plan (schema, batch shape) is still constructible and unit-tested."""
-
-    def run(batches):
-        for _pdf in batches:
-            raise NotImplementedError(
-                "video decode requires ffmpeg/pyav; plug the codec into "
-                "video_frame_sample.run — the Spark plumbing is complete"
-            )
-            yield None  # pragma: no cover
-
-    return media.select("media_ref", "image").mapInPandas(
-        run, schema=VIDEO_FRAMES_SCHEMA
-    )

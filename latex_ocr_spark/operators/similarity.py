@@ -110,26 +110,6 @@ def _probe_sigs(sig, n_planes: int, probe_bits: int):
     return F.array(*probes)
 
 
-def srp_signature(df: DataFrame, vec_col: str, dim: int, n_planes: int, table: int):
-    """Signed-random-projection signature as a built-in expression: bit b set
-    iff embedding · plane_b >= 0. (Reference implementation — the hot paths
-    use ``srp_signatures_all``, one vectorized matmul for every table.)"""
-    planes = _srp_planes(dim, n_planes, table)
-    sig = F.lit(0).cast("long")
-    for b, plane in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                F.array(*[F.lit(float(v)) for v in plane]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        sig = sig + F.when(dot >= 0, F.lit(2**b).cast("long")).otherwise(F.lit(0))
-    return sig
-
-
 def srp_signatures_all(
     df: DataFrame,
     vec_col: str,
@@ -141,12 +121,12 @@ def srp_signatures_all(
     """All tables' SRP signatures in ONE Arrow-batched matmul:
     (id, embedding) → (id, table, sig).
 
-    The expression formulation evaluates n_tables·n_planes interpreted
+    Bit b of a table's signature is set iff embedding · plane_b >= 0. A
+    built-in expression would evaluate n_tables·n_planes interpreted
     higher-order aggregates per row (≈100 lambda reductions); stacking every
     plane into a (dim × n_tables·n_planes) matrix and letting numpy do
-    batch @ planes is the vectorized-pandas-UDF fast path the brief prescribes
-    when built-ins can't express the op efficiently. Sign boundaries
-    (dot == 0.0) keep the expression path's >= 0 convention."""
+    batch @ planes is the vectorized-pandas-UDF fast path when built-ins
+    can't express the op efficiently."""
     planes = np.concatenate(
         [np.asarray(_srp_planes(dim, n_planes, t)) for t in range(n_tables)]
     ).T.astype(np.float64)  # (dim, n_tables*n_planes)

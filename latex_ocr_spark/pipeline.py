@@ -90,18 +90,10 @@ def extract_spans_from_docs(
 
     # spread the decode+prepro UDF across the cluster: the broadcast join is
     # narrow, so without this the mapInPandas inherits however few input
-    # splits the (small) spans scan produced. Factor env-tunable for cluster
-    # sizing experiments (LATEX_OCR_PREPRO_FACTOR × defaultParallelism).
-    import os as _os
-
-    # factor 1: one prepro partition per core. 2× was measured to cost ~1 s
-    # of per-task dispatch at local[32] with zero balance benefit (the PNG
-    # decode work is uniform); raise it only for skewed media-size corpora.
-    n_prepro = max(
-        int(float(_os.environ.get("LATEX_OCR_PREPRO_FACTOR", "1"))
-            * spark.sparkContext.defaultParallelism),
-        8,
-    )
+    # splits the (small) spans scan produced. One prepro partition per core:
+    # 2× was measured to cost ~1 s of per-task dispatch at local[32] with zero
+    # balance benefit (the PNG decode work is uniform).
+    n_prepro = max(spark.sparkContext.defaultParallelism, 8)
     prepped_bucketed = preprocess_spans(
         joined.filter(fits).select(*base_cols).repartition(n_prepro), pipe
     )

@@ -13,6 +13,29 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(env_value: str | None, mem_total_bytes: int | None) -> str:
+    """``spark.driver.memory``: an explicit ``SPARK_DRIVER_MEM`` wins;
+    otherwise 60% of physical memory floored to whole GiB (local mode runs the
+    executors and the Python workers beside this heap, so it must leave them
+    room), and never below Spark's own 1g default."""
+    if env_value:
+        return env_value
+    gib = int(0.6 * (mem_total_bytes or 0)) // 2**30
+    return f"{max(gib, 1)}g"
+
+
+def _mem_total_bytes() -> int | None:
+    """MemTotal from /proc/meminfo, or None where that file does not exist."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) * 1024  # reported in kB
+    except OSError:
+        pass
+    return None
+
+
 def get_spark(
     app: str = "latex_ocr_spark",
     cores: int | None = None,
@@ -42,7 +65,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            driver_memory(os.environ.get("SPARK_DRIVER_MEM"), _mem_total_bytes()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # Small fixture tables pack into 1-2 splits under openCostInBytes

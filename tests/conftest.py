@@ -14,7 +14,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 def spark():
     from latex_ocr_spark.session import get_spark
 
-    s = get_spark("latex_ocr_spark-tests", cores=8, shuffle_partitions=8)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    s = get_spark("latex_ocr_spark-tests", cores=cores, shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -14,7 +14,7 @@ import pytest
 from latex_ocr_spark.config import BUCKETS, ModelConfig
 from latex_ocr_spark.fixtures.glyphs import render_formula
 from latex_ocr_spark.fixtures.png import decode_png, encode_png
-from latex_ocr_spark.kernels import image_ops, text_ops
+from latex_ocr_spark.kernels import encoder, image_ops, text_ops
 from latex_ocr_spark.kernels.beam import beam_decode
 from latex_ocr_spark.kernels.decode import AttentionDecoder, log_softmax, softmax
 from latex_ocr_spark.kernels.encoder import add_timing_signal_nd, conv2d, encode, max_pool
@@ -108,6 +108,54 @@ def test_conv_and_pool_shapes():
     # SAME pooling ceil semantics on odd dims
     p2 = max_pool(out[:, :11, :19], (2, 2), (2, 2))
     assert p2.shape == (2, 6, 10, cfg.conv_channels[0])
+
+
+def _conv2d_reference(x, W, b, padding):
+    """Stride-1 conv from the definition, in float64: one shifted
+    multiply-add per kernel tap (nine for 3x3). SAME puts the extra pad row
+    and column at the bottom/right, as TF does."""
+    kh, kw, _, cout = W.shape
+    x = x.astype(np.float64)
+    W = W.astype(np.float64)
+    if padding == "SAME":
+        x = np.pad(x, ((0, 0), ((kh - 1) // 2, kh // 2), ((kw - 1) // 2, kw // 2), (0, 0)))
+    n, h, w, _ = x.shape
+    oh, ow = h - kh + 1, w - kw + 1
+    out = np.broadcast_to(b.astype(np.float64), (n, oh, ow, cout)).copy()
+    for i in range(kh):
+        for j in range(kw):
+            out += x[:, i : i + oh, j : j + ow, :] @ W[i, j]
+    return out
+
+
+@pytest.mark.parametrize("padding", ["SAME", "VALID"])
+def test_conv2d_batched_path_matches_reference(padding):
+    rng = np.random.default_rng(1)
+    x = rng.uniform(-1, 1, (3, 12, 20, 4)).astype(np.float32)
+    W = rng.normal(0, 0.3, (3, 3, 4, 8)).astype(np.float32)
+    b = rng.normal(0, 0.1, 8).astype(np.float32)
+    # every image's im2col fits the budget: the batched path
+    assert 12 * 20 * 9 * 4 <= encoder._IM2COL_MAX_ELEMS
+    out = conv2d(x, W, b, padding)
+    ref = _conv2d_reference(x, W, b, padding)
+    assert out.dtype == np.float32 and out.shape == ref.shape
+    np.testing.assert_allclose(out, ref, rtol=1e-5, atol=1e-5)
+
+
+@pytest.mark.parametrize("padding", ["SAME", "VALID"])
+def test_conv2d_row_slab_path_matches_reference(padding):
+    rng = np.random.default_rng(2)
+    x = rng.uniform(-1, 1, (1, 480, 480, 1)).astype(np.float32)
+    W = rng.normal(0, 0.3, (3, 3, 1, 8)).astype(np.float32)
+    b = rng.normal(0, 0.1, 8).astype(np.float32)
+    # one canvas's im2col exceeds the budget (even VALID's 478x478 output):
+    # the per-image row-slab path, over more than one slab
+    assert 478 * 478 * 9 > encoder._IM2COL_MAX_ELEMS
+    assert encoder._IM2COL_MAX_ELEMS // (480 * 9) < 478
+    out = conv2d(x, W, b, padding)
+    ref = _conv2d_reference(x, W, b, padding)
+    assert out.dtype == np.float32 and out.shape == ref.shape
+    np.testing.assert_allclose(out, ref, rtol=1e-5, atol=1e-5)
 
 
 def test_positional_signal_matches_formula():

@@ -1,18 +1,8 @@
-"""Multimodal plumbing tests: image features fully real; audio/video stubs
-must have correct Spark-side schema/batch plumbing (round brief: stub the
-codec, make the distributed plumbing real and tested)."""
+"""Multimodal operator tests: image features from a real PNG decode."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-from pyspark.sql.utils import PythonException
-
-from latex_ocr_spark.operators.multimodal import (
-    audio_features,
-    image_features,
-    video_frame_sample,
-)
+from latex_ocr_spark.operators.multimodal import image_features
 from latex_ocr_spark.sources import read_media
 
 
@@ -29,23 +19,3 @@ def test_image_features_real_decode(spark, corpus):
         if f.nonwhite_frac > 0:
             assert f.content_h > 0 and f.content_w > 0
 
-
-def test_audio_plumbing_deterministic_fake(spark):
-    df = spark.createDataFrame(
-        [("a1", bytearray(b"\x00\x01\x02\x03\x04\x05"))], ["media_ref", "image"]
-    )
-    rows = audio_features(df).collect()
-    assert rows[0].n_samples == 3
-    assert rows[0].sample_rate == 16000
-    assert rows[0].rms > 0
-
-
-def test_video_stub_plan_builds_but_action_raises(spark):
-    df = spark.createDataFrame([("v1", bytearray(b"xx"))], ["media_ref", "image"])
-    plan = video_frame_sample(df)
-    # the plan is constructible with the right schema…
-    assert [f.name for f in plan.schema.fields] == [
-        "media_ref", "frame_idx", "ts_ms", "frame_png"]
-    # …and the decode kernel is an explicit NotImplementedError stub
-    with pytest.raises(Exception, match="NotImplementedError|video decode"):
-        plan.collect()

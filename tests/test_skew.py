@@ -179,4 +179,4 @@ def test_decode_partitioning_scales_with_groups(spark):
 
     cores = spark.sparkContext.defaultParallelism
     assert decode_partitions(cores, n_groups_est=1280) == 128
-    assert decode_partitions(cores, n_groups_est=10) == 2 * cores
+    assert decode_partitions(cores, n_groups_est=10) == max(2 * cores, 16)
