@@ -704,7 +704,8 @@ def _q_extract_text_passthrough(spark, sf_dir):
 def _q_extract_media_decoded(spark, sf_dir):
     """Flagship media half: decoded LaTeX per media span, hash-checked against
     the materialized single-process numpy oracle (the north-star invariant:
-    distributed bucketed decode == reference-semantics oracle, span for span).
+    distributed shape-batched decode == reference-semantics oracle, span for
+    span).
     The oracle parquet is ensured here so the DuckDB side can read it."""
     from latex_ocr_spark.fixtures.oracle_store import ensure_oracle_decodes
 
@@ -735,7 +736,7 @@ def _q_extract_media_beam(spark, sf_dir):
 
 
 def _q_bucket_histogram(spark, sf_dir):
-    """G1: the shape-bucket distribution the batching shuffles on, hash-checked
+    """G1: the shape-bucket distribution the decode UDF batches by, hash-checked
     against the single-process preprocess ground truth (oracle_prepro parquet —
     distributed mapInPandas bucketing must equal the same kernels run in one
     process)."""

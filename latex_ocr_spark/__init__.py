@@ -16,8 +16,8 @@ Layout:
     fixtures/     — deterministic synthetic corpus (PNG codec, glyph renderer,
                     interleaved docs + media tables); replaces the reference's
                     pdflatex/magick fixture build (no TeX toolchain needed)
-    operators/    — Spark DataFrame operators (explode/route, bucketing+salt,
-                    bucketed inference, reassembly, checkpoint/resume, dedup,
+    operators/    — Spark DataFrame operators (explode/route, shape-batched
+                    inference, reassembly, checkpoint/resume, dedup,
                     similarity search, text analysis)
     pipeline.py   — the end-to-end extraction job
     eval/         — exact-match / edit-distance / BLEU aggregations

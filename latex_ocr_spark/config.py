@@ -117,10 +117,11 @@ class PipelineConfig:
     """Distributed-execution knobs (the part the reference doesn't have)."""
 
     buckets: tuple[tuple[int, int], ...] = tuple(BUCKETS)
-    # salt fan-out for heavy buckets (SURVEY.md §7 "Skew"). The decode stage's
-    # max parallelism is (non-empty buckets × salts): size it ≥ 2× total cores
-    # so the dominant bucket alone can keep every core busy; pixel-budget
-    # chunking keeps per-batch vectorization independent of group size.
+    # salt fan-out for heavy buckets (SURVEY.md §7 "Skew"). The (bucket,
+    # salt)-grouped perplexity stage's max parallelism is (non-empty buckets ×
+    # salts): size it ≥ 2× total cores so the dominant bucket alone can keep
+    # every core busy; pixel-budget chunking keeps per-batch vectorization
+    # independent of group size. Extraction round-robins and uses no salt.
     salt_buckets: int = 128
     # max pixels per numpy batch inside the inference UDF; bounds UDF memory
     # independent of Arrow record count (reference pads whole minibatches,

@@ -6,10 +6,11 @@ unmasked decode step under teacher forcing and n_words sums formula lengths
 (/root/reference/model/img2seq.py:68-75, 233-252 — the reference negates the
 final exp; the published table reports the magnitude).
 
-Spark shape = the flagship decode pipeline's: prepro → one (bucket, salt)
-shuffle → grouped pandas-UDF batches with broadcast weights — but the UDF
-scores gold labels (kernels.decode.AttentionDecoder.teacher_forced_ce)
-instead of free-decoding. Per-ref (ce_sum, n_words) rows reduce to the one
+Spark shape: prepro → one (bucket, salt) shuffle → grouped pandas-UDF
+batches with broadcast weights, the same shape batching as the extraction's
+decode UDF (inference.shape_batches) — but the UDF scores gold labels
+(kernels.decode.AttentionDecoder.teacher_forced_ce) instead of
+free-decoding. Per-ref (ce_sum, n_words) rows reduce to the one
 corpus-level metric with a plain aggregation; the DuckDB oracle reads the
 materialized single-process replica (fixtures/oracle_store) and applies the
 same exp(Σce/Σn) formula.
@@ -27,7 +28,7 @@ from ..fixtures.vocab import ID_END, ID_PAD, ID_UNK, TOK_TO_ID
 from ..kernels.decode import AttentionDecoder
 from ..kernels.encoder import encode
 from ..kernels.text_ops import pad_batch_formulas, tokenize
-from ..operators.inference import preprocess_spans
+from ..operators.inference import preprocess_spans, shape_batches
 from ..pipeline import broadcast_weights
 from ..sources import read_media
 
@@ -51,28 +52,24 @@ def ce_stats(
 
         mcfg = ModelConfig.from_dict(cfg_dict)
         dec = AttentionDecoder(weights_bc.value, mcfg, ID_END)
+        canvases = [
+            np.frombuffer(a, dtype=np.uint8).reshape(ch, cw)
+            for a, ch, cw in zip(pdf["canvas"], pdf["ch"], pdf["cw"])
+        ]
         refs: list[str] = []
         sums: list[float] = []
         counts: list[int] = []
-        for (ch, cw), grp in pdf.groupby(["ch", "cw"], sort=True):
-            n_per_batch = max(1, budget // max(ch * cw, 1))
-            for s in range(0, len(grp), n_per_batch):
-                sub = grp.iloc[s : s + n_per_batch]
-                batch = np.stack(
-                    [
-                        np.frombuffer(a, dtype=np.uint8).reshape(ch, cw)
-                        for a in sub["canvas"]
-                    ]
-                )
-                enc = encode(batch, weights_bc.value, mcfg)
-                formulas = [
-                    tokenize(t, TOK_TO_ID, ID_UNK) for t in sub["latex_true"]
-                ]
-                labels, lengths = pad_batch_formulas(formulas, ID_PAD, ID_END)
-                ce = dec.teacher_forced_ce(enc, labels, lengths)
-                refs.extend(sub["media_ref"])
-                sums.extend(float(x) for x in ce)
-                counts.extend(int(x) for x in lengths)
+        for chunk in shape_batches(canvases, budget):
+            sub = pdf.iloc[chunk]
+            enc = encode(
+                np.stack([canvases[i] for i in chunk]), weights_bc.value, mcfg
+            )
+            formulas = [tokenize(t, TOK_TO_ID, ID_UNK) for t in sub["latex_true"]]
+            labels, lengths = pad_batch_formulas(formulas, ID_PAD, ID_END)
+            ce = dec.teacher_forced_ce(enc, labels, lengths)
+            refs.extend(sub["media_ref"])
+            sums.extend(float(x) for x in ce)
+            counts.extend(int(x) for x in lengths)
         return pd.DataFrame(
             {"media_ref": refs, "ce_sum": sums, "n_words": counts}
         )

@@ -5,9 +5,9 @@ SURVEY.md §3.3, re-expressed Spark-first):
       → posexplode(spans)                       # S2 analog
       → route: text spans pass through          # predicate
       → media spans ⋈ media table on media_ref  # J1/J2 equi join
-      → mapInPandas prepro + bucket assign      # P1,P3,P4,P5 + G1
-      → repartition(bucket, salt)               # the one shuffle that matters
-      → groupBy(bucket, salt).applyInPandas     # M1..M8 + F5 + P7, broadcast weights
+      → repartition(defaultParallelism)         # round-robin, one part per core
+      → mapInPandas infer_rows                  # P1,P3,P4,P5 + shape batching
+                                                # (G1) + M1..M8, broadcast weights
       → unionByName(text spans)                 # set op
       → groupBy(doc_id).sort_array(collect_list)# (doc_id, offset) reassembly
 """
@@ -20,12 +20,7 @@ from pyspark.sql import functions as F
 from .config import ModelConfig, PipelineConfig
 from .fixtures.vocab import N_TOK
 from .kernels.weights import init_weights
-from .operators.inference import (
-    decode_groups,
-    decode_rows,
-    fits_some_bucket,
-    preprocess_spans,
-)
+from .operators.inference import decode_media
 from .operators.reassemble import reassemble
 from .sources import read_docs, read_media
 
@@ -59,7 +54,6 @@ def extract_spans_from_docs(
     cfg: ModelConfig | None = None,
     pipe: PipelineConfig | None = None,
     weights_bc=None,
-    n_groups_est: int | None = None,
 ) -> DataFrame:
     """Core extraction over an in-hand docs DataFrame (batch scan OR a
     streaming micro-batch inside foreachBatch — streaming.extraction_sink):
@@ -77,34 +71,11 @@ def extract_spans_from_docs(
     )
 
     joined = media_spans.join(
-        media_tbl.select("media_ref", "image", "height", "width"), "media_ref"
+        media_tbl.select("media_ref", "image"), "media_ref"
     )
-
-    # Route to the bucketed vs row-parallel decode path on the media table's
-    # STORED dims, before any pixel work: each row is PNG-decoded and
-    # preprocessed exactly once (filtering the prepro UDF's output instead
-    # would make both union branches recompute it over the whole corpus —
-    # measured as a duplicated MapInPandas subtree in the physical plan).
-    fits = fits_some_bucket(pipe, F.col("height"), F.col("width"))
-    base_cols = ("doc_id", "part", "offset", "media_ref", "image")
-
-    # spread the decode+prepro UDF across the cluster: the broadcast join is
-    # narrow, so without this the mapInPandas inherits however few input
-    # splits the (small) spans scan produced. One prepro partition per core:
-    # 2× was measured to cost ~1 s of per-task dispatch at local[32] with zero
-    # balance benefit (the PNG decode work is uniform).
-    n_prepro = max(spark.sparkContext.defaultParallelism, 8)
-    prepped_bucketed = preprocess_spans(
-        joined.filter(fits).select(*base_cols).repartition(n_prepro), pipe
-    )
-    prepped_rows = preprocess_spans(
-        joined.filter(~fits).select(*base_cols).repartition(8), pipe
-    )
-    # part rides through both UDF schemas, so any corpus's own partition
+    # part rides through the UDF schema, so any corpus's own partition
     # assignment is preserved (never re-derived from the doc_id string)
-    decoded = decode_groups(
-        prepped_bucketed, weights_bc, cfg, pipe, n_groups_est
-    ).unionByName(decode_rows(prepped_rows, weights_bc, cfg, pipe))
+    decoded = decode_media(joined, weights_bc, cfg, pipe)
     media_out = decoded.select(
         "doc_id",
         "part",
@@ -118,7 +89,7 @@ def extract_spans_from_docs(
 
 # decode-group estimate per corpus dir: one metadata aggregation per corpus
 # per process (the table's stats don't change under us), shared by every
-# extract_spans / checkpointed per-part run / bench repetition against it
+# perplexity run / bench repetition against it
 _GROUPS_EST_CACHE: dict[tuple, int] = {}
 
 
@@ -126,8 +97,9 @@ def decode_groups_estimate(
     spark: SparkSession, corpus_dir: str, pipe: PipelineConfig
 ) -> int:
     """Cached estimate_decode_groups over a corpus dir's media table — the
-    partition-sizing stat (≈ non-empty (bucket, salt) cells), computed from
-    media-table metadata columns only (never a second prepro pass)."""
+    perplexity stage's partition-sizing stat (≈ non-empty (bucket, salt)
+    cells), computed from media-table metadata columns only (never a second
+    prepro pass)."""
     from .operators.inference import estimate_decode_groups
 
     # the bucket table participates in the estimate (groups ≈ non-empty
@@ -150,7 +122,6 @@ def extract_spans(
     weights_bc=None,
 ) -> DataFrame:
     """extract_spans_from_docs over a (partition-pruned) corpus-dir scan."""
-    pipe = pipe or PipelineConfig()
     return extract_spans_from_docs(
         spark,
         read_docs(spark, corpus_dir, parts=parts),
@@ -158,7 +129,6 @@ def extract_spans(
         cfg=cfg,
         pipe=pipe,
         weights_bc=weights_bc,
-        n_groups_est=decode_groups_estimate(spark, corpus_dir, pipe),
     )
 
 

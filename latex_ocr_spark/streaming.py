@@ -290,7 +290,7 @@ def extraction_sink(
 ):
     """foreachBatch extraction sink: every micro-batch of newly-discovered
     docs runs the SAME batch inference path (pipeline.extract_spans_from_docs
-    — bucketed pandas-UDF decode, broadcast weights) and lands in
+    — shape-batched pandas-UDF decode, broadcast weights) and lands in
     out_dir/docs partitioned by (part, batch_id). Batches are ADDITIVE:
     batch k writes only part=*/batch_id=k leaves, so a later micro-batch
     touching the same doc-partition never replaces an earlier batch's output
@@ -308,19 +308,13 @@ def extraction_sink(
     """
     from .config import ModelConfig, PipelineConfig
     from .operators.reassemble import reassemble
-    from .pipeline import (
-        broadcast_weights,
-        decode_groups_estimate,
-        extract_spans_from_docs,
-    )
+    from .pipeline import broadcast_weights, extract_spans_from_docs
     from .sources import read_media
 
     cfg = cfg or ModelConfig.small()
     pipe = pipe or PipelineConfig()
     weights_bc = broadcast_weights(spark, cfg)
     media_tbl = read_media(spark, corpus_dir)
-    # one metadata aggregation at sink setup, reused by every micro-batch
-    n_groups_est = decode_groups_estimate(spark, corpus_dir, pipe)
     out_docs = out_dir.rstrip("/") + "/docs"
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -332,7 +326,7 @@ def extraction_sink(
         try:
             flat = extract_spans_from_docs(
                 sess, batch_df, media_tbl, cfg=cfg, pipe=pipe,
-                weights_bc=weights_bc, n_groups_est=n_groups_est,
+                weights_bc=weights_bc,
             )
             reassemble(flat).withColumn(
                 "batch_id", F.lit(int(batch_id))

@@ -12,6 +12,7 @@ import numpy as np
 import pytest
 
 from latex_ocr_spark.config import BUCKETS, ModelConfig
+from latex_ocr_spark.fixtures.corpus import formula_for
 from latex_ocr_spark.fixtures.glyphs import render_formula
 from latex_ocr_spark.fixtures.png import decode_png, encode_png
 from latex_ocr_spark.kernels import encoder, image_ops, text_ops
@@ -215,3 +216,51 @@ def test_batch_invariance_of_decode():
     solo = m.decode_batch(np.stack([c1]))[0]
     paired = m.decode_batch(np.stack([c2, c1]))[1]
     assert solo == paired
+
+
+# (latex, scale) fixtures covering three bucket shapes, three images each
+_SHAPE_FIXTURES = (
+    ("1 + 2", 1), (r"\frac x y", 1), ("a + b", 3),  # (50, 120)
+    ("a + b = c + d + e + f", 2), ("a b c d e f g h i j", 2),
+    ("x = y + z + w", 3),  # (40, 160)
+    (r"\alpha + \beta + \gamma + 1 + 2", 3), ("a b c d e f g h i j", 3),
+    ("1 + 2 + 3 + 4 + 5", 3),  # (40, 200)
+)
+
+
+@pytest.mark.parametrize("decoding", ["greedy", "beam_search"])
+def test_decode_ids_independent_of_batch_mates(decoding):
+    """An image decodes to the same ids whatever batch it shares: its whole
+    same-shape batch, alone, or a pixel-budget chunk. Extraction batches
+    canvases by shape within round-robin partitions, so this property is
+    what makes its output independent of partitioning."""
+    cfg = ModelConfig.small(decoding=decoding)
+    assert cfg.beam_size == 2
+    w = init_weights(cfg, N_TOK)
+    dec = AttentionDecoder(w, cfg, ID_END)
+
+    def ids(batch):  # per image: its id rows (one per beam), cut at END
+        enc = encode(batch, w, cfg)
+        if decoding == "beam_search":
+            out = beam_decode(dec, enc)
+        else:
+            out = dec.greedy_decode(enc)[:, None]
+        return [[text_ops.truncate_at_end(r, ID_END) for r in rows] for rows in out]
+
+    by_shape: dict[tuple[int, int], list[np.ndarray]] = {}
+    for latex, scale in _SHAPE_FIXTURES:
+        canvas, *_ = image_ops.preprocess(render_formula(latex, scale))
+        by_shape.setdefault(canvas.shape, []).append(canvas)
+    # the corpus's no-bucket-fits image, plus its mirror image for a batch
+    # mate of the same (unbucketed) shape
+    fallback, bw, _bh, _ok = image_ops.preprocess(render_formula(*formula_for(0, 0)))
+    assert bw > max(b[0] for b in BUCKETS)
+    by_shape[fallback.shape] = [fallback, np.ascontiguousarray(fallback[:, ::-1])]
+    assert len(by_shape) == 4 and all(len(g) >= 2 for g in by_shape.values())
+
+    for shape, group in by_shape.items():
+        batch = np.stack(group)
+        whole = ids(batch)
+        alone = [ids(batch[i : i + 1])[0] for i in range(len(batch))]
+        chunked = [r for s in range(0, len(batch), 2) for r in ids(batch[s : s + 2])]
+        assert whole == alone == chunked, shape

@@ -15,7 +15,7 @@ from latex_ocr_spark.fixtures.corpus import formula_for, parse_media_ref, render
 from latex_ocr_spark.fixtures.glyphs import render_formula
 from latex_ocr_spark.fixtures.png import decode_png
 from latex_ocr_spark.kernels.oracle import Model, oracle_decode_images
-from latex_ocr_spark.pipeline import explode_spans, extract_documents
+from latex_ocr_spark.pipeline import explode_spans, extract_documents, extract_spans
 from latex_ocr_spark.sources import read_docs, read_media
 
 PARTS = [0, 1]  # partition-pruned subset keeps the test fast AND tests pruning
@@ -145,3 +145,33 @@ def test_beam_pipeline_matches_beam_oracle(spark, corpus):
         assert [
             (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in got[row.doc_id]
         ] == [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
+
+
+
+def test_extraction_runs_one_python_stage(spark, corpus):
+    """Media spans cross into Python once: the executed extraction plan
+    holds exactly one Python UDF node, a MapInPandas (no grouped
+    FlatMapGroupsInPandas stage), fed by exactly one Exchange from the
+    media join."""
+
+    def children(node):  # looks through AQE's wrapper and query stages
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return [node.executedPlan()]
+        if cls.endswith("QueryStageExec"):
+            return [node.plan()]
+        return [node.children().apply(i) for i in range(node.children().size())]
+
+    flat = extract_spans(spark, corpus, cfg=ModelConfig.small(), parts=[0])
+    flat.collect()
+    nodes, todo = [], [flat._jdf.queryExecution().executedPlan()]
+    while todo:
+        nodes.append(todo.pop())
+        todo += children(nodes[-1])
+    udfs = [n for n in nodes if ".sql.execution.python." in n.getClass().getName()]
+    assert [n.getClass().getSimpleName() for n in udfs] == ["MapInPandasExec"]
+    below_udf, node = [], udfs[0]
+    while "Join" not in node.getClass().getSimpleName():
+        (node,) = children(node)
+        below_udf.append(node.getClass().getSimpleName())
+    assert below_udf.count("ShuffleExchangeExec") == 1, below_udf

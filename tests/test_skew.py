@@ -1,13 +1,15 @@
-"""Skew-breaking evidence for the decode stage (north rule: "salts /
-repartitions to break skew from documents with many formula images").
+"""Skew-breaking evidence for the (bucket, salt)-grouped model stage (north
+rule: "salts / repartitions to break skew from documents with many formula
+images"). Extraction round-robins its media rows and needs no key; the
+teacher-forced perplexity stage (eval/perplexity.py) groups by shape bucket.
 
 The adversarial input at cluster scale is a corpus whose formula images all
 land in ONE shape bucket — e.g. a template site rendering every formula at
 the same size.  Without the salt, groupBy(bucket) would put the whole corpus
 into a single applyInPandas group = one task = one executor core, no matter
 how many executors the cluster has.  The deterministic per-ref salt
-(crc32(media_ref) % salt_buckets, operators/inference.py:76) must spread
-that hot bucket over ~salt_buckets independent groups with balanced sizes.
+(crc32(media_ref) % salt_buckets, ``preprocess_spans``) must spread that hot
+bucket over ~salt_buckets independent groups with balanced sizes.
 """
 
 from __future__ import annotations
@@ -170,13 +172,3 @@ def test_minhash_band_join_aqe_skew_split(spark):
     # (b) physical rewrite only — candidate sets identical
     assert split_pairs == plain_pairs
 
-
-def test_decode_partitioning_scales_with_groups(spark):
-    """decode_media partitions the exchange by (bucket, salt): with the
-    default heuristic the shuffle's partition count tracks max(groups/10,
-    2x cores) so one hot bucket can still occupy every core."""
-    from latex_ocr_spark.operators.inference import decode_partitions
-
-    cores = spark.sparkContext.defaultParallelism
-    assert decode_partitions(cores, n_groups_est=1280) == 128
-    assert decode_partitions(cores, n_groups_est=10) == max(2 * cores, 16)

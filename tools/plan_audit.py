@@ -68,14 +68,16 @@ def main() -> None:
     sections.append(
         (
             "Flagship extraction (`extract_spans`)",
-            "One broadcast join for the media lookup; the bucket/salt "
-            "repartition is the single explicit shuffle; both pandas-UDF "
-            "stages visible (MapInPandas / FlatMapGroupsInPandas).",
+            "One broadcast join for the media lookup; the round-robin "
+            "repartition of the joined PNG rows is the single explicit "
+            "shuffle; exactly one pandas-UDF stage (MapInPandas infer_rows: "
+            "prepro + decode), no FlatMapGroupsInPandas.",
             grep_evidence(
                 plan_of(flat),
                 [
                     "BroadcastHashJoin",
                     "Exchange",
+                    "RoundRobinPartitioning",
                     "MapInPandas",
                     "FlatMapGroupsInPandas",
                     "PartitionFilters",
@@ -538,7 +540,7 @@ def main() -> None:
 
     # 10. MEASURED decode-shuffle volume (not just plan shape): run the
     # flagship extraction under a job group and read per-stage shuffle
-    # read/write bytes from the status REST API. The (bucket, salt)
+    # read/write bytes from the status REST API. The round-robin media
     # repartition must be the dominant exchange, and its bytes/doc is the
     # number to extrapolate to 100 TB.
     import json as _json
@@ -590,11 +592,11 @@ def main() -> None:
         (
             "Flagship extraction — MEASURED shuffle bytes",
             "Runtime stage metrics from the status REST API (jobGroup-scoped "
-            "run at this sf): the (bucket, salt) decode repartition is the "
-            "only material exchange; bytes/doc is the scale extrapolation "
-            "basis — shuffle volume grows linearly with corpus size and "
-            "stays well below the raw PNG bytes because canvases are "
-            "bit-packed + RLE'd before the exchange.",
+            "run at this sf): the round-robin repartition of the joined "
+            "media rows is the only material exchange; bytes/doc is the "
+            "scale extrapolation basis — shuffle volume grows linearly with "
+            "corpus size. Its payload is each media span's stored PNG, "
+            "which the decode UDF preprocesses after the exchange.",
             ev,
         )
     )
