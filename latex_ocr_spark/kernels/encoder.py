@@ -115,10 +115,27 @@ def conv2d(
 
 
 def max_pool(x: np.ndarray, k: tuple[int, int], s: tuple[int, int]) -> np.ndarray:
-    """max_pooling2d with SAME padding (pads with -inf so padding never wins)."""
-    x = _pad_same(x, k[0], k[1], s[0], s[1], -np.inf)
-    win = _windows(np.ascontiguousarray(x), k[0], k[1], s[0], s[1])
-    return win.max(axis=(3, 4)).astype(np.float32)
+    """max_pooling2d with SAME padding for the non-overlapping pools the
+    encoders use (k == s: 2x2, 2x1, 1x2): each pooled axis takes the max of
+    its even and odd halves. SAME pads an odd length with one -inf at the end,
+    so the last element is its own window's max."""
+    assert k == s and s in ((2, 2), (2, 1), (1, 2)), (k, s)
+    for axis in (1, 2):
+        if s[axis - 1] == 2:
+            x = _max_pairs(x, axis)
+    return x
+
+
+def _max_pairs(x: np.ndarray, axis: int) -> np.ndarray:
+    """Max over non-overlapping pairs along ``axis``, the odd tail copied."""
+    n = x.shape[axis]
+    at = (slice(None),) * axis
+    out = np.empty(x.shape[:axis] + ((n + 1) // 2,) + x.shape[axis + 1 :], np.float32)
+    np.maximum(x[at + (slice(0, n - 1, 2),)], x[at + (slice(1, None, 2),)],
+               out=out[at + (slice(0, n // 2),)])
+    if n % 2:
+        out[at + (-1,)] = x[at + (-1,)]
+    return out
 
 
 def relu(x: np.ndarray) -> np.ndarray:
@@ -170,17 +187,20 @@ def encode(
         return ZOO[cfg.encoder_cnn](batch_u8, weights, cfg)
     x = (batch_u8.astype(np.float32) - 128.0) / 128.0
     x = x[:, :, :, None]
-    x = relu(conv2d(x, weights["conv0_W"], weights["conv0_b"], "SAME"))
-    x = max_pool(x, (2, 2), (2, 2))
-    x = relu(conv2d(x, weights["conv1_W"], weights["conv1_b"], "SAME"))
-    x = max_pool(x, (2, 2), (2, 2))
+    # relu after each pool, on the pooled (smaller) map: max commutes with
+    # relu, so this is exact
+    x = conv2d(x, weights["conv0_W"], weights["conv0_b"], "SAME")
+    x = relu(max_pool(x, (2, 2), (2, 2)))
+    x = conv2d(x, weights["conv1_W"], weights["conv1_b"], "SAME")
+    x = relu(max_pool(x, (2, 2), (2, 2)))
     x = relu(conv2d(x, weights["conv2_W"], weights["conv2_b"], "SAME"))
-    x = relu(conv2d(x, weights["conv3_W"], weights["conv3_b"], "SAME"))
+    x = conv2d(x, weights["conv3_W"], weights["conv3_b"], "SAME")
     if cfg.encoder_cnn == "vanilla":
         x = max_pool(x, (2, 1), (2, 1))
-    x = relu(conv2d(x, weights["conv4_W"], weights["conv4_b"], "SAME"))
+    x = conv2d(relu(x), weights["conv4_W"], weights["conv4_b"], "SAME")
     if cfg.encoder_cnn == "vanilla":
         x = max_pool(x, (1, 2), (1, 2))
+    x = relu(x)
     if cfg.encoder_cnn == "cnn":
         # strided conv replaces the two asymmetric pools, no activation
         # (model/encoder.py:53-55)

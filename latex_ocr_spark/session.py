@@ -4,10 +4,21 @@ Local mode stands in for the cluster (TESTDATA.md); the configs are the ones
 that matter at 1000-executor scale too: AQE + skew-join handling, Arrow
 batching for the pandas-UDF inference stage, shuffle partitions sized to
 parallelism rather than the 200 default.
+
+Local masters also undo one measured BLAS misdetection
+(``worker_blas_core``): an OpenBLAS that does not know an AVX-512 CPU falls
+back to its SSE3 ``Prescott`` kernels, and the decode UDF's convs and LSTM
+matmuls then run at a fifth of peak (SCALE.md). The Python workers get
+``SkylakeX`` instead,
+through ``spark.executorEnv.OPENBLAS_CORETYPE``; the driver's numpy (the
+oracles, ``predict_single``) keeps the kernel it loaded. Under
+``master=None`` the driver cannot see the executors' CPUs, so nothing is set
+and a cluster sets the variable in spark-defaults itself.
 """
 
 from __future__ import annotations
 
+import ctypes
 import os
 
 from pyspark.sql import SparkSession
@@ -36,6 +47,61 @@ def _mem_total_bytes() -> int | None:
     return None
 
 
+# The one case measured: numpy's OpenBLAS falls back to its SSE3 Prescott
+# kernels on a CPU it does not know, and the CPU has AVX-512. SkylakeX, not
+# Cooperlake: SkylakeX decoded the same ids as Prescott (the kernel the
+# driver-side oracles ran) on the sf0.001 images and the extract_dense
+# corpora, while Cooperlake (and Haswell) each flipped 1 of 82 beam decodes.
+_AVX512 = frozenset({"avx512f", "avx512cd", "avx512bw", "avx512dq", "avx512vl"})
+
+
+def worker_blas_core(loaded_core: str | None, cpu_flags) -> str | None:
+    """``OPENBLAS_CORETYPE`` for the Python workers: ``SkylakeX`` when the
+    driver's OpenBLAS loaded ``Prescott`` and ``cpu_flags`` (``/proc/cpuinfo``
+    names) have AVX-512; otherwise None. Other cores and CPUs were not
+    measured, so the rule leaves them alone."""
+    if loaded_core == "Prescott" and _AVX512 <= set(cpu_flags):
+        return "SkylakeX"
+    return None
+
+
+def loaded_blas_core() -> str | None:
+    """Core name of the OpenBLAS this process's numpy loaded (e.g.
+    ``Prescott``), or None when numpy's BLAS is not OpenBLAS or the loaded
+    libraries cannot be listed (no ``/proc/self/maps``)."""
+    import numpy  # noqa: F401  (loads its BLAS)
+
+    try:
+        with open("/proc/self/maps") as f:
+            paths = sorted({ln.split()[-1] for ln in f if "openblas" in ln.lower()})
+    except OSError:
+        return None
+    for path in paths:
+        try:
+            lib = ctypes.CDLL(path)
+        except OSError:
+            continue
+        for sym in ("openblas_get_corename64_", "openblas_get_corename"):
+            fn = getattr(lib, sym, None)
+            if fn is not None:
+                fn.restype = ctypes.c_char_p
+                return fn().decode().strip()
+    return None
+
+
+def _cpu_flags() -> set[str]:
+    """The first processor's flags from /proc/cpuinfo (empty where that file
+    does not exist)."""
+    try:
+        with open("/proc/cpuinfo") as f:
+            for line in f:
+                if line.startswith("flags"):
+                    return set(line.split(":", 1)[1].split())
+    except OSError:
+        pass
+    return set()
+
+
 def get_spark(
     app: str = "latex_ocr_spark",
     cores: int | None = None,
@@ -46,7 +112,9 @@ def get_spark(
     """``master='local'`` (default) pins local[cores] for tests/bench;
     ``master=None`` leaves the master to spark-submit (cluster deployments —
     job.py passes None so ``spark-submit --master yarn/k8s --py-files ...``
-    controls placement)."""
+    controls placement). Local masters set the workers'
+    ``OPENBLAS_CORETYPE`` (``worker_blas_core``); an ``extra`` entry for it
+    wins."""
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -78,6 +146,10 @@ def get_spark(
         # read).
         .config("spark.sql.files.minPartitionNum", str(cores))
     )
+    if master is not None and master.startswith("local"):
+        core = worker_blas_core(loaded_blas_core(), _cpu_flags())
+        if core is not None:
+            b = b.config("spark.executorEnv.OPENBLAS_CORETYPE", core)
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

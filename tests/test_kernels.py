@@ -8,6 +8,11 @@ vs hand-computed arrays, incl. edge cases all-white image
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
 import numpy as np
 import pytest
 
@@ -22,6 +27,9 @@ from latex_ocr_spark.kernels.encoder import add_timing_signal_nd, conv2d, encode
 from latex_ocr_spark.kernels.oracle import Model
 from latex_ocr_spark.kernels.weights import init_weights
 from latex_ocr_spark.fixtures.vocab import ID_END, ID_PAD, ID_TO_TOK, ID_UNK, N_TOK, TOK_TO_ID
+from latex_ocr_spark.session import _cpu_flags, loaded_blas_core, worker_blas_core
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_png_roundtrip_rgb_and_gray():
@@ -109,6 +117,39 @@ def test_conv_and_pool_shapes():
     # SAME pooling ceil semantics on odd dims
     p2 = max_pool(out[:, :11, :19], (2, 2), (2, 2))
     assert p2.shape == (2, 6, 10, cfg.conv_channels[0])
+
+
+def _max_pool_reference(x, k, s):
+    """max_pooling2d from the definition, in float64: each output is the max
+    over its window's in-bounds inputs. SAME splits the pad with the extra
+    row/column at the bottom/right, and a pad cell (-inf) never wins."""
+    x = x.astype(np.float64)
+    n, h, w, c = x.shape
+    oh, ow = -(-h // s[0]), -(-w // s[1])
+    top = max((oh - 1) * s[0] + k[0] - h, 0) // 2
+    left = max((ow - 1) * s[1] + k[1] - w, 0) // 2
+    out = np.full((n, oh, ow, c), -np.inf)
+    for i in range(oh):
+        for j in range(ow):
+            for a in range(k[0]):
+                for b in range(k[1]):
+                    r, q = i * s[0] - top + a, j * s[1] - left + b
+                    if 0 <= r < h and 0 <= q < w:
+                        out[:, i, j] = np.maximum(out[:, i, j], x[:, r, q])
+    return out
+
+
+@pytest.mark.parametrize("k", [(2, 2), (2, 1), (1, 2)])
+@pytest.mark.parametrize("h,w", [(6, 8), (5, 7), (6, 7), (5, 8), (1, 1), (25, 61)])
+def test_max_pool_matches_reference(k, h, w):
+    """The k == s pools equal the from-definition reference, and relu
+    commutes with them, which lets ``encode`` apply relu after each pool."""
+    x = np.random.default_rng(h * 10 + w).standard_normal((2, h, w, 3)).astype(np.float32)
+    out = max_pool(x, k, k)
+    assert out.dtype == np.float32
+    # max is exact, so the float32 kernel equals the float64 reference
+    assert np.array_equal(out.astype(np.float64), _max_pool_reference(x, k, k))
+    assert np.array_equal(encoder.relu(out.copy()), max_pool(encoder.relu(x.copy()), k, k))
 
 
 def _conv2d_reference(x, W, b, padding):
@@ -264,3 +305,60 @@ def test_decode_ids_independent_of_batch_mates(decoding):
         alone = [ids(batch[i : i + 1])[0] for i in range(len(batch))]
         chunked = [r for s in range(0, len(batch), 2) for r in ids(batch[s : s + 2])]
         assert whole == alone == chunked, shape
+
+
+_DECODE_IDS_SCRIPT = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+import numpy as np
+from latex_ocr_spark.config import ModelConfig
+from latex_ocr_spark.fixtures.corpus import formula_for
+from latex_ocr_spark.fixtures.glyphs import render_formula
+from latex_ocr_spark.fixtures.vocab import ID_END, N_TOK
+from latex_ocr_spark.kernels import image_ops, text_ops
+from latex_ocr_spark.kernels.beam import beam_decode
+from latex_ocr_spark.kernels.decode import AttentionDecoder
+from latex_ocr_spark.kernels.encoder import encode
+from latex_ocr_spark.kernels.weights import init_weights
+from latex_ocr_spark.session import loaded_blas_core
+
+by_shape = {}
+for latex, scale in json.loads(sys.argv[2]) + [list(formula_for(0, 0))]:
+    canvas = image_ops.preprocess(render_formula(latex, scale))[0]
+    by_shape.setdefault(canvas.shape, []).append(canvas)
+out = {"core": loaded_blas_core()}
+for decoding in ("greedy", "beam_search"):
+    cfg = ModelConfig.bench(decoding=decoding)
+    w = init_weights(cfg, N_TOK)
+    dec = AttentionDecoder(w, cfg, ID_END)
+    ids = []
+    for shape, group in sorted(by_shape.items()):
+        enc = encode(np.stack(group), w, cfg)
+        rows = beam_decode(dec, enc) if decoding == "beam_search" else dec.greedy_decode(enc)[:, None]
+        ids += [[text_ops.truncate_at_end(r, ID_END) for r in beams] for beams in rows]
+    out[decoding] = [[[int(t) for t in r] for r in beams] for beams in ids]
+print(json.dumps(out))
+"""
+
+
+def test_decode_ids_independent_of_worker_blas_core():
+    """The oracles decode in the driver, whose OpenBLAS keeps the core it
+    loaded (``Prescott`` on a CPU it does not know); the Spark workers decode
+    with the core ``session.worker_blas_core`` picks. Both must give the
+    same ids: the fixture canvases and the no-bucket-fits image, at bench
+    dims, greedy and beam (``beam_size=2``), in one process per core."""
+    driver = loaded_blas_core()
+    picked = worker_blas_core(driver, _cpu_flags())
+    if picked is None:
+        pytest.skip("the rule picks no worker BLAS core on this host")
+    runs = {}
+    for core in (driver, picked):
+        env = dict(os.environ, OPENBLAS_CORETYPE=core)
+        res = subprocess.run(
+            [sys.executable, "-c", _DECODE_IDS_SCRIPT, REPO, json.dumps(_SHAPE_FIXTURES)],
+            env=env, capture_output=True, text=True, timeout=600, check=True,
+        )
+        runs[core] = json.loads(res.stdout.splitlines()[-1])
+        assert runs[core].pop("core") == core
+    assert len(runs[picked]["greedy"]) == len(_SHAPE_FIXTURES) + 1
+    assert runs[driver] == runs[picked]
