@@ -14,6 +14,7 @@ broadcast-friendly.
 from __future__ import annotations
 
 from dataclasses import dataclass, field, asdict
+from typing import ClassVar
 
 # Reference bucket table: configs/data.json "buckets" (width, height).
 # get_new_size picks the FIRST bucket with w_b >= w and h_b >= h
@@ -117,19 +118,21 @@ class PipelineConfig:
     """Distributed-execution knobs (the part the reference doesn't have)."""
 
     buckets: tuple[tuple[int, int], ...] = tuple(BUCKETS)
-    # salt fan-out for heavy buckets (SURVEY.md §7 "Skew"). The (bucket,
-    # salt)-grouped perplexity stage's max parallelism is (non-empty buckets ×
-    # salts): size it ≥ 2× total cores so the dominant bucket alone can keep
-    # every core busy; pixel-budget chunking keeps per-batch vectorization
-    # independent of group size. Extraction round-robins and uses no salt.
-    salt_buckets: int = 128
-    # max pixels per numpy batch inside the inference UDF; bounds UDF memory
+    # Not a field: no engine code reads it. It survives only because
+    # perfbench/layers.py's kernel replay still batches by the retired
+    # (bucket, salt) key; it goes when that replay moves to shape_batches
+    # (ROADMAP item 1).
+    salt_buckets: ClassVar[int] = 128
+    # max pixels per numpy batch inside the model UDF; bounds UDF memory
     # independent of Arrow record count (reference pads whole minibatches,
     # model/utils/image.py:27-44 — we bound by pixel budget instead).
-    # Keep SMALL: batches of ~20 canvases keep every conv's im2col buffer in
-    # the allocator's reuse range; 4 MP batches allocate ~100 MB buffers per
-    # conv call whose mmap/page-zero churn serializes 32 concurrent workers
-    # (measured 5× total-CPU inflation and 8× wall slowdown at local[32]).
+    # 120k holds 20 canvases of the most common 50×120 shape. Measured on a
+    # 4-core AVX-512 host (bench profile, one OpenBLAS SkylakeX thread),
+    # encode is flat at 7.9–8.9 ms per image for batches of 8–112 such
+    # canvases, and decode costs 4.5 / 3.6 / 3.9 / 4.3 ms per image at
+    # batches of 16 / 32 / 64 / 112: a larger budget buys little and costs
+    # memory, while far larger (4 MP) batches allocate ~100 MB im2col
+    # buffers per conv call.
     batch_pixel_budget: int = 120_000
     # docs-table partition count for the synthetic corpus
     n_parts: int = 16

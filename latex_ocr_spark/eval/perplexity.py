@@ -6,11 +6,12 @@ unmasked decode step under teacher forcing and n_words sums formula lengths
 (/root/reference/model/img2seq.py:68-75, 233-252 — the reference negates the
 final exp; the published table reports the magnitude).
 
-Spark shape: prepro → one (bucket, salt) shuffle → grouped pandas-UDF
-batches with broadcast weights, the same shape batching as the extraction's
-decode UDF (inference.shape_batches) — but the UDF scores gold labels
-(kernels.decode.AttentionDecoder.teacher_forced_ce) instead of
-free-decoding. Per-ref (ce_sum, n_words) rows reduce to the one
+Spark shape: extraction's model stage (inference.model_stage — one
+round-robin exchange, one mapInPandas doing PNG decode, prepro, shape
+batching and encode) with a scoring head in place of the decode head: it
+scores the gold labels (kernels.decode.AttentionDecoder.teacher_forced_ce)
+instead of free-decoding. The gold formula is a media-table column, so no
+join is needed. Per-ref (ce_sum, n_words) rows reduce to the one
 corpus-level metric with a plain aggregation; the DuckDB oracle reads the
 materialized single-process replica (fixtures/oracle_store) and applies the
 same exp(Σce/Σn) formula.
@@ -26,65 +27,21 @@ from pyspark.sql import functions as F
 from ..config import ModelConfig, PipelineConfig
 from ..fixtures.vocab import ID_END, ID_PAD, ID_UNK, TOK_TO_ID
 from ..kernels.decode import AttentionDecoder
-from ..kernels.encoder import encode
 from ..kernels.text_ops import pad_batch_formulas, tokenize
-from ..operators.inference import preprocess_spans, shape_batches
+from ..operators.inference import model_stage
 from ..pipeline import broadcast_weights
 from ..sources import read_media
 
 CE_SCHEMA = "media_ref string, ce_sum double, n_words int"
 
 
-def ce_stats(
-    prepped_with_ref: DataFrame,
-    weights_bc,
-    cfg: ModelConfig,
-    pipe: PipelineConfig,
-    n_groups_est: int | None = None,
-) -> DataFrame:
-    """(bucket, salt)-grouped teacher-forced CE over prepro'd canvases joined
-    with their gold formulas (``latex_true``): (media_ref, ce_sum, n_words)."""
-    cfg_dict = cfg.to_dict()
-    budget = pipe.batch_pixel_budget
-
-    def infer(pdf):
-        import pandas as pd
-
-        mcfg = ModelConfig.from_dict(cfg_dict)
-        dec = AttentionDecoder(weights_bc.value, mcfg, ID_END)
-        canvases = [
-            np.frombuffer(a, dtype=np.uint8).reshape(ch, cw)
-            for a, ch, cw in zip(pdf["canvas"], pdf["ch"], pdf["cw"])
-        ]
-        refs: list[str] = []
-        sums: list[float] = []
-        counts: list[int] = []
-        for chunk in shape_batches(canvases, budget):
-            sub = pdf.iloc[chunk]
-            enc = encode(
-                np.stack([canvases[i] for i in chunk]), weights_bc.value, mcfg
-            )
-            formulas = [tokenize(t, TOK_TO_ID, ID_UNK) for t in sub["latex_true"]]
-            labels, lengths = pad_batch_formulas(formulas, ID_PAD, ID_END)
-            ce = dec.teacher_forced_ce(enc, labels, lengths)
-            refs.extend(sub["media_ref"])
-            sums.extend(float(x) for x in ce)
-            counts.extend(int(x) for x in lengths)
-        return pd.DataFrame(
-            {"media_ref": refs, "ce_sum": sums, "n_words": counts}
-        )
-
-    sc = prepped_with_ref.sparkSession.sparkContext
-    # same groups/10 partition heuristic as the decode stage
-    n_parts = max(
-        round(n_groups_est / 10) if n_groups_est else 0,
-        2 * sc.defaultParallelism,
-        16,
-    )
-    return (
-        prepped_with_ref.repartition(n_parts, "bucket_w", "bucket_h", "salt")
-        .groupBy("bucket_w", "bucket_h", "salt")
-        .applyInPandas(infer, schema=CE_SCHEMA)
+def _ce_head(dec: AttentionDecoder, enc: np.ndarray, rows):
+    """Perplexity's head: teacher-forced masked CE of each row's gold
+    formula (``latex_true``) → (media_ref, ce_sum, n_words)."""
+    formulas = [tokenize(t, TOK_TO_ID, ID_UNK) for t in rows["latex_true"]]
+    labels, lengths = pad_batch_formulas(formulas, ID_PAD, ID_END)
+    return rows[["media_ref"]].assign(
+        ce_sum=dec.teacher_forced_ce(enc, labels, lengths), n_words=lengths
     )
 
 
@@ -98,31 +55,21 @@ def perplexity_metric(
     eval-set metric): one row (perplexity double 4dp, n_words bigint)."""
     cfg = cfg or ModelConfig.small()
     pipe = pipe or PipelineConfig()
-    weights_bc = broadcast_weights(spark, cfg)
-    media = read_media(spark, corpus_dir)
-    feed = media.select(
-        F.col("media_ref").alias("doc_id"),
-        F.lit(0).alias("part"),
-        F.lit(0).alias("offset"),
-        "media_ref",
-        "image",
+    media = read_media(spark, corpus_dir).select("media_ref", "image", "latex_true")
+    stats = model_stage(
+        media, broadcast_weights(spark, cfg), cfg, pipe, _ce_head, CE_SCHEMA
     )
-    n_prepro = max(spark.sparkContext.defaultParallelism, 8)
-    prepped = preprocess_spans(feed.repartition(n_prepro), pipe)
-    with_ref = prepped.join(media.select("media_ref", "latex_true"), "media_ref")
-    from ..pipeline import decode_groups_estimate
-
-    stats = ce_stats(
-        with_ref, weights_bc, cfg, pipe,
-        n_groups_est=decode_groups_estimate(spark, corpus_dir, pipe),
-    )
-    # Gate-determinism note: per-ref ce_sum values are bit-identical to the
-    # oracle replica (same kernels), but this float64 Σ over partitions is
-    # summation-order-dependent, unlike the repo's left-fold disciplines
-    # elsewhere. The relative wobble is a few ulps (~1e-13) on a metric
+    # Gate-determinism note: per-ref ce_sum values agree with the oracle
+    # replica to ~1e-8 relative, not bit-for-bit: the replica batches each
+    # whole shape in one process on the driver's BLAS kernel, while the
+    # workers batch pixel-budget chunks of round-robin partitions on their
+    # own kernel (session.worker_blas_core), and CE, unlike argmax ids, moves
+    # with batch composition and kernel in its last bits. This float64 Σ
+    # over partitions is also summation-order-dependent, unlike the repo's
+    # left-fold disciplines elsewhere (a few ulps, ~1e-13). The metric is
     # rounded to 4dp, so the round() flips only if the true value sits
-    # within ~1e-9 of a 0.5e-4 boundary — accepted, documented reliance on
-    # error << 1e-4 rather than forcing a single-partition ordered fold.
+    # within ~1e-8 relative of a 0.5e-4 boundary — accepted, documented
+    # reliance on error << 1e-4 rather than forcing one ordered fold.
     return stats.agg(
         F.round(F.exp(F.sum("ce_sum") / F.sum("n_words")), 4)
         .cast("double")

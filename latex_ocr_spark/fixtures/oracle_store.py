@@ -226,8 +226,10 @@ def ensure_oracle_perplexity(sf_dir: str, profile: str = "small") -> str:
     """Single-process teacher-forced masked-CE ground truth per media_ref:
     (media_ref, ce_sum, n_words) — the same kernels the distributed
     eval/perplexity.py UDF runs (encode + AttentionDecoder.teacher_forced_ce
-    on gold labels), composed in one process. The gate's DuckDB side applies
-    exp(Σce/Σn) to these rows."""
+    on gold labels), composed in one process. Per-ref values agree with the
+    workers' to ~1e-8 relative, not bit-for-bit: here each shape is one
+    batch on the driver's BLAS kernel. The gate's DuckDB side applies
+    exp(Σce/Σn) to these rows and rounds to 4dp, which absorbs that."""
     from ..kernels.decode import AttentionDecoder
     from ..kernels.encoder import encode
     from ..kernels.text_ops import pad_batch_formulas, tokenize

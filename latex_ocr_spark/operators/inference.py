@@ -1,26 +1,26 @@
-"""The media-decode operator — the heart of the engine.
+"""The model stage — the heart of the engine.
 
 One pandas-UDF stage per media row (and nothing per-row-Python anywhere,
-north rule): ``decode_media`` round-robins the joined PNG rows over one
-partition per core and runs a single mapInPandas, ``infer_rows``. Per Arrow
-batch it does PNG decode → greyscale (P1) → crop (P3) → pad-to-bucket (P4) →
-downsample (P5), batches the canvases by shape (the reference's bucketing,
-G1/G3, its model/utils/data_generator.py:84-122 — one bucket is one shape),
-cuts each shape's batch by a pixel budget so UDF memory is bounded, and runs
-the CNN encoder + attention LSTM decode (M1-M8) with broadcast weights.
+north rule): ``model_stage`` round-robins PNG rows over one partition per
+core and runs a single mapInPandas, ``infer_rows``. Per Arrow batch it does
+PNG decode → greyscale (P1) → crop (P3) → pad-to-bucket (P4) → downsample
+(P5), batches the canvases by shape (the reference's bucketing, G1/G3, its
+model/utils/data_generator.py:84-122 — one bucket is one shape), cuts each
+shape's batch by a pixel budget so UDF memory is bounded, runs the CNN
+encoder (M1-M2) with broadcast weights and hands each chunk's encodings to
+a head. Extraction's head (``decode_media``) is the attention LSTM decode
+(M3-M8) plus detokenize; perplexity's (eval/perplexity.py) scores the gold
+formulas with teacher-forced cross-entropy.
 
 Shape batching is local to each partition: the kernels are batch-invariant,
 so no shuffle on the bucket key is needed, and the one exchange moves the PNG
 rows themselves.
 
-``preprocess_spans`` (canvases + bucket id + salt as columns) serves the
-teacher-forced perplexity stage (eval/perplexity.py), which still groups by
-(bucket, salt).
+``preprocess_spans`` (bucket id as columns) serves the ``bucket_histogram``
+query.
 """
 
 from __future__ import annotations
-
-import zlib
 
 import numpy as np
 
@@ -38,7 +38,7 @@ from ..kernels.text_ops import decode_ids_to_latex
 
 PREP_SCHEMA = (
     "doc_id string, part int, `offset` int, media_ref string, "
-    "bucket_w int, bucket_h int, salt int, ch int, cw int, canvas binary"
+    "bucket_w int, bucket_h int"
 )
 DECODED_SCHEMA = (
     "doc_id string, part int, `offset` int, media_ref string, latex string"
@@ -46,69 +46,25 @@ DECODED_SCHEMA = (
 
 
 def preprocess_spans(media_joined: DataFrame, pipe: PipelineConfig) -> DataFrame:
-    """(doc_id, part, offset, media_ref, image) → prepro'd canvases + bucket
-    keys. ``part`` (the source identity-partition) is carried through the UDF
-    so downstream sinks never re-derive it from the doc_id string — any
-    DOCS_SCHEMA-conforming corpus keeps its own partition assignment."""
+    """(doc_id, part, offset, media_ref, image) → each span's shape bucket
+    (bucket_w, bucket_h) after prepro. No canvas crosses back into the JVM:
+    the model stage preprocesses inside its own UDF."""
     buckets = list(pipe.buckets)
-    n_salt = pipe.salt_buckets
 
     def run(batches):
-        import pandas as pd
-
         for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "part", "offset", "media_ref", "bucket_w", "bucket_h",
-                "salt", "ch", "cw", "canvas")}
-            for doc_id, part, offset, ref, png in zip(
-                pdf["doc_id"], pdf["part"], pdf["offset"], pdf["media_ref"],
-                pdf["image"],
-            ):
-                rgb = decode_png(bytes(png))
-                canvas, bw, bh, _ok = image_ops.preprocess(rgb, buckets=buckets)
-                out["doc_id"].append(doc_id)
-                out["part"].append(int(part))
-                out["offset"].append(int(offset))
-                out["media_ref"].append(ref)
-                out["bucket_w"].append(int(bw))
-                out["bucket_h"].append(int(bh))
-                # deterministic salt, independent of partitioning
-                out["salt"].append(zlib.crc32(ref.encode()) % n_salt)
-                out["ch"].append(canvas.shape[0])
-                out["cw"].append(canvas.shape[1])
-                out["canvas"].append(np.ascontiguousarray(canvas).tobytes())
-            yield pd.DataFrame(out)
+            bw, bh = [], []
+            for png in pdf["image"]:
+                _, w, h, _ok = image_ops.preprocess(
+                    decode_png(bytes(png)), buckets=buckets
+                )
+                bw.append(int(w))
+                bh.append(int(h))
+            yield pdf[["doc_id", "part", "offset", "media_ref"]].assign(
+                bucket_w=bw, bucket_h=bh
+            )
 
     return media_joined.mapInPandas(run, schema=PREP_SCHEMA)
-
-
-def estimate_decode_groups(media_tbl: DataFrame, pipe: PipelineConfig) -> int:
-    """Cheap metadata-only estimate of the (bucket, salt) group count of a
-    ``preprocess_spans`` output — the perplexity stage's partition-sizing
-    input, NOT a correctness input.
-
-    Uses the media table's stored (height, width): the first-fit bucket of
-    the RAW dims approximates the post-crop bucket (crop shrinks, pad adds
-    16px — the bucket rarely moves), and the salt is the same crc32 the
-    prepro UDF assigns. One narrow 3-column distinct-count vs the decode
-    stage's wall — the stats lookup a warehouse would serve from table
-    metadata at 100 TB (Iceberg partition stats / NDV sketches)."""
-    bucket_id = F.lit(len(pipe.buckets))  # fallback: oversized
-    for i in range(len(pipe.buckets) - 1, -1, -1):
-        bw, bh = pipe.buckets[i]
-        bucket_id = F.when(
-            (F.col("width") <= bw) & (F.col("height") <= bh), F.lit(i)
-        ).otherwise(bucket_id)
-    return (
-        media_tbl.select(
-            bucket_id.alias("b"),
-            (F.crc32(F.encode("media_ref", "utf-8")) % pipe.salt_buckets).alias(
-                "s"
-            ),
-        )
-        .distinct()
-        .count()
-    )
 
 
 def fits_some_bucket(pipe: PipelineConfig, height_col, width_col):
@@ -141,27 +97,65 @@ def shape_batches(canvases: list[np.ndarray], budget: int):
             yield idxs[s : s + n_per_batch]
 
 
-def _make_infer(weights_bc, cfg_dict: dict, budget: int):
-    """Preprocessed canvases (2-D uint8 arrays, any mix of shapes) → their
-    LaTeX strings, in input order."""
+def model_stage(
+    rows: DataFrame,
+    weights_bc,
+    cfg: ModelConfig,
+    pipe: PipelineConfig,
+    head,
+    schema: str,
+) -> DataFrame:
+    """Rows with a PNG ``image`` column → ``schema``: one round-robin
+    exchange, one partition per core, then ONE mapInPandas (``infer_rows``).
+    Per Arrow batch it PNG-decodes and preprocesses every row, cuts the
+    canvases into ``shape_batches`` and encodes each chunk;
+    ``head(dec, enc, chunk_rows)`` turns a chunk's encodings and its input
+    rows (a pandas DataFrame) into that chunk's output rows. Output row
+    order is by chunk, not by input.
 
-    def infer(canvases: list[np.ndarray]) -> list[str]:
+    Size contract: a Python worker holds one Arrow batch — at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` (2048, session.py) PNG
+    rows and their preprocessed canvases — plus one ``batch_pixel_budget``
+    chunk's activations and its head's state. The worst case is a batch of
+    images that only the largest (1600×1600) bucket or the no-bucket-fits
+    fallback takes: 2048 canvases of ≥ 800×800 downsampled pixels, ≥ 1.3 GB.
+    The contract holds for every head (extraction's decode and perplexity's
+    teacher-forced CE)."""
+    cfg_dict = cfg.to_dict()
+    budget = pipe.batch_pixel_budget
+    buckets = list(pipe.buckets)
+    n_parts = rows.sparkSession.sparkContext.defaultParallelism
+
+    def infer_rows(batches):
         mcfg = ModelConfig.from_dict(cfg_dict)
-        dec = AttentionDecoder(weights_bc.value, mcfg, ID_END)
-        latex = [""] * len(canvases)
-        for chunk in shape_batches(canvases, budget):
-            enc = encode(
-                np.stack([canvases[i] for i in chunk]), weights_bc.value, mcfg
-            )
-            if mcfg.decoding == "beam_search":
-                out_ids = beam_decode(dec, enc)[:, 0, :]
-            else:
-                out_ids = dec.greedy_decode(enc)
-            for i, row_ids in zip(chunk, out_ids):
-                latex[i] = decode_ids_to_latex(row_ids, ID_END, ID_TO_TOK)
-        return latex
+        weights = weights_bc.value
+        dec = AttentionDecoder(weights, mcfg, ID_END)
+        for pdf in batches:
+            canvases = [
+                image_ops.preprocess(decode_png(bytes(png)), buckets=buckets)[0]
+                for png in pdf["image"]
+            ]
+            for chunk in shape_batches(canvases, budget):
+                enc = encode(np.stack([canvases[i] for i in chunk]), weights, mcfg)
+                yield head(dec, enc, pdf.iloc[chunk])
 
-    return infer
+    # Round-robin, not hash-on-shape: the kernels are batch-invariant
+    # (tests/test_kernels.py), so which canvases share a batch never changes
+    # the output, and an even row spread keeps every core busy whatever the
+    # shape histogram. An explicit count also keeps AQE from coalescing the
+    # stage onto fewer cores.
+    return rows.repartition(n_parts).mapInPandas(infer_rows, schema=schema)
+
+
+def _decode_head(dec: AttentionDecoder, enc: np.ndarray, rows):
+    """Extraction's head: greedy or beam decode, then detokenize."""
+    if dec.cfg.decoding == "beam_search":
+        ids = beam_decode(dec, enc)[:, 0, :]
+    else:
+        ids = dec.greedy_decode(enc)
+    return rows[["doc_id", "part", "offset", "media_ref"]].assign(
+        latex=[decode_ids_to_latex(r, ID_END, ID_TO_TOK) for r in ids]
+    )
 
 
 def decode_media(
@@ -171,40 +165,9 @@ def decode_media(
     pipe: PipelineConfig,
 ) -> DataFrame:
     """(doc_id, part, offset, media_ref, image) → (doc_id, part, offset,
-    media_ref, latex): one round-robin exchange of the PNG rows, one
-    partition per core, then ONE mapInPandas (``infer_rows``) that PNG-decodes
-    and preprocesses each Arrow batch and decodes it by shape.
-
-    Size contract: a Python worker holds one Arrow batch — at most
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` (2048, session.py) PNG
-    rows and their preprocessed canvases — plus the activations of one
-    ``batch_pixel_budget`` chunk. That is the bound the separate prepro UDF
-    already had. The worst case is a batch of images that only the largest
-    (1600×1600) bucket or the no-bucket-fits fallback takes: 2048 canvases
-    of ≥ 800×800 downsampled pixels, ≥ 1.3 GB."""
-    infer = _make_infer(weights_bc, cfg.to_dict(), pipe.batch_pixel_budget)
-    buckets = list(pipe.buckets)
-    n_parts = media_joined.sparkSession.sparkContext.defaultParallelism
-
-    def infer_rows(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            canvases = [
-                image_ops.preprocess(decode_png(bytes(png)), buckets=buckets)[0]
-                for png in pdf["image"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "part": pdf["part"],
-                 "offset": pdf["offset"], "media_ref": pdf["media_ref"],
-                 "latex": infer(canvases)}
-            )
-
-    # Round-robin, not hash-on-shape: the kernels are batch-invariant
-    # (tests/test_kernels.py), so which canvases share a batch never changes
-    # the output, and an even row spread keeps every core busy whatever the
-    # shape histogram. An explicit count also keeps AQE from coalescing the
-    # stage onto fewer cores.
-    return media_joined.repartition(n_parts).mapInPandas(
-        infer_rows, schema=DECODED_SCHEMA
+    media_ref, latex): ``model_stage`` with the decode head. Size contract:
+    ``model_stage``'s, which covers this stage and the perplexity stage
+    alike."""
+    return model_stage(
+        media_joined, weights_bc, cfg, pipe, _decode_head, DECODED_SCHEMA
     )

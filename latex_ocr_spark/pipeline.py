@@ -87,30 +87,19 @@ def extract_spans_from_docs(
     return text_spans.unionByName(media_out)
 
 
-# decode-group estimate per corpus dir: one metadata aggregation per corpus
-# per process (the table's stats don't change under us), shared by every
-# perplexity run / bench repetition against it
+# Always empty; kept because perfbench/run.py clears it before calling
+# decode_groups_estimate.
 _GROUPS_EST_CACHE: dict[tuple, int] = {}
 
 
 def decode_groups_estimate(
     spark: SparkSession, corpus_dir: str, pipe: PipelineConfig
 ) -> int:
-    """Cached estimate_decode_groups over a corpus dir's media table — the
-    perplexity stage's partition-sizing stat (≈ non-empty (bucket, salt)
-    cells), computed from media-table metadata columns only (never a second
-    prepro pass)."""
-    from .operators.inference import estimate_decode_groups
-
-    # the bucket table participates in the estimate (groups ≈ non-empty
-    # (bucket, salt) cells), so a caller with a custom bucket table must not
-    # reuse the default table's cached estimate
-    key = (corpus_dir, pipe.salt_buckets, tuple(pipe.buckets))
-    if key not in _GROUPS_EST_CACHE:
-        _GROUPS_EST_CACHE[key] = estimate_decode_groups(
-            read_media(spark, corpus_dir), pipe
-        )
-    return _GROUPS_EST_CACHE[key]
+    """Compatibility stub that runs no Spark job and returns 0. It once
+    estimated the perplexity stage's (bucket, salt) group count; both model
+    stages now round-robin over ``defaultParallelism`` partitions
+    (``inference.model_stage``). Kept only for the frozen bench callers."""
+    return 0
 
 
 def extract_spans(

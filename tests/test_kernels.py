@@ -269,12 +269,30 @@ _SHAPE_FIXTURES = (
 )
 
 
+def _shape_groups() -> dict[tuple[int, int], list[tuple[np.ndarray, str]]]:
+    """(canvas, formula) pairs by canvas shape: ``_SHAPE_FIXTURES``' three
+    bucket shapes, plus the corpus's no-bucket-fits image and its mirror
+    image for a batch mate of the same (unbucketed) shape."""
+    by_shape: dict[tuple[int, int], list[tuple[np.ndarray, str]]] = {}
+    for latex, scale in _SHAPE_FIXTURES:
+        canvas, *_ = image_ops.preprocess(render_formula(latex, scale))
+        by_shape.setdefault(canvas.shape, []).append((canvas, latex))
+    latex, scale = formula_for(0, 0)
+    fallback, bw, _bh, _ok = image_ops.preprocess(render_formula(latex, scale))
+    assert bw > max(b[0] for b in BUCKETS)
+    by_shape[fallback.shape] = [
+        (fallback, latex), (np.ascontiguousarray(fallback[:, ::-1]), latex)
+    ]
+    assert len(by_shape) == 4 and all(len(g) >= 2 for g in by_shape.values())
+    return by_shape
+
+
 @pytest.mark.parametrize("decoding", ["greedy", "beam_search"])
 def test_decode_ids_independent_of_batch_mates(decoding):
     """An image decodes to the same ids whatever batch it shares: its whole
-    same-shape batch, alone, or a pixel-budget chunk. Extraction batches
+    same-shape batch, alone, or a pixel-budget chunk. The model stage batches
     canvases by shape within round-robin partitions, so this property is
-    what makes its output independent of partitioning."""
+    what makes extraction's output independent of partitioning."""
     cfg = ModelConfig.small(decoding=decoding)
     assert cfg.beam_size == 2
     w = init_weights(cfg, N_TOK)
@@ -288,23 +306,40 @@ def test_decode_ids_independent_of_batch_mates(decoding):
             out = dec.greedy_decode(enc)[:, None]
         return [[text_ops.truncate_at_end(r, ID_END) for r in rows] for rows in out]
 
-    by_shape: dict[tuple[int, int], list[np.ndarray]] = {}
-    for latex, scale in _SHAPE_FIXTURES:
-        canvas, *_ = image_ops.preprocess(render_formula(latex, scale))
-        by_shape.setdefault(canvas.shape, []).append(canvas)
-    # the corpus's no-bucket-fits image, plus its mirror image for a batch
-    # mate of the same (unbucketed) shape
-    fallback, bw, _bh, _ok = image_ops.preprocess(render_formula(*formula_for(0, 0)))
-    assert bw > max(b[0] for b in BUCKETS)
-    by_shape[fallback.shape] = [fallback, np.ascontiguousarray(fallback[:, ::-1])]
-    assert len(by_shape) == 4 and all(len(g) >= 2 for g in by_shape.values())
-
-    for shape, group in by_shape.items():
-        batch = np.stack(group)
+    for shape, group in _shape_groups().items():
+        batch = np.stack([canvas for canvas, _ in group])
         whole = ids(batch)
         alone = [ids(batch[i : i + 1])[0] for i in range(len(batch))]
         chunked = [r for s in range(0, len(batch), 2) for r in ids(batch[s : s + 2])]
         assert whole == alone == chunked, shape
+
+
+def test_ce_independent_of_batch_mates():
+    """An image's teacher-forced CE of its gold formula is the same whatever
+    batch it shares (whole same-shape batch, alone, chunks of 2) — the
+    perplexity stage's counterpart of the decode-id property. CE is a float
+    sum, not an argmax, so BLAS blocking for a different batch size moves
+    its last bits (~1e-8 relative measured); it is compared to 1e-6."""
+    cfg = ModelConfig.small()
+    w = init_weights(cfg, N_TOK)
+    dec = AttentionDecoder(w, cfg, ID_END)
+
+    def ce(group):
+        labels, lengths = text_ops.pad_batch_formulas(
+            [text_ops.tokenize(t, TOK_TO_ID, ID_UNK) for _, t in group],
+            ID_PAD,
+            ID_END,
+        )
+        enc = encode(np.stack([canvas for canvas, _ in group]), w, cfg)
+        return list(dec.teacher_forced_ce(enc, labels, lengths))
+
+    for shape, group in _shape_groups().items():
+        whole = ce(group)
+        alone = [ce(group[i : i + 1])[0] for i in range(len(group))]
+        chunked = [c for s in range(0, len(group), 2) for c in ce(group[s : s + 2])]
+        assert all(c > 0 for c in whole), shape
+        np.testing.assert_allclose(alone, whole, rtol=1e-6, err_msg=str(shape))
+        np.testing.assert_allclose(chunked, whole, rtol=1e-6, err_msg=str(shape))
 
 
 _DECODE_IDS_SCRIPT = """

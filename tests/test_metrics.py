@@ -94,3 +94,21 @@ def test_perplexity_matches_single_process_oracle(spark, corpus):
     assert got.n_words == want[1]
     assert abs(got.perplexity - float(want[0])) < 1e-9
     assert got.perplexity > 1.0  # CE of a softmax is positive
+
+
+def test_perplexity_runs_one_python_stage(spark, corpus):
+    """Perplexity runs extraction's shape: the executed plan holds exactly
+    one Python UDF node, a MapInPandas (no grouped FlatMapGroupsInPandas
+    stage), over the media scan with no join and exactly one Exchange
+    below it."""
+    from latex_ocr_spark.config import ModelConfig
+    from latex_ocr_spark.eval.perplexity import perplexity_metric
+    from tests.plan_walk import below, executed_nodes, name, python_nodes
+
+    nodes = executed_nodes(perplexity_metric(spark, corpus, cfg=ModelConfig.small()))
+    assert not [n for n in nodes if name(n) == "FlatMapGroupsInPandasExec"]
+    udfs = python_nodes(nodes)
+    assert [name(n) for n in udfs] == ["MapInPandasExec"]
+    below_udf = [name(n) for n in below(udfs[0])]
+    assert not [n for n in below_udf if "Join" in n], below_udf
+    assert below_udf.count("ShuffleExchangeExec") == 1, below_udf

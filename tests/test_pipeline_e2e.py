@@ -17,6 +17,7 @@ from latex_ocr_spark.fixtures.png import decode_png
 from latex_ocr_spark.kernels.oracle import Model, oracle_decode_images
 from latex_ocr_spark.pipeline import explode_spans, extract_documents, extract_spans
 from latex_ocr_spark.sources import read_docs, read_media
+from tests.plan_walk import below, executed_nodes, name, python_nodes
 
 PARTS = [0, 1]  # partition-pruned subset keeps the test fast AND tests pruning
 
@@ -153,25 +154,9 @@ def test_extraction_runs_one_python_stage(spark, corpus):
     holds exactly one Python UDF node, a MapInPandas (no grouped
     FlatMapGroupsInPandas stage), fed by exactly one Exchange from the
     media join."""
-
-    def children(node):  # looks through AQE's wrapper and query stages
-        cls = node.getClass().getSimpleName()
-        if cls == "AdaptiveSparkPlanExec":
-            return [node.executedPlan()]
-        if cls.endswith("QueryStageExec"):
-            return [node.plan()]
-        return [node.children().apply(i) for i in range(node.children().size())]
-
     flat = extract_spans(spark, corpus, cfg=ModelConfig.small(), parts=[0])
-    flat.collect()
-    nodes, todo = [], [flat._jdf.queryExecution().executedPlan()]
-    while todo:
-        nodes.append(todo.pop())
-        todo += children(nodes[-1])
-    udfs = [n for n in nodes if ".sql.execution.python." in n.getClass().getName()]
-    assert [n.getClass().getSimpleName() for n in udfs] == ["MapInPandasExec"]
-    below_udf, node = [], udfs[0]
-    while "Join" not in node.getClass().getSimpleName():
-        (node,) = children(node)
-        below_udf.append(node.getClass().getSimpleName())
+    udfs = python_nodes(executed_nodes(flat))
+    assert [name(n) for n in udfs] == ["MapInPandasExec"]
+    below_udf = [name(n) for n in below(udfs[0], stop=lambda n: "Join" in name(n))]
+    assert any("Join" in n for n in below_udf), below_udf
     assert below_udf.count("ShuffleExchangeExec") == 1, below_udf

@@ -1,91 +1,77 @@
-"""Skew-breaking evidence for the (bucket, salt)-grouped model stage (north
-rule: "salts / repartitions to break skew from documents with many formula
-images"). Extraction round-robins its media rows and needs no key; the
-teacher-forced perplexity stage (eval/perplexity.py) groups by shape bucket.
+"""Skew-breaking evidence (north rule: "salts / repartitions to break skew
+from documents with many formula images").
 
-The adversarial input at cluster scale is a corpus whose formula images all
-land in ONE shape bucket — e.g. a template site rendering every formula at
-the same size.  Without the salt, groupBy(bucket) would put the whole corpus
-into a single applyInPandas group = one task = one executor core, no matter
-how many executors the cluster has.  The deterministic per-ref salt
-(crc32(media_ref) % salt_buckets, ``preprocess_spans``) must spread that hot
-bucket over ~salt_buckets independent groups with balanced sizes.
+The adversarial input for the model stage at cluster scale is a corpus whose
+formula images all land in ONE shape bucket — e.g. a template site rendering
+every formula at the same size. A stage keyed on the bucket would put the
+whole corpus into one group = one task = one executor core, no matter how
+many executors the cluster has. The model stage (``inference.model_stage``,
+shared by extraction and perplexity) has no key: it round-robins the PNG
+rows over ``defaultParallelism`` partitions and batches by shape inside each
+partition, so the hot bucket spreads evenly over every core. The MinHash
+band self-join's hot keys are split by AQE instead.
 """
 
 from __future__ import annotations
 
-import zlib
-
 import pytest
 from pyspark.sql import functions as F
 
-from latex_ocr_spark.config import PipelineConfig
+from latex_ocr_spark.config import ModelConfig, PipelineConfig
 from latex_ocr_spark.fixtures.glyphs import render_formula
 from latex_ocr_spark.fixtures.png import encode_png
-from latex_ocr_spark.operators.inference import preprocess_spans
+from latex_ocr_spark.operators.inference import decode_media, preprocess_spans
+from latex_ocr_spark.pipeline import broadcast_weights
 
 N_MEDIA = 256
 
 
 @pytest.fixture(scope="module")
-def hot_bucket_groups(spark):
-    """Group sizes after prepro+salting of a one-bucket (all-identical-shape)
-    corpus of N_MEDIA media spans across 4 documents."""
-    pipe = PipelineConfig()
+def hot_feed(spark):
+    """A one-bucket (all-identical-shape) corpus of N_MEDIA media spans
+    across 4 documents."""
     png = encode_png(render_formula(r"a + b", 1))  # same image => same bucket
     rows = [
         (f"doc-{i % 4:04d}", i % 4, i, f"m{i:05d}.png", bytearray(png))
         for i in range(N_MEDIA)
     ]
-    feed = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, "doc_id string, part int, `offset` int, media_ref string, image binary"
     )
-    prepped = preprocess_spans(feed.repartition(8), pipe)
-    groups = (
-        prepped.groupBy("bucket_w", "bucket_h", "salt")
+
+
+@pytest.fixture(scope="module")
+def hot_bucket_groups(hot_feed):
+    """Group sizes by shape bucket after prepro."""
+    prepped = preprocess_spans(hot_feed.repartition(8), PipelineConfig())
+    return (
+        prepped.groupBy("bucket_w", "bucket_h")
         .agg(F.count("*").alias("n"))
         .collect()
     )
-    ref_salts = prepped.select("media_ref", "salt").collect()
-    return pipe, groups, ref_salts
 
 
 def test_hot_bucket_is_single_shape(hot_bucket_groups):
     """The scenario is real: every span landed in exactly one shape bucket."""
-    _, groups, _ = hot_bucket_groups
-    assert len({(g.bucket_w, g.bucket_h) for g in groups}) == 1
+    assert [g.n for g in hot_bucket_groups] == [N_MEDIA]
 
 
-def test_salt_spreads_hot_bucket(hot_bucket_groups):
-    """The hot bucket fans out over ~salt_buckets groups, not 1."""
-    pipe, groups, _ = hot_bucket_groups
-    n_groups = len(groups)
-    # coupon-collector expectation for 256 refs into 128 cells is ~111
-    # distinct cells; anything >= half the cells proves uniform spreading
-    assert n_groups >= pipe.salt_buckets // 2, n_groups
-    sizes = sorted(g.n for g in groups)
-    assert sum(sizes) == N_MEDIA
-    # balls-in-bins max for 256-into-128 concentrates around 6-7; a max this
-    # small bounds any single task at ~6/256 of the corpus (vs 100% unsalted)
-    assert sizes[-1] <= 16, sizes[-5:]
-
-
-def test_salt_is_deterministic_content_hash(hot_bucket_groups):
-    """Salt derives from media_ref content, not partition placement — the
-    same ref lands in the same group on any cluster layout (resume safety).
-
-    Asserts the production salt column equals the documented formula
-    crc32(media_ref) % salt_buckets for EVERY row, plus one pinned literal
-    so a silent formula change (different hash, different encoding, different
-    modulus) fails loudly rather than tautologically passing."""
-    pipe, _, ref_salts = hot_bucket_groups
-    assert len(ref_salts) == N_MEDIA
-    for row in ref_salts:
-        assert row.salt == zlib.crc32(row.media_ref.encode()) % pipe.salt_buckets
-    # pinned: zlib.crc32(b"m00007.png") == 0x..., % 128 == 127
-    assert pipe.salt_buckets == 128
-    by_ref = {r.media_ref: r.salt for r in ref_salts}
-    assert by_ref["m00007.png"] == 127
+def test_round_robin_spreads_hot_bucket(spark, hot_feed):
+    """The model stage spreads the one-bucket corpus over every core: each
+    of its ``defaultParallelism`` partitions holds some rows, none more than
+    twice an even share."""
+    cfg = ModelConfig.small()
+    decoded = decode_media(
+        hot_feed, broadcast_weights(spark, cfg), cfg, PipelineConfig()
+    )
+    n_parts = spark.sparkContext.defaultParallelism
+    sizes = {
+        r.pid: r["count"]
+        for r in decoded.groupBy(F.spark_partition_id().alias("pid")).count().collect()
+    }
+    assert sum(sizes.values()) == N_MEDIA
+    assert sorted(sizes) == list(range(n_parts)), sizes
+    assert max(sizes.values()) <= 2 * N_MEDIA / n_parts, sizes
 
 
 def test_minhash_band_join_aqe_skew_split(spark):
