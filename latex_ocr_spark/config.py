@@ -134,5 +134,3 @@ class PipelineConfig:
     # memory, while far larger (4 MP) batches allocate ~100 MB im2col
     # buffers per conv call.
     batch_pixel_budget: int = 120_000
-    # docs-table partition count for the synthetic corpus
-    n_parts: int = 16

@@ -114,9 +114,10 @@ def shingles(corpus: DataFrame, n: int = 3, max_freq: int | None = None) -> Data
         # shingles on the frequency side and forced a full sort-merge join —
         # two extra shuffles of the biggest table in the plan.)
         # No broadcast() hint: AQE picks the broadcast anti-join at runtime
-        # from the blacklist's ACTUAL size (verified in PLANS.md), and on a
-        # pathological corpus where the blacklist is huge it degrades to a
-        # shuffle join instead of blowing driver memory on a forced hint.
+        # from the blacklist's ACTUAL size (pinned by tests/test_plans.py's
+        # test_jaccard_cap_is_broadcast_anti_join), and on a pathological
+        # corpus where the blacklist is huge it degrades to a shuffle join
+        # instead of blowing driver memory on a forced hint.
         hot = (
             sh.groupBy("shingle")
             .agg(F.count("*").alias("df"))
@@ -299,14 +300,13 @@ def minhash_band_candidates(
     candidate pairs from the band-bucket equi-join, the persisted shingle
     table the caller verifies against (``candidate_jaccard``), and the
     persisted banded-signature table — BOTH persisted frames are returned
-    so callers that materialize candidates eagerly (plan audits, skew
-    tests) can unpersist them instead of leaking cached blocks per
-    invocation. Split out of
-    ``minhash_lsh_pairs`` so the band self-join — the one shuffle in this
-    suite whose key CAN skew (a bucket shared by a large clone family holds
-    every clone's row) — is directly inspectable; the skew evidence
-    (tests/test_skew.py + PLANS.md) drives this stage under AQE skew-split
-    and checks the join's partition handling, not the verified output."""
+    so callers that materialize candidates eagerly (the skew tests) can
+    unpersist them instead of leaking cached blocks per invocation. Split
+    out of ``minhash_lsh_pairs`` so the band self-join — the one shuffle in
+    this suite whose key CAN skew (a bucket shared by a large clone family
+    holds every clone's row) — is directly inspectable;
+    tests/test_skew.py drives this stage under AQE skew-split and checks
+    the join's partition handling, not the verified output."""
     sh = shingles(corpus, n=n, max_freq=max_freq).persist()
     # persisted: the self-join below reads banded on BOTH sides — without this
     # the 128-aggregate signature build runs twice (measured 2× stage cost)

@@ -1,17 +1,24 @@
-"""Walks over an executed physical plan, for plan-shape tests."""
+"""Walks over a physical plan, for plan-shape tests."""
 
 from __future__ import annotations
 
 
+def seq(s) -> list:
+    """A Scala ``Seq`` as a Python list."""
+    return [s.apply(i) for i in range(s.size())]
+
+
 def children(node):
     """A physical node's children, looking through AQE's wrapper and query
-    stages."""
+    stages and into the plan a cached table scan reads."""
     cls = node.getClass().getSimpleName()
     if cls == "AdaptiveSparkPlanExec":
         return [node.executedPlan()]
     if cls.endswith("QueryStageExec"):
         return [node.plan()]
-    return [node.children().apply(i) for i in range(node.children().size())]
+    if cls == "InMemoryTableScanExec":
+        return [node.relation().cachedPlan()]
+    return seq(node.children())
 
 
 def below(node, stop=lambda n: False):
@@ -32,8 +39,30 @@ def executed_nodes(df):
     return [root] + below(root)
 
 
+def planned_nodes(df):
+    """Every node of ``df``'s physical plan as planned, before adaptive
+    execution re-plans it, root first. Runs no job of its own."""
+    root = df._jdf.queryExecution().executedPlan()
+    if name(root) == "AdaptiveSparkPlanExec":
+        root = root.initialPlan()
+    return [root] + below(root)
+
+
 def name(node) -> str:
     return node.getClass().getSimpleName()
+
+
+def column_names(exprs) -> tuple[str, ...]:
+    """The column each expression of a Scala ``Seq`` names (``band#64`` →
+    ``band``)."""
+    return tuple(str(e.toString()).split("#")[0] for e in seq(exprs))
+
+
+def hash_keys(exchange) -> tuple[str, ...] | None:
+    """The columns a shuffle exchange hash-partitions on; None when it
+    partitions any other way."""
+    p = exchange.outputPartitioning()
+    return column_names(p.expressions()) if name(p) == "HashPartitioning" else None
 
 
 def python_nodes(nodes):

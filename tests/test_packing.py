@@ -125,6 +125,7 @@ def test_chunk_dedup_hot_chunk_two_phase_keeper(spark):
     assert got == expect
     plan = chunk_dedup(docs, chunk_words=4)._jdf.queryExecution().executedPlan().toString()
     assert ") Window" not in plan and "WindowExec" not in plan
+    assert "CartesianProduct" not in plan and "NestedLoopJoin" not in plan
     docs = spark.createDataFrame(
         [(i, "t", "en") for i in range(300)],
         "doc_id long, text string, lang string",
