@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from latex_ocr_spark.config import ModelConfig
+from latex_ocr_spark.fixtures import oracle_store
 from latex_ocr_spark.fixtures.corpus import docs_spark_sql, spans_duckdb_cte
 from latex_ocr_spark.operators import dedup as D
 from latex_ocr_spark.operators import similarity as S
@@ -50,15 +51,7 @@ def _spans_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interleaved docs derived on the fly (no materialization needed for
     span-level relational queries) then exploded to flat spans."""
     _documents(spark, sf_dir)
-    docs = spark.sql(docs_spark_sql("documents"))
-    return docs.select("doc_id", "part", F.explode("spans").alias("s")).select(
-        "doc_id",
-        "part",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
-    )
+    return explode_spans(spark.sql(docs_spark_sql("documents")))
 
 
 def _dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -207,86 +200,15 @@ _TP_GATE_PARTS = tuple(range(6))
 _TP_GATE_PARTS_SQL = ", ".join(str(p) for p in _TP_GATE_PARTS)
 
 
-def _oracle_decodes_sf001() -> str:
-    """Absolute path of the materialized single-process oracle decodes for the
-    correctness-gate scale factor; ensured lazily (pure python, no Spark) so
-    the DuckDB side works regardless of gate-side evaluation order."""
-    from latex_ocr_spark.fixtures.oracle_store import (
-        ensure_oracle_decodes,
-        oracle_decodes_path,
-    )
-
+def _oracle_sf001(ensure: Callable[..., str], path: Callable[..., str], **kw) -> str:
+    """Absolute path of a materialized single-process oracle parquet for the
+    correctness-gate scale factor, given its ``fixtures/oracle_store.py``
+    ``ensure_oracle_*`` / ``oracle_*_path`` pair; ensured lazily (pure
+    python, no Spark) so the DuckDB side works regardless of gate-side
+    evaluation order."""
     if os.path.isdir(_CORRECTNESS_SF_DIR):
-        return ensure_oracle_decodes(_CORRECTNESS_SF_DIR, profile="small")
-    return oracle_decodes_path(_CORRECTNESS_SF_DIR, profile="small")
-
-
-def _oracle_beam_decodes_sf001() -> str:
-    """Beam-search variant of the materialized decode oracle (profile
-    small_beam — same weights, beam decoding; distinct cache fingerprint)."""
-    from latex_ocr_spark.fixtures.oracle_store import (
-        ensure_oracle_decodes,
-        oracle_decodes_path,
-    )
-
-    if os.path.isdir(_CORRECTNESS_SF_DIR):
-        return ensure_oracle_decodes(_CORRECTNESS_SF_DIR, profile="small_beam")
-    return oracle_decodes_path(_CORRECTNESS_SF_DIR, profile="small_beam")
-
-
-def _oracle_prepro_sf001() -> str:
-    from latex_ocr_spark.fixtures.oracle_store import (
-        ensure_oracle_prepro,
-        oracle_prepro_path,
-    )
-
-    if os.path.isdir(_CORRECTNESS_SF_DIR):
-        return ensure_oracle_prepro(_CORRECTNESS_SF_DIR)
-    return oracle_prepro_path(_CORRECTNESS_SF_DIR)
-
-
-def _oracle_features_sf001() -> str:
-    from latex_ocr_spark.fixtures.oracle_store import (
-        ensure_oracle_features,
-        oracle_features_path,
-    )
-
-    if os.path.isdir(_CORRECTNESS_SF_DIR):
-        return ensure_oracle_features(_CORRECTNESS_SF_DIR)
-    return oracle_features_path(_CORRECTNESS_SF_DIR)
-
-
-def _oracle_perplexity_sf001() -> str:
-    from latex_ocr_spark.fixtures.oracle_store import (
-        ensure_oracle_perplexity,
-        oracle_perplexity_path,
-    )
-
-    if os.path.isdir(_CORRECTNESS_SF_DIR):
-        return ensure_oracle_perplexity(_CORRECTNESS_SF_DIR, profile="small")
-    return oracle_perplexity_path(_CORRECTNESS_SF_DIR, profile="small")
-
-
-def _oracle_lsh_sf001() -> str:
-    from latex_ocr_spark.fixtures.oracle_store import (
-        ensure_oracle_lsh_topk,
-        oracle_lsh_topk_path,
-    )
-
-    if os.path.isdir(_CORRECTNESS_SF_DIR):
-        return ensure_oracle_lsh_topk(_CORRECTNESS_SF_DIR)
-    return oracle_lsh_topk_path(_CORRECTNESS_SF_DIR)
-
-
-def _oracle_ivf_sf001() -> str:
-    from latex_ocr_spark.fixtures.oracle_store import (
-        ensure_oracle_ivf_topk,
-        oracle_ivf_topk_path,
-    )
-
-    if os.path.isdir(_CORRECTNESS_SF_DIR):
-        return ensure_oracle_ivf_topk(_CORRECTNESS_SF_DIR)
-    return oracle_ivf_topk_path(_CORRECTNESS_SF_DIR)
+        return ensure(_CORRECTNESS_SF_DIR, **kw)
+    return path(_CORRECTNESS_SF_DIR, **kw)
 
 # ---------------------------------------------------------------------------
 # queries
@@ -1511,6 +1433,37 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     markers = TA.LANG_MARKERS
     stop = TA.STOPWORDS
+    decodes_pq = _oracle_sf001(
+        oracle_store.ensure_oracle_decodes,
+        oracle_store.oracle_decodes_path,
+        profile="small",
+    )
+    beam_decodes_pq = _oracle_sf001(
+        oracle_store.ensure_oracle_decodes,
+        oracle_store.oracle_decodes_path,
+        profile="small_beam",
+    )
+    prepro_pq = _oracle_sf001(
+        oracle_store.ensure_oracle_prepro,
+        oracle_store.oracle_prepro_path,
+    )
+    features_pq = _oracle_sf001(
+        oracle_store.ensure_oracle_features,
+        oracle_store.oracle_features_path,
+    )
+    perplexity_pq = _oracle_sf001(
+        oracle_store.ensure_oracle_perplexity,
+        oracle_store.oracle_perplexity_path,
+        profile="small",
+    )
+    lsh_pq = _oracle_sf001(
+        oracle_store.ensure_oracle_lsh_topk,
+        oracle_store.oracle_lsh_topk_path,
+    )
+    ivf_pq = _oracle_sf001(
+        oracle_store.ensure_oracle_ivf_topk,
+        oracle_store.oracle_ivf_topk_path,
+    )
 
     def cnt(words: list[str], col: str = "text") -> str:
         # mirrors TA._count_words: whole-token lexicon hits via list_filter,
@@ -1919,14 +1872,14 @@ FROM stripped
 """,
         "bucket_histogram": f"""
 SELECT bucket_w, bucket_h, CAST(count(*) AS BIGINT) AS n_images
-FROM read_parquet('{_oracle_prepro_sf001()}')
+FROM read_parquet('{prepro_pq}')
 GROUP BY bucket_w, bucket_h
 ORDER BY bucket_w, bucket_h
 """,
         "media_image_features": f"""
 SELECT media_ref, height, width, n_bytes, mean_luma, nonwhite_frac,
        content_h, content_w
-FROM read_parquet('{_oracle_features_sf001()}')
+FROM read_parquet('{features_pq}')
 """,
         "main_content_extract_dom": r"""
 SELECT doc_id,
@@ -2045,14 +1998,14 @@ SELECT doc_id, part, text, "offset" FROM doc_spans WHERE kind = 'text'
         + f"""
 SELECT s.doc_id, s."offset", s.media_ref, o.latex
 FROM doc_spans s
-JOIN read_parquet('{_oracle_decodes_sf001()}') o USING (media_ref)
+JOIN read_parquet('{decodes_pq}') o USING (media_ref)
 WHERE s.kind = 'media'
 """,
         "extract_media_beam": _CTE
         + f"""
 SELECT s.doc_id, s."offset", s.media_ref, o.latex
 FROM doc_spans s
-JOIN read_parquet('{_oracle_beam_decodes_sf001()}') o USING (media_ref)
+JOIN read_parquet('{beam_decodes_pq}') o USING (media_ref)
 WHERE s.kind = 'media'
 """,
         "windowed_event_counts": """
@@ -2680,18 +2633,18 @@ LIMIT 100
         "perplexity": f"""
 SELECT CAST(round(exp(sum(ce_sum) / sum(n_words)), 4) AS DOUBLE) AS perplexity,
        CAST(sum(n_words) AS BIGINT) AS n_words
-FROM read_parquet('{_oracle_perplexity_sf001()}')
+FROM read_parquet('{perplexity_pq}')
 """,
         # approximate ANN — deterministic given seeds, so hash-checked against
         # materialized single-process replicas (oracle_store), like the decode
         # oracle; recall vs the exact path is additionally pytest-asserted
         "lsh_cosine_topk": f"""
 SELECT query_id, neighbor_id, sim, rank
-FROM read_parquet('{_oracle_lsh_sf001()}')
+FROM read_parquet('{lsh_pq}')
 """,
         "ivf_cosine_topk": f"""
 SELECT query_id, neighbor_id, sim, rank
-FROM read_parquet('{_oracle_ivf_sf001()}')
+FROM read_parquet('{ivf_pq}')
 """,
         # Composed end-to-end pass: rebuild each doc from its extracted spans
         # (text spans verbatim, media spans via the materialized decode
@@ -2705,7 +2658,7 @@ rebuilt0 AS (
   SELECT s.doc_id AS sid,
          string_agg(COALESCE(s.text, o.latex), ' ' ORDER BY s."offset") AS text
   FROM doc_spans s
-  LEFT JOIN read_parquet('{_oracle_decodes_sf001()}') o
+  LEFT JOIN read_parquet('{decodes_pq}') o
     ON s.media_ref = o.media_ref
   WHERE s.part IN ({_TP_GATE_PARTS_SQL})
   GROUP BY s.doc_id

@@ -5,9 +5,11 @@ whose PNG already exists (F4, /root/reference/model/utils/image.py:238-245 —
 semantically a left anti join) and epoch-resume parses the checkpoint filename
 (model/base.py:33-48). At 10^12-document scale that becomes: process the docs
 table one identity-partition at a time, write each partition's output
-idempotently (overwrite its own directory), append a lineage row with metrics
-(A8 analog), and on restart anti-join the partition list against the
-checkpoint table so completed partitions are never re-decoded (north rule).
+idempotently (overwrite its own directory), publish a lineage record with
+metrics (A8 analog) whose filename carries its part and status, and on
+restart anti-join the partition list against the parts one listing of those
+filenames reports done, so completed partitions are never re-decoded (north
+rule).
 """
 
 from __future__ import annotations
@@ -19,24 +21,11 @@ import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..config import ModelConfig, PipelineConfig
 from ..pipeline import broadcast_weights, extract_spans
-from ..operators.reassemble import reassemble
+from ..operators.reassemble import flat_text, reassemble
 from ..sources import read_docs
-
-CHECKPOINT_SCHEMA = T.StructType(
-    [
-        T.StructField("part", T.IntegerType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("n_docs", T.LongType(), False),
-        T.StructField("n_images", T.LongType(), False),
-        T.StructField("n_tokens", T.LongType(), False),
-        T.StructField("wall_s", T.DoubleType(), False),
-        T.StructField("run_id", T.StringType(), False),
-    ]
-)
 
 
 def _ckpt_path(out_dir: str) -> str:
@@ -54,20 +43,27 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, hpath
 
 
+def _lineage_records(spark: SparkSession, out_dir: str) -> list[tuple[int, str, int]]:
+    """(part, status, mtime ms) per published lineage record, parsed from
+    the filenames (``part-<part>-<status>-<run_id>.json``) of one listStatus
+    call: the record filename IS the resume state, as the reference's
+    epoch-resume parses its checkpoint filename. ``rsplit`` keeps a stage
+    record's part ``-1`` whole. Dot-prefixed files (an unfinished publish's
+    temp record, checksum sidecars) never match."""
+    fs, dirp = _hadoop_fs(spark, _ckpt_path(out_dir))
+    if not fs.exists(dirp):
+        return []
+    records = []
+    for st in fs.listStatus(dirp):
+        name = st.getPath().getName()
+        if name.startswith("part-") and name.endswith(".json"):
+            part, status, _run_id = name[len("part-") : -len(".json")].rsplit("-", 2)
+            records.append((int(part), status, st.getModificationTime()))
+    return records
+
+
 def completed_parts(spark: SparkSession, out_dir: str) -> set[int]:
-    path = _ckpt_path(out_dir)
-    fs, hpath = _hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        return set()
-    rows = (
-        spark.read.schema(CHECKPOINT_SCHEMA)
-        .json(path)
-        .filter(F.col("status") == "done")
-        .select("part")
-        .distinct()
-        .collect()
-    )
-    return {r.part for r in rows}
+    return {p for p, status, _ in _lineage_records(spark, out_dir) if status == "done"}
 
 
 def clear_checkpoint(spark: SparkSession, out_dir: str) -> None:
@@ -78,29 +74,79 @@ def clear_checkpoint(spark: SparkSession, out_dir: str) -> None:
 
 
 def _append_checkpoint(spark: SparkSession, out_dir: str, row: dict) -> None:
-    """Append one lineage record. JSON-lines dir keeps appends atomic per
-    partition (one file per record) without table-format dependencies; an
-    Iceberg deployment would MERGE into a checkpoint table instead. Written
-    through the Hadoop FS API so the record lands next to the output on
-    HDFS/S3, never on the driver's local disk."""
-    path = _ckpt_path(out_dir)
-    fs, dirp = _hadoop_fs(spark, path)
-    # .crc sidecars are tolerated: Hadoop/Spark listings skip dot-files, so
-    # completed_parts' spark.read.json never sees them. (Do NOT call
-    # fs.setWriteChecksum(False) — FileSystem.get caches instances per
-    # scheme/conf, so the flag would leak to every other write in the JVM.)
+    """Publish one lineage record: one JSON-lines file per record (no
+    table-format dependency; an Iceberg deployment would MERGE into a
+    checkpoint table instead), written through the Hadoop FS API so it lands
+    next to the output on HDFS/S3. The record is written to a dot-prefixed
+    temp name and renamed into place, so a listed name always holds a
+    complete record."""
+    fs, dirp = _hadoop_fs(spark, _ckpt_path(out_dir))
+    # .crc sidecars are tolerated: their names are dot-prefixed, so the
+    # lineage readers skip them. (Do NOT call fs.setWriteChecksum(False) —
+    # FileSystem.get caches instances per scheme/conf, so the flag would
+    # leak to every other write in the JVM.)
     fs.mkdirs(dirp)
-    # the status rides the FILENAME so freshness checks (stage_done's
-    # downstream-dirty guard) can compare per-status mtimes from one
-    # listStatus call without opening any record
-    fname = spark._jvm.org.apache.hadoop.fs.Path(
-        dirp, f"part-{row['part']}-{row['status']}-{row['run_id']}.json"
-    )
-    stream = fs.create(fname, True)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    name = f"part-{row['part']}-{row['status']}-{row['run_id']}.json"
+    tmp, final = Path(dirp, "." + name), Path(dirp, name)
+    stream = fs.create(tmp, True)
     try:
         stream.write(bytearray((json.dumps(row) + "\n").encode("utf-8")))
     finally:
         stream.close()
+    if not fs.rename(tmp, final):
+        raise OSError(f"could not publish lineage record {final}")
+
+
+def _write_and_mark(
+    spark: SparkSession,
+    out_dir: str,
+    df: DataFrame,
+    status: str,
+    aggs: tuple = (),
+    part: int = -1,
+    run_id: str | None = None,
+    cleanup: tuple = (),
+) -> dict:
+    """Write one restart unit's output, then publish its lineage record
+    (output-then-mark: a record implies its write committed, so a crash
+    re-runs at most the in-flight unit, and the overwrite makes that retry
+    idempotent). An extraction partition (``part`` ≥ 0) lands in
+    ``out_dir/docs/part=<k>/`` (the caller sets dynamic partition
+    overwrite); a corpus-wide stage (part -1, never colliding with
+    partition resume) overwrites ``out_dir/<status>``.
+
+    The record's metrics — ``n_docs`` plus the named ``aggs`` — ride the
+    write job itself (``df.observe``): one pass, no post-write re-read of
+    the output (at 10^12 docs a re-read would double the write-path I/O).
+    ``cleanup`` frames, persisted upstream for this write, are unpersisted
+    once it has run."""
+    run_id = run_id or uuid.uuid4().hex[:8]
+    t0 = time.time()
+    obs = Observation(f"{status}-{part}-{run_id}")
+    writer = df.observe(obs, F.count(F.lit(1)).alias("n_docs"), *aggs).write.mode(
+        "overwrite"
+    )
+    try:
+        if part >= 0:
+            writer.partitionBy("part").parquet(os.path.join(out_dir, "docs"))
+        else:
+            writer.parquet(os.path.join(out_dir, status))
+    finally:
+        for frame in cleanup:
+            frame.unpersist()
+    stats = obs.get
+    row = {
+        "part": int(part),
+        "status": status,
+        "n_docs": int(stats["n_docs"] or 0),
+        "n_images": int(stats.get("n_images") or 0),
+        "n_tokens": int(stats.get("n_tokens") or 0),
+        "wall_s": round(time.time() - t0, 3),
+        "run_id": run_id,
+    }
+    _append_checkpoint(spark, out_dir, row)
+    return row
 
 
 def run_with_checkpoint(
@@ -116,8 +162,7 @@ def run_with_checkpoint(
 
     Each identity partition is one pruned, idempotent job: output lands in
     ``out_dir/docs/part=<k>/`` via dynamic partition overwrite, then the
-    lineage row is appended (output-then-mark ordering → a crash re-runs at
-    most the in-flight partition; the overwrite makes the retry idempotent).
+    lineage record is published (``_write_and_mark``).
 
     ``fail_after=k`` injects a failure after k partitions (for the resume test,
     FIXTURES.md §6). Returns the list of partitions processed in this run.
@@ -137,7 +182,19 @@ def run_with_checkpoint(
     done = completed_parts(spark, out_dir)
     todo = [p for p in all_parts if p not in done]
 
-    out_docs = os.path.join(out_dir, "docs")
+    media_per_doc = F.size(F.filter("spans", lambda s: s["kind"] == F.lit("media")))
+    tokens_per_doc = F.aggregate(
+        "spans",
+        F.lit(0),
+        lambda acc, s: acc
+        + F.when(
+            s["kind"] == F.lit("media"), F.size(F.split(s["text"], " "))
+        ).otherwise(0),
+    )
+    aggs = (
+        F.sum(media_per_doc).alias("n_images"),
+        F.sum(tokens_per_doc).alias("n_tokens"),
+    )
     processed: list[int] = []
     prev_overwrite = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -145,46 +202,11 @@ def run_with_checkpoint(
         for i, part in enumerate(todo):
             if fail_after is not None and i >= fail_after:
                 raise RuntimeError(f"injected failure before partition {part}")
-            t0 = time.time()
             flat = extract_spans(
                 spark, corpus_dir, cfg=cfg, pipe=pipe, parts=[part], weights_bc=weights_bc
             )
-            result = reassemble(flat)
-            # lineage metrics ride the write job itself (df.observe): one pass,
-            # no post-write re-read of the output parquet (at 10^12 docs the
-            # re-read would double the write-path I/O)
-            obs = Observation(f"part-{part}-{run_id}")
-            media_per_doc = F.size(
-                F.filter("spans", lambda s: s["kind"] == F.lit("media"))
-            )
-            tokens_per_doc = F.aggregate(
-                "spans",
-                F.lit(0),
-                lambda acc, s: acc
-                + F.when(
-                    s["kind"] == F.lit("media"), F.size(F.split(s["text"], " "))
-                ).otherwise(0),
-            )
-            observed = result.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(media_per_doc).alias("n_images"),
-                F.sum(tokens_per_doc).alias("n_tokens"),
-            )
-            observed.write.mode("overwrite").partitionBy("part").parquet(out_docs)
-            stats = obs.get
-            _append_checkpoint(
-                spark,
-                out_dir,
-                {
-                    "part": int(part),
-                    "status": "done",
-                    "n_docs": int(stats["n_docs"] or 0),
-                    "n_images": int(stats["n_images"] or 0),
-                    "n_tokens": int(stats["n_tokens"] or 0),
-                    "wall_s": round(time.time() - t0, 3),
-                    "run_id": run_id,
-                },
+            _write_and_mark(
+                spark, out_dir, reassemble(flat), "done", aggs, part=part, run_id=run_id
             )
             processed.append(part)
     finally:
@@ -205,113 +227,30 @@ def run_with_checkpoint(
 # ---------------------------------------------------------------------------
 
 DOWNSTREAM_STAGES = ("curate", "dedup", "budget", "mix")
-# stage name → (lineage status, output subdir)
-_STAGE_MARKS = {
-    "curate": ("curated", "curated"),
-    "dedup": ("deduped", "deduped"),
-    "budget": ("budgeted", "budgeted"),
-    "mix": ("mixed", "mixed"),
+# stage name → lineage status, which also names the stage's output subdir
+_STAGE_STATUS = {
+    "curate": "curated",
+    "dedup": "deduped",
+    "budget": "budgeted",
+    "mix": "mixed",
 }
 
 
-def _flat_extracted_text(spark: SparkSession, extracted_dir: str) -> DataFrame:
-    """Flatten an extraction output (``extracted_dir/docs``) to the
-    (doc_id, text) training corpus: each document's offset-ordered span
-    sequence joined with single spaces."""
-    docs = spark.read.parquet(os.path.join(extracted_dir, "docs"))
-    return docs.select(
-        F.split("doc_id", "-").getItem(1).cast("long").alias("doc_id"),
-        F.concat_ws(
-            " ", F.transform("spans", lambda s: s["text"])
-        ).alias("text"),
-    )
-
-
-def _lineage_status_mtimes(spark: SparkSession, out_dir: str) -> dict[str, int]:
-    """Newest lineage-file mtime (ms) per status, parsed from the
-    status-stamped filenames (``part-<part>-<status>-<run_id>.json``) in one
-    listStatus call. Files written by pre-status-stamp code contribute
-    nothing — callers treat an absent status as 'freshness unknown'."""
-    fs, dirp = _hadoop_fs(spark, _ckpt_path(out_dir))
-    if not fs.exists(dirp):
-        return {}
-    known = {"done", "failed"} | {status for status, _ in _STAGE_MARKS.values()}
-    out: dict[str, int] = {}
-    for st in fs.listStatus(dirp):
-        name = st.getPath().getName()
-        if not (name.startswith("part-") and name.endswith(".json")):
-            continue
-        parts = name[:-5].split("-")
-        if len(parts) < 4 or parts[-2] not in known:
-            continue  # legacy filename without an embedded status
-        status = parts[-2]
-        out[status] = max(out.get(status, 0), st.getModificationTime())
-    return out
-
-
 def stage_done(spark: SparkSession, out_dir: str, stage: str) -> bool:
-    """True when ``stage``'s lineage row exists AND is at least as new as
-    the newest extraction 'done' row. Rows are appended output-then-mark
-    (same ordering as partition extraction), so presence implies the
-    stage's parquet write completed. The freshness clause is the
-    downstream-dirty guard: a later run that extracts NEW partitions into
-    the same output dir leaves the old stage rows older than the newest
-    extract row, so every downstream stage reruns over the refreshed corpus
-    instead of silently serving stale output — including after a kill
-    mid-downstream, where the stages that already reran are fresh (skipped)
-    and the rest are stale (rerun). When either side's mtime is unknown
-    (legacy filenames), presence alone decides, as before."""
-    status = _STAGE_MARKS[stage][0]
-    path = _ckpt_path(out_dir)
-    fs, hpath = _hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        return False
-    exists = bool(
-        spark.read.schema(CHECKPOINT_SCHEMA)
-        .json(path)
-        .filter(F.col("status") == status)
-        .take(1)
-    )
-    if not exists:
-        return False
-    mt = _lineage_status_mtimes(spark, out_dir)
-    if status not in mt or "done" not in mt:
-        return True
-    return mt[status] >= mt["done"]
-
-
-def _materialize_stage(
-    spark: SparkSession,
-    out_dir: str,
-    stage: str,
-    df: DataFrame,
-    n_tokens_col: str | None = None,
-) -> dict:
-    """Write one corpus-wide stage output and append its lineage row
-    (part=-1: corpus-wide, never collides with partition resume). Lineage
-    metrics ride the write job via ``observe`` so the output parquet is
-    never re-read."""
-    status, subdir = _STAGE_MARKS[stage]
-    t0 = time.time()
-    run_id = uuid.uuid4().hex[:8]
-    obs = Observation(f"{status}-{run_id}")
-    aggs = [F.count(F.lit(1)).alias("n_docs")]
-    if n_tokens_col:
-        aggs.append(F.sum(n_tokens_col).alias("n_tokens"))
-    observed = df.observe(obs, *aggs)
-    observed.write.mode("overwrite").parquet(os.path.join(out_dir, subdir))
-    stats = obs.get
-    row = {
-        "part": -1,
-        "status": status,
-        "n_docs": int(stats["n_docs"] or 0),
-        "n_images": 0,
-        "n_tokens": int(stats.get("n_tokens") or 0),
-        "wall_s": round(time.time() - t0, 3),
-        "run_id": run_id,
-    }
-    _append_checkpoint(spark, out_dir, row)
-    return row
+    """True when ``stage``'s lineage record exists AND is at least as new as
+    the newest extraction 'done' record. Records are published
+    output-then-mark, so presence implies the stage's parquet write
+    completed. The freshness clause is the downstream-dirty guard: a later
+    run that extracts NEW partitions into the same output dir leaves the old
+    stage records older than the newest extract record, so every downstream
+    stage reruns over the refreshed corpus instead of silently serving stale
+    output — including after a kill mid-downstream, where the stages that
+    already reran are fresh (skipped) and the rest are stale (rerun)."""
+    newest: dict[str, int] = {}
+    for _, status, mtime in _lineage_records(spark, out_dir):
+        newest[status] = max(newest.get(status, 0), mtime)
+    status = _STAGE_STATUS[stage]
+    return status in newest and newest[status] >= newest.get("done", 0)
 
 
 def run_curate_stage(
@@ -321,22 +260,25 @@ def run_curate_stage(
     flattened extraction output → ``out_dir/curated`` (doc_id, text)."""
     from . import text_analysis as TA
 
-    curated = TA.curate_corpus(_flat_extracted_text(spark, extracted_dir))
-    return _materialize_stage(spark, out_dir, "curate", curated)
+    docs = spark.read.parquet(os.path.join(extracted_dir, "docs"))
+    curated = TA.curate_corpus(flat_text(docs))
+    return _write_and_mark(spark, out_dir, curated, _STAGE_STATUS["curate"])
 
 
 def run_dedup_stage(spark: SparkSession, out_dir: str) -> dict:
     """Stage 3: MinHash-LSH near-dup pair generation + dedup_apply over the
     materialized curated corpus → ``out_dir/deduped`` (doc_id, text). Both
     consumers of the curated frame scan its parquet — no recompute of the
-    curation gates, no persist needed."""
+    curation gates. The shingle and banded-signature tables the LSH
+    persists are released once the write has run."""
     from . import dedup as D
 
     curated = spark.read.parquet(os.path.join(out_dir, "curated"))
-    survivors = D.dedup_apply(
-        curated, D.minhash_lsh_pairs(curated, n=3, threshold=0.5)
+    candidates, sh, banded = D.minhash_band_candidates(curated, n=3)
+    survivors = D.dedup_apply(curated, D.candidate_jaccard(candidates, sh, 0.5))
+    return _write_and_mark(
+        spark, out_dir, survivors, _STAGE_STATUS["dedup"], cleanup=(sh, banded)
     )
-    return _materialize_stage(spark, out_dir, "dedup", survivors)
 
 
 def run_budget_stage(spark: SparkSession, out_dir: str) -> dict:
@@ -346,8 +288,12 @@ def run_budget_stage(spark: SparkSession, out_dir: str) -> dict:
 
     deduped = spark.read.parquet(os.path.join(out_dir, "deduped"))
     budget = TA.token_count(deduped, keep_text=True)
-    return _materialize_stage(
-        spark, out_dir, "budget", budget, n_tokens_col="n_subwords"
+    return _write_and_mark(
+        spark,
+        out_dir,
+        budget,
+        _STAGE_STATUS["budget"],
+        (F.sum("n_subwords").alias("n_tokens"),),
     )
 
 
@@ -425,15 +371,10 @@ def run_mix_stage(
             "n_words",
             F.size(F.filter(F.split(F.col("text"), " "), lambda t: t != "")),
         )
-    if budgets or upsample_factors:
-        row = _materialize_stage(
-            spark, out_dir, "mix", mixed, n_tokens_col="n_words"
-        )
-    else:
-        row = _materialize_stage(spark, out_dir, "mix", mixed)
-    for frame in cleanup:
-        frame.unpersist()
-    return row
+    aggs = (F.sum("n_words").alias("n_tokens"),) if budgets or upsample_factors else ()
+    return _write_and_mark(
+        spark, out_dir, mixed, _STAGE_STATUS["mix"], aggs, cleanup=tuple(cleanup)
+    )
 
 
 def run_daily_pipeline(

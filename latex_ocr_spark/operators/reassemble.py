@@ -42,3 +42,13 @@ def reassemble(spans: DataFrame) -> DataFrame:
             ).alias("spans"),
         )
     )
+
+
+def flat_text(docs: DataFrame) -> DataFrame:
+    """(doc_id, part, spans) → the (doc_id, text) training corpus: each
+    document's offset-ordered span texts joined with single spaces, keyed by
+    the numeric suffix of its ``doc-<n>`` id."""
+    return docs.select(
+        F.split("doc_id", "-").getItem(1).cast("long").alias("doc_id"),
+        F.concat_ws(" ", F.transform("spans", lambda s: s["text"])).alias("text"),
+    )

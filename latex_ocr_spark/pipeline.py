@@ -21,7 +21,7 @@ from .config import ModelConfig, PipelineConfig
 from .fixtures.vocab import N_TOK
 from .kernels.weights import init_weights
 from .operators.inference import decode_media
-from .operators.reassemble import reassemble
+from .operators.reassemble import flat_text, reassemble
 from .sources import read_docs, read_media
 
 
@@ -166,23 +166,7 @@ def composed_training_pipeline(
     from .operators import dedup as D
 
     flat = extract_spans(spark, corpus_dir, cfg=cfg, parts=parts)
-    rebuilt = (
-        flat.groupBy("doc_id")
-        .agg(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("offset", "text"))),
-                    lambda s: s["text"],
-                ),
-            ).alias("text")
-        )
-        .select(
-            F.split("doc_id", "-").getItem(1).cast("long").alias("doc_id"),
-            "text",
-        )
-        .persist()
-    )
+    rebuilt = flat_text(reassemble(flat)).persist()
     rebuilt.createOrReplaceTempView("__rebuilt_pipeline")
     withdups = spark.sql(
         D.CORPUS_WITH_DUPS_SQL_SPARK.format(src="__rebuilt_pipeline")

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from latex_ocr_spark.config import ModelConfig
 from latex_ocr_spark.operators.checkpoint import completed_parts, run_with_checkpoint
+from latex_ocr_spark.operators.reassemble import flat_text
 
 PARTS = [0, 1, 2, 3, 4, 5]
 
@@ -37,8 +38,17 @@ def test_resume_after_injected_failure(spark, corpus, tmp_path_factory):
     done_first = completed_parts(spark, out_fail)
     assert len(done_first) == 2
 
+    # a publish killed before its rename leaves a dot-prefixed temp record;
+    # it must not mark its partition done
+    pending = min(set(PARTS) - done_first)
+    tmp = os.path.join(out_fail, "_checkpoint", f".part-{pending}-done-deadbeef.json")
+    with open(tmp, "w") as fh:
+        fh.write(json.dumps({"part": pending, "status": "done"}) + "\n")
+    assert completed_parts(spark, out_fail) == done_first
+
     processed = run_with_checkpoint(spark, corpus, out_fail, cfg=cfg, parts=PARTS)
     assert set(processed).isdisjoint(done_first), "re-decoded a completed partition"
+    assert pending in processed
     assert completed_parts(spark, out_fail) == set(done_first) | set(processed)
 
     # lineage rows for the first 3 partitions still carry the first run's id
@@ -116,7 +126,11 @@ def test_job_cli_staged_pipeline(spark, tmp_path_factory):
     curate_and_budget over the flattened extraction output. Re-running a
     single stage explicitly overwrites idempotently."""
     import job
-    from latex_ocr_spark.operators.checkpoint import completed_parts
+    from latex_ocr_spark.operators.checkpoint import (
+        DOWNSTREAM_STAGES,
+        _lineage_records,
+        stage_done,
+    )
     from latex_ocr_spark.pipeline import curate_and_budget
     from latex_ocr_spark.sources import build_corpus
     from tests.conftest import SF_DIR
@@ -151,18 +165,28 @@ def test_job_cli_staged_pipeline(spark, tmp_path_factory):
         rows = [r for r in _load_ckpt(out) if r["status"] == status]
         assert len(rows) == 1 and rows[0]["part"] == -1
     assert completed_parts(spark, out) == done
+    # the resume state is the record filenames: part-<part>-<status>-<run_id>
+    # parses back to the record's part, -1 included
+    assert {(p, s) for p, s, _ in _lineage_records(spark, out)} == {
+        (r["part"], r["status"]) for r in _load_ckpt(out)
+    }
+
+    # every resume check is one directory listing and runs no Spark job
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-checks", "lineage reads")
+    try:
+        assert completed_parts(spark, out) == done
+        assert all(stage_done(spark, out, s) for s in DOWNSTREAM_STAGES)
+        sc.parallelize([0], 1).count()  # control: the group sees its jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("resume-checks")) == 1
 
     # end-to-end agreement with the library path over the same extraction
     docs = spark.read.parquet(f"{out}/docs")
-    flat_text = docs.select(
-        F.split("doc_id", "-").getItem(1).cast("long").alias("doc_id"),
-        F.concat_ws(
-            " ", F.transform("spans", lambda s: s["text"])
-        ).alias("text"),
-    )
     expect = {
         (r.doc_id, r.n_subwords)
-        for r in curate_and_budget(flat_text).collect()
+        for r in curate_and_budget(flat_text(docs)).collect()
     }
     got = {(r.doc_id, r.n_subwords) for r in budgeted.collect()}
     assert got == expect
@@ -175,6 +199,36 @@ def test_job_cli_staged_pipeline(spark, tmp_path_factory):
     )
     assert rc == 0
     assert spark.read.parquet(f"{out}/budgeted").count() == n
+
+
+def test_dedup_stage_releases_lsh_caches(spark, tmp_path, monkeypatch):
+    """The dedup stage unpersists the shingle and banded-signature tables
+    its MinHash-LSH persists, once its write has run: a daily job must not
+    carry them cached through the stages that follow."""
+    from pyspark import StorageLevel
+
+    from latex_ocr_spark.operators import dedup as D
+    from latex_ocr_spark.operators.checkpoint import run_dedup_stage
+
+    cached = []
+    band_candidates = D.minhash_band_candidates
+
+    def spy(*args, **kwargs):
+        candidates, sh, banded = band_candidates(*args, **kwargs)
+        cached.extend((sh, banded))
+        return candidates, sh, banded
+
+    monkeypatch.setattr(D, "minhash_band_candidates", spy)
+    out = str(tmp_path)
+    text = "the quick brown fox jumps over the lazy dog near the river bank"
+    spark.createDataFrame(
+        [(0, text), (1, text + " today"), (2, "an entirely different sentence here")],
+        "doc_id long, text string",
+    ).write.parquet(f"{out}/curated")
+    row = run_dedup_stage(spark, out)
+    assert row["n_docs"] == 2  # the near-dup pair collapses to its keeper
+    assert len(cached) == 2
+    assert [f.storageLevel for f in cached] == [StorageLevel.NONE] * 2
 
 
 def test_daily_pipeline_kill_between_stages_resumes(spark, tmp_path_factory):
@@ -194,11 +248,7 @@ def test_daily_pipeline_kill_between_stages_resumes(spark, tmp_path_factory):
     # eval set to decontaminate against: a deterministic slice of the
     # flattened extraction output, materialized like a real benchmark dir
     bench_dir = str(tmp_path_factory.mktemp("bench")) + "/eval"
-    docs = spark.read.parquet(f"{out}/docs")
-    flat = docs.select(
-        F.split("doc_id", "-").getItem(1).cast("long").alias("doc_id"),
-        F.concat_ws(" ", F.transform("spans", lambda s: s["text"])).alias("text"),
-    )
+    flat = flat_text(spark.read.parquet(f"{out}/docs"))
     flat.filter(F.col("doc_id") % 7 == 3).write.parquet(bench_dir)
     # the curate stage upstream keeps lang == 'en' only; a generous en
     # budget keeps the sampling rate at 1.0 so the count assertions stay
