@@ -257,12 +257,15 @@ def run_curate_stage(
     spark: SparkSession, extracted_dir: str, out_dir: str
 ) -> dict:
     """Stage 2: language + quality gates + exact fingerprint dedup over the
-    flattened extraction output → ``out_dir/curated`` (doc_id, text)."""
+    flattened extraction output → ``out_dir/curated`` (doc_id, text). The
+    persisted gated frame is released once the write has run."""
     from . import text_analysis as TA
 
     docs = spark.read.parquet(os.path.join(extracted_dir, "docs"))
-    curated = TA.curate_corpus(flat_text(docs))
-    return _write_and_mark(spark, out_dir, curated, _STAGE_STATUS["curate"])
+    curated, gated = TA.curate_with_gated(flat_text(docs))
+    return _write_and_mark(
+        spark, out_dir, curated, _STAGE_STATUS["curate"], cleanup=(gated,)
+    )
 
 
 def run_dedup_stage(spark: SparkSession, out_dir: str) -> dict:

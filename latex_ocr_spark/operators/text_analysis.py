@@ -310,14 +310,19 @@ def curate_corpus(corpus: DataFrame, lang: str = "en") -> DataFrame:
     — it is persisted so the gate expressions evaluate once per row, not
     once per side (measured: the gates alone are ~45 % of this operator's
     wall; the shuffle stays the narrow (fp_md5, doc_id) aggregation + an
-    AQE-chosen broadcast of the keepers, never the text). Cache lifetime
-    follows the house pattern (jaccard's shingle table): released by the
-    caller's clearCache / unpersist cycle, and at cluster scale this is the
-    gated working set a real pipeline would checkpoint between stages
-    anyway (see curate_and_budget's persisted curated frame).
-    """
+    AQE-chosen broadcast of the keepers, never the text). A caller that
+    must release that cache uses ``curate_with_gated``."""
+    return curate_with_gated(corpus, lang)[0]
+
+
+def curate_with_gated(
+    corpus: DataFrame, lang: str = "en"
+) -> tuple[DataFrame, DataFrame]:
+    """``curate_corpus`` plus its persisted gated frame: ``(curated,
+    gated)``. The caller unpersists ``gated`` once ``curated`` has been
+    consumed (the curate stage hands it to its write's cleanup)."""
     fp = F.md5(F.lower(F.regexp_replace(F.col("text"), r"\s+", " ")))
-    kept = (
+    gated = (
         corpus.filter(
             (_lang_pred_expr(F.col("text")) == lang)
             & _quality_keep_expr(F.col("text"))
@@ -325,8 +330,8 @@ def curate_corpus(corpus: DataFrame, lang: str = "en") -> DataFrame:
         .withColumn("fp_md5", fp)
         .persist()
     )
-    keepers = kept.groupBy("fp_md5").agg(F.min("doc_id").alias("doc_id"))
-    return kept.join(keepers, ["fp_md5", "doc_id"]).select("doc_id", "text")
+    keepers = gated.groupBy("fp_md5").agg(F.min("doc_id").alias("doc_id"))
+    return gated.join(keepers, ["fp_md5", "doc_id"]).select("doc_id", "text"), gated
 
 
 # Block-level tags whose entire content is boilerplate (dropped content and

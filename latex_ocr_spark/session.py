@@ -14,6 +14,18 @@ through ``spark.executorEnv.OPENBLAS_CORETYPE``; the driver's numpy (the
 oracles, ``predict_single``) keeps the kernel it loaded. Under
 ``master=None`` the driver cannot see the executors' CPUs, so nothing is set
 and a cluster sets the variable in spark-defaults itself.
+
+Local masters also start the Python workers from ``worker_daemon``, which
+stops PySpark's per-task ``importlib.invalidate_caches()`` from re-reading
+pyspark.zip's, py4j's and the spark-core jar's zip directories on every task
+(0.17-0.24 s per task on CPython 3.11; SCALE.md, pathology 7). The workers
+must be able to import this package, as every engine UDF already requires;
+where they cannot, the first UDF fails with the daemon's
+``ModuleNotFoundError``. Under ``master=None`` nothing is set: a cluster sets
+``spark.python.daemon.module=latex_ocr_spark.worker_daemon`` in
+spark-defaults and makes the package importable by the executors' Python at
+start-up (site-packages or the executors' ``PYTHONPATH``): the daemon imports
+it before any task has run.
 """
 
 from __future__ import annotations
@@ -113,8 +125,8 @@ def get_spark(
     ``master=None`` leaves the master to spark-submit (cluster deployments —
     job.py passes None so ``spark-submit --master yarn/k8s --py-files ...``
     controls placement). Local masters set the workers'
-    ``OPENBLAS_CORETYPE`` (``worker_blas_core``); an ``extra`` entry for it
-    wins."""
+    ``OPENBLAS_CORETYPE`` (``worker_blas_core``) and their daemon module
+    (``worker_daemon``); an ``extra`` entry for either wins."""
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -150,6 +162,7 @@ def get_spark(
         core = worker_blas_core(loaded_blas_core(), _cpu_flags())
         if core is not None:
             b = b.config("spark.executorEnv.OPENBLAS_CORETYPE", core)
+        b = b.config("spark.python.daemon.module", "latex_ocr_spark.worker_daemon")
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -231,6 +231,39 @@ def test_dedup_stage_releases_lsh_caches(spark, tmp_path, monkeypatch):
     assert [f.storageLevel for f in cached] == [StorageLevel.NONE] * 2
 
 
+def test_curate_stage_releases_gated_cache(spark, tmp_path, monkeypatch):
+    """The curate stage unpersists the gated frame its curation persists,
+    once its write has run: a daily job must not carry it cached through the
+    stages that follow."""
+    from pyspark import StorageLevel
+
+    from latex_ocr_spark.operators.checkpoint import run_curate_stage
+
+    persisted = []
+    frame_cls = type(spark.range(1))
+    persist = frame_cls.persist
+
+    def spy(self, *args, **kwargs):
+        persisted.append(self)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "persist", spy)
+    out = str(tmp_path)
+    en = "the cat and the dog are in the house with a mat"
+    spark.createDataFrame(
+        [
+            ("doc-1", 0, [(en,)]),
+            ("doc-2", 0, [("The  CAT and the dog are in the house with a  mat",)]),
+            ("doc-3", 0, [("the cat",)]),  # too short for the quality gate
+        ],
+        "doc_id string, part int, spans array<struct<text: string>>",
+    ).write.parquet(f"{out}/extracted/docs")
+    row = run_curate_stage(spark, f"{out}/extracted", out)
+    assert row["n_docs"] == 1  # the case/whitespace copy collapses to doc 1
+    assert len(persisted) == 1
+    assert persisted[0].storageLevel == StorageLevel.NONE
+
+
 def test_daily_pipeline_kill_between_stages_resumes(spark, tmp_path_factory):
     """Kill the daily pipeline between stages, restart, and verify finished
     stages are NOT recomputed: the curate lineage row's run_id survives the

@@ -1,5 +1,6 @@
-"""Session defaults that must fit the host: the driver heap and the Python
-workers' BLAS kernel. Only the last two tests start Spark."""
+"""Session defaults that must fit the host: the driver heap, the Python
+workers' BLAS kernel and their daemon. Only the last three tests start
+Spark."""
 
 from __future__ import annotations
 
@@ -71,6 +72,52 @@ def worker_core(spark) -> str:
     return spark.range(1).mapInPandas(corename, "core string").collect()[0].core
 
 
+def worker_zip_state(spark) -> tuple[str, int, int]:
+    """From a one-row ``mapInPandas`` worker: the daemon module it was
+    forked from, how many zip directories one ``importlib.invalidate_caches()``
+    re-read there, and how many zipimporters its path cache holds."""
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        read, archives = zipimport._read_directory, []
+
+        def counting(archive):
+            archives.append(archive)
+            return read(archive)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        importers = sum(
+            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+        )
+        daemon = getattr(sys.modules["__main__"].__spec__, "name", "")
+        for _ in batches:
+            yield pd.DataFrame(
+                {"daemon": [daemon], "rereads": [len(archives)], "importers": [importers]}
+            )
+
+    r = spark.range(1).mapInPandas(
+        probe, "daemon string, rereads int, importers int"
+    ).collect()[0]
+    return r.daemon, r.rereads, r.importers
+
+
+def test_python_workers_skip_unchanged_zip_directories(spark):
+    """The workers run ``worker_daemon``: PySpark's per-task
+    ``importlib.invalidate_caches()`` re-reads no zip directory whose archive
+    is unchanged (the stock daemon on CPython 3.11 re-reads about 16)."""
+    daemon, rereads, importers = worker_zip_state(spark)
+    assert daemon == "latex_ocr_spark.worker_daemon"
+    assert importers >= 1  # pyspark.zip is on the workers' path
+    assert rereads == 0
+
+
 def test_python_workers_load_the_core_the_rule_picks(spark):
     """Every UDF (the decode UDF included) runs in a Python worker whose
     OpenBLAS loaded the core ``worker_blas_core`` picks, or the driver's own
@@ -83,19 +130,24 @@ def test_python_workers_load_the_core_the_rule_picks(spark):
 
 
 def test_caller_extra_blas_core_wins():
-    """A caller's own ``spark.executorEnv.OPENBLAS_CORETYPE`` is what the
-    built session holds and what its workers load. Runs in a subprocess:
-    executor env is fixed when the SparkContext starts."""
+    """A caller's own ``spark.executorEnv.OPENBLAS_CORETYPE`` and
+    ``spark.python.daemon.module`` are what the built session holds and what
+    its workers run. Runs in a subprocess: executor env and the daemon are
+    fixed when the SparkContext starts."""
     script = textwrap.dedent(
         """
         import sys
         sys.path.insert(0, sys.argv[1])
         from latex_ocr_spark.session import get_spark
-        from tests.test_session import worker_core
+        from tests.test_session import worker_core, worker_zip_state
         s = get_spark("blas-extra", cores=1, shuffle_partitions=1,
-                      extra={"spark.executorEnv.OPENBLAS_CORETYPE": "Prescott"})
-        print("CONF", s.sparkContext.getConf().get("spark.executorEnv.OPENBLAS_CORETYPE"))
+                      extra={"spark.executorEnv.OPENBLAS_CORETYPE": "Prescott",
+                             "spark.python.daemon.module": "pyspark.daemon"})
+        conf = s.sparkContext.getConf()
+        print("CONF", conf.get("spark.executorEnv.OPENBLAS_CORETYPE"))
         print("WORKER", worker_core(s) or "-")
+        print("DAEMON_CONF", conf.get("spark.python.daemon.module"))
+        print("DAEMON", worker_zip_state(s)[0])
         s.stop()
         """
     )
@@ -104,6 +156,8 @@ def test_caller_extra_blas_core_wins():
         [sys.executable, "-c", script, REPO], env=env, cwd=REPO,
         capture_output=True, text=True, timeout=300, check=True,
     ).stdout
-    lines = dict(ln.split(" ", 1) for ln in out.splitlines() if ln.startswith(("CONF ", "WORKER ")))
+    keys = ("CONF ", "WORKER ", "DAEMON_CONF ", "DAEMON ")
+    lines = dict(ln.split(" ", 1) for ln in out.splitlines() if ln.startswith(keys))
     assert lines["CONF"] == "Prescott"
     assert lines["WORKER"] in ("Prescott", "-")
+    assert lines["DAEMON_CONF"] == lines["DAEMON"] == "pyspark.daemon"
