@@ -61,8 +61,10 @@ def pad_to_bucket(
 
 def downsample(img: np.ndarray, ratio: int = DOWN_RATIO) -> np.ndarray:
     """P5 — every ratio-th pixel on both axes
-    (/root/reference/model/utils/image.py:74-81)."""
-    return img[::ratio, ::ratio]
+    (/root/reference/model/utils/image.py:74-81). Returns a contiguous copy:
+    a strided view would keep the whole padded canvas alive for as long as
+    the caller holds the downsampled one."""
+    return np.ascontiguousarray(img[::ratio, ::ratio])
 
 
 def normalize(img: np.ndarray) -> np.ndarray:

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ModelConfig, PipelineConfig
+from ..frames import scope
 from ..pipeline import broadcast_weights, extract_spans
 from ..operators.reassemble import flat_text, reassemble
 from ..sources import read_docs
@@ -106,7 +107,6 @@ def _write_and_mark(
     aggs: tuple = (),
     part: int = -1,
     run_id: str | None = None,
-    cleanup: tuple = (),
 ) -> dict:
     """Write one restart unit's output, then publish its lineage record
     (output-then-mark: a record implies its write committed, so a crash
@@ -118,23 +118,17 @@ def _write_and_mark(
 
     The record's metrics — ``n_docs`` plus the named ``aggs`` — ride the
     write job itself (``df.observe``): one pass, no post-write re-read of
-    the output (at 10^12 docs a re-read would double the write-path I/O).
-    ``cleanup`` frames, persisted upstream for this write, are unpersisted
-    once it has run."""
+    the output (at 10^12 docs a re-read would double the write-path I/O)."""
     run_id = run_id or uuid.uuid4().hex[:8]
     t0 = time.time()
     obs = Observation(f"{status}-{part}-{run_id}")
     writer = df.observe(obs, F.count(F.lit(1)).alias("n_docs"), *aggs).write.mode(
         "overwrite"
     )
-    try:
-        if part >= 0:
-            writer.partitionBy("part").parquet(os.path.join(out_dir, "docs"))
-        else:
-            writer.parquet(os.path.join(out_dir, status))
-    finally:
-        for frame in cleanup:
-            frame.unpersist()
+    if part >= 0:
+        writer.partitionBy("part").parquet(os.path.join(out_dir, "docs"))
+    else:
+        writer.parquet(os.path.join(out_dir, status))
     stats = obs.get
     row = {
         "part": int(part),
@@ -223,7 +217,9 @@ def run_with_checkpoint(
 # most the in-flight stage, and reading the previous stage's MATERIALIZED
 # parquet (never recomputing it) is the production contract between daily
 # jobs. Reference analog: the staged build→evaluate chain,
-# /root/reference/makefile:31-44.
+# /root/reference/makefile:31-44. Each stage runs its write inside its own
+# ``frames.scope()``, which releases every frame the stage persisted or
+# checkpointed once the write has run.
 # ---------------------------------------------------------------------------
 
 DOWNSTREAM_STAGES = ("curate", "dedup", "budget", "mix")
@@ -253,37 +249,35 @@ def stage_done(spark: SparkSession, out_dir: str, stage: str) -> bool:
     return status in newest and newest[status] >= newest.get("done", 0)
 
 
+@scope()
 def run_curate_stage(
     spark: SparkSession, extracted_dir: str, out_dir: str
 ) -> dict:
     """Stage 2: language + quality gates + exact fingerprint dedup over the
-    flattened extraction output → ``out_dir/curated`` (doc_id, text). The
-    persisted gated frame is released once the write has run."""
+    flattened extraction output → ``out_dir/curated`` (doc_id, text)."""
     from . import text_analysis as TA
 
     docs = spark.read.parquet(os.path.join(extracted_dir, "docs"))
-    curated, gated = TA.curate_with_gated(flat_text(docs))
-    return _write_and_mark(
-        spark, out_dir, curated, _STAGE_STATUS["curate"], cleanup=(gated,)
-    )
+    curated = TA.curate_corpus(flat_text(docs))
+    return _write_and_mark(spark, out_dir, curated, _STAGE_STATUS["curate"])
 
 
+@scope()
 def run_dedup_stage(spark: SparkSession, out_dir: str) -> dict:
     """Stage 3: MinHash-LSH near-dup pair generation + dedup_apply over the
     materialized curated corpus → ``out_dir/deduped`` (doc_id, text). Both
     consumers of the curated frame scan its parquet — no recompute of the
-    curation gates. The shingle and banded-signature tables the LSH
-    persists are released once the write has run."""
+    curation gates."""
     from . import dedup as D
 
     curated = spark.read.parquet(os.path.join(out_dir, "curated"))
-    candidates, sh, banded = D.minhash_band_candidates(curated, n=3)
-    survivors = D.dedup_apply(curated, D.candidate_jaccard(candidates, sh, 0.5))
-    return _write_and_mark(
-        spark, out_dir, survivors, _STAGE_STATUS["dedup"], cleanup=(sh, banded)
+    survivors = D.dedup_apply(
+        curated, D.minhash_lsh_pairs(curated, n=3, threshold=0.5)
     )
+    return _write_and_mark(spark, out_dir, survivors, _STAGE_STATUS["dedup"])
 
 
+@scope()
 def run_budget_stage(spark: SparkSession, out_dir: str) -> dict:
     """Stage 4: token budget (words / greedy-BPE subwords / chars) over the
     deduped survivors → ``out_dir/budgeted`` (doc_id, text + counts)."""
@@ -300,6 +294,7 @@ def run_budget_stage(spark: SparkSession, out_dir: str) -> dict:
     )
 
 
+@scope()
 def run_mix_stage(
     spark: SparkSession,
     out_dir: str,
@@ -345,12 +340,10 @@ def run_mix_stage(
         .filter(F.col("rep_ratio") <= max_rep_ratio)
         .select("doc_id", "text")
     )
-    cleanup = []
     if lm_top_frac is not None:
         from .lm import lm_fluency_gate
 
-        mixed, lm_scores = lm_fluency_gate(mixed, top_frac=lm_top_frac)
-        cleanup.append(lm_scores)
+        mixed = lm_fluency_gate(mixed, top_frac=lm_top_frac)[0]
     if benchmark_dir:
         bench = spark.read.parquet(benchmark_dir).select("doc_id", "text")
         contaminated = (
@@ -375,9 +368,7 @@ def run_mix_stage(
             F.size(F.filter(F.split(F.col("text"), " "), lambda t: t != "")),
         )
     aggs = (F.sum("n_words").alias("n_tokens"),) if budgets or upsample_factors else ()
-    return _write_and_mark(
-        spark, out_dir, mixed, _STAGE_STATUS["mix"], aggs, cleanup=tuple(cleanup)
-    )
+    return _write_and_mark(spark, out_dir, mixed, _STAGE_STATUS["mix"], aggs)
 
 
 def run_daily_pipeline(

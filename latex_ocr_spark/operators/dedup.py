@@ -16,12 +16,12 @@ equi-join; exact verification joins only candidate pairs. Skewed shingles
 
 from __future__ import annotations
 
-import warnings
-
 import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..frames import local_checkpoint, persist, release
 
 # Skew cap: shingles appearing in more than this many documents are dropped
 # before ANY join (both the exact self-join and the LSH signature build).
@@ -149,7 +149,6 @@ def jaccard_pairs(
     corpus: DataFrame,
     n: int = 3,
     threshold: float = 0.6,
-    sh: DataFrame | None = None,
     max_freq: int | None = DEFAULT_MAX_SHINGLE_FREQ,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs ≥ threshold via shingle self-join —
@@ -158,8 +157,7 @@ def jaccard_pairs(
     The shingle set feeds four plan branches (two join sides + two size
     lookups); persist it so the scan+split+distinct runs once, not four times
     (at cluster scale you'd materialize the shingle table instead)."""
-    if sh is None:
-        sh = shingles(corpus, n=n, max_freq=max_freq).persist()
+    sh = persist(shingles(corpus, n=n, max_freq=max_freq))
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (
@@ -299,18 +297,16 @@ def minhash_band_candidates(
     Returns ``(candidates, sh, banded)``: the distinct (doc_a, doc_b)
     candidate pairs from the band-bucket equi-join, the persisted shingle
     table the caller verifies against (``candidate_jaccard``), and the
-    persisted banded-signature table — BOTH persisted frames are returned
-    so callers that materialize candidates eagerly (the skew tests) can
-    unpersist them instead of leaking cached blocks per invocation. Split
-    out of ``minhash_lsh_pairs`` so the band self-join — the one shuffle in
-    this suite whose key CAN skew (a bucket shared by a large clone family
-    holds every clone's row) — is directly inspectable;
-    tests/test_skew.py drives this stage under AQE skew-split and checks
-    the join's partition handling, not the verified output."""
-    sh = shingles(corpus, n=n, max_freq=max_freq).persist()
+    persisted banded-signature table (both released by the caller's
+    ``frames.scope()``). Split out of ``minhash_lsh_pairs`` so the band
+    self-join — the one shuffle in this suite whose key CAN skew (a bucket
+    shared by a large clone family holds every clone's row) — is directly
+    inspectable; tests/test_skew.py drives this stage under AQE skew-split
+    and checks the join's partition handling, not the verified output."""
+    sh = persist(shingles(corpus, n=n, max_freq=max_freq))
     # persisted: the self-join below reads banded on BOTH sides — without this
     # the 128-aggregate signature build runs twice (measured 2× stage cost)
-    banded = minhash_banded(sh, num_hashes=num_hashes, bands=bands).persist()
+    banded = persist(minhash_banded(sh, num_hashes=num_hashes, bands=bands))
     a = banded.alias("a")
     b = banded.alias("b")
     candidates = (
@@ -362,8 +358,7 @@ def incremental_neardup_pairs(
     num_hashes: int = 128,
     bands: int = 64,
     blacklist: DataFrame | None = None,
-    return_cached: bool = False,
-):
+) -> DataFrame:
     """Daily-batch incremental near-dup detection: (index_doc, new_doc,
     jaccard ≥ threshold) pairs linking each NEW document to the EXISTING
     corpus documents it near-duplicates. doc_ids must be globally unique
@@ -384,16 +379,15 @@ def incremental_neardup_pairs(
     production artifact — a hot-shingle table maintained ON THE INDEX —
     applied as a hint-free LEFT ANTI join on both sides (same degrade-safe
     shape as ngram_jaccard's). Verification is exact Jaccard on candidate
-    pairs only, sizes from each side's own shingle table. With
-    return_cached=True also returns the two persisted shingle tables for
-    explicit unpersist (each feeds banding + verification + sizes)."""
+    pairs only, sizes from each side's own shingle table. Both shingle
+    tables are persisted (each feeds banding + verification + sizes)."""
     sh_new = shingles(new_docs, n=n, max_freq=None)
     sh_idx = shingles(index_docs, n=n, max_freq=None)
     if blacklist is not None:
         sh_new = sh_new.join(blacklist.select("shingle"), "shingle", "left_anti")
         sh_idx = sh_idx.join(blacklist.select("shingle"), "shingle", "left_anti")
-    sh_new = sh_new.persist()
-    sh_idx = sh_idx.persist()
+    sh_new = persist(sh_new)
+    sh_idx = persist(sh_idx)
     b_new = minhash_banded(sh_new, num_hashes=num_hashes, bands=bands)
     b_idx = minhash_banded(sh_idx, num_hashes=num_hashes, bands=bands)
     candidates = (
@@ -422,7 +416,7 @@ def incremental_neardup_pairs(
     )
     size_idx = sh_idx.groupBy("doc_id").agg(F.count("*").alias("na"))
     size_new = sh_new.groupBy("doc_id").agg(F.count("*").alias("nb"))
-    pairs = (
+    return (
         inter.join(size_idx.withColumnRenamed("doc_id", "index_doc"), "index_doc")
         .join(size_new.withColumnRenamed("doc_id", "new_doc"), "new_doc")
         .withColumn(
@@ -434,46 +428,6 @@ def incremental_neardup_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("index_doc", "new_doc", "jaccard")
     )
-    return (pairs, sh_new, sh_idx) if return_cached else pairs
-
-
-_FREE_CKPT_WARNED = False
-
-
-def _free_local_checkpoint(df: DataFrame) -> None:
-    """Release the block-manager storage behind a localCheckpoint'd frame.
-
-    ``DataFrame.unpersist()`` only clears cache-manager entries, not
-    checkpoint RDD blocks; those otherwise live until the JVM's
-    ContextCleaner notices the RDD is unreachable — on a long iterative job
-    that means monotonic storage growth across rounds. The plan of a
-    localCheckpoint'd DataFrame is a single LogicalRDD leaf whose ``rdd`` is
-    exactly the persisted RDD; unpersist it directly (blocking — the label
-    frames are tiny, and synchronous release keeps getRDDStorageInfo
-    deterministic for callers/tests). Best-effort: if the plan shape ever
-    differs (Spark Connect, a future analyzer change) we fall back to
-    GC-driven cleanup and warn ONCE so the regression is visible instead of
-    silently reinstating unbounded per-round checkpoint-storage growth.
-    """
-    global _FREE_CKPT_WARNED
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(True)
-            return
-        reason = f"plan leaf is {plan.getClass().getSimpleName()}"
-    except Exception as exc:  # pragma: no cover - internals moved
-        reason = repr(exc)
-    if not _FREE_CKPT_WARNED:
-        _FREE_CKPT_WARNED = True
-        warnings.warn(
-            "dedup_components: LogicalRDD fast-path for releasing "
-            f"localCheckpoint storage did not apply ({reason}); falling "
-            "back to GC-driven cleanup — checkpoint blocks may accumulate "
-            "across rounds on long jobs.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
 
 
 def dedup_components(pairs: DataFrame) -> DataFrame:
@@ -500,12 +454,15 @@ def dedup_components(pairs: DataFrame) -> DataFrame:
     pair producer once per reference. (Cluster note: localCheckpoint trades
     executor-loss recoverability for speed; a long-running cluster job would
     use reliable checkpoint() to the job's checkpoint dir instead.)
+
+    The result reads the converged labels checkpoint, which the caller's
+    ``frames.scope()`` frees once the action has run.
     """
     # both directions AND both self-edges in ONE pass over the pair
     # producer (a 4-struct explode + distinct — the old both→selfe→union
     # shape materialized three frames / three jobs for the same edge set;
     # self-edges fold the "own label" case into the one join+agg)
-    edges = (
+    edges = local_checkpoint(
         pairs.select(
             F.explode(
                 F.array(
@@ -526,13 +483,11 @@ def dedup_components(pairs: DataFrame) -> DataFrame:
         )
         .select("e.a", "e.b")
         .distinct()
-        .localCheckpoint()
     )
-    labels = (
+    labels = local_checkpoint(
         edges.select(F.col("a").alias("doc_id"))
         .distinct()
         .withColumn("label", F.col("doc_id"))
-        .localCheckpoint()
     )
     while True:
         # one materialization per round: propagate + pointer-halve + attach
@@ -555,7 +510,7 @@ def dedup_components(pairs: DataFrame) -> DataFrame:
             .select(F.col("a").alias("doc_id"), "label")
         )
         # pointer halving: label ← label(label) (min-monotone, only lowers)
-        new_labels = (
+        new_labels = local_checkpoint(
             stepped.join(
                 stepped.select(
                     F.col("doc_id").alias("label"), F.col("label").alias("l2")
@@ -569,7 +524,6 @@ def dedup_components(pairs: DataFrame) -> DataFrame:
             .select(
                 "doc_id", F.coalesce("l2", "label").alias("label"), "old"
             )
-            .localCheckpoint()
         )
         changed = (
             new_labels.filter(F.col("label") != F.col("old")).count()
@@ -577,13 +531,12 @@ def dedup_components(pairs: DataFrame) -> DataFrame:
         # new_labels is materialized and carries everything the next round
         # needs — free the previous round's checkpoint so storage stays
         # O(1) across rounds
-        _free_local_checkpoint(labels)
+        release(labels)
         labels = new_labels
         if changed == 0:
             break
-    result = labels.select("doc_id", F.col("label").alias("keeper_id"))
-    _free_local_checkpoint(edges)  # converged: no further propagation rounds
-    return result
+    release(edges)  # converged: no further propagation rounds
+    return labels.select("doc_id", F.col("label").alias("keeper_id"))
 
 
 def dedup_apply(corpus: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -679,7 +632,7 @@ def simhash_pairs(
     # projection each side recomputes from cache, and the persisted footprint
     # (what the r3 profile flagged as the pairing-stage drift) stays 8x
     # smaller.
-    sigs = simhash_64(corpus).persist()
+    sigs = persist(simhash_64(corpus))
     block_structs = [
         F.struct(
             F.lit(k).alias("block_idx"),

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import persist
+
 
 def doc_bigrams(corpus: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, w1, w2) — one row per in-document bigram occurrence.
@@ -146,11 +148,12 @@ def lm_fluency_gate(
     while moving the threshold by < 1e-4 nats. Docs with < 2 tokens carry
     no LM evidence and are dropped (they're junk for training regardless).
     Returns (kept_corpus, scores): scores is persisted because it feeds
-    both the percentile aggregation and the keep filter — the caller
-    unpersists after materializing."""
-    scores = lm_score(
-        corpus, alpha=alpha, min_count=min_count, text_col=text_col
-    ).select("doc_id", "cross_entropy").persist()
+    both the percentile aggregation and the keep filter; the caller's
+    ``frames.scope()`` releases it."""
+    scores = persist(
+        lm_score(corpus, alpha=alpha, min_count=min_count, text_col=text_col)
+        .select("doc_id", "cross_entropy")
+    )
     thresh = scores.agg(
         F.expr(
             f"percentile(round(cross_entropy, 4), {float(top_frac)})"

@@ -23,6 +23,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..frames import persist
+
 SRP_SEED = 0x51A_2026
 
 
@@ -210,7 +212,7 @@ def embedding_neardup_pairs(
     volume. Same LSH-only-prunes contract as the MinHash path (dedup.py),
     with 2^8 buckets/table for corpus-scale headroom."""
     base = emb_with_dups(embeddings)
-    sigs = srp_signatures_all(base, "embedding", dim, n_planes, n_tables).persist()
+    sigs = persist(srp_signatures_all(base, "embedding", dim, n_planes, n_tables))
     a = sigs.alias("a")
     if probe_bits >= 1:
         a = sigs.select(
@@ -376,7 +378,7 @@ def srp_topk_candidates(
     base = embeddings.select("vec_id", "embedding")
     # all tables' signatures in ONE vectorized matmul (linear plan, one scan),
     # persisted because both join sides read it
-    sigs = srp_signatures_all(base, "embedding", dim, n_planes, n_tables).persist()
+    sigs = persist(srp_signatures_all(base, "embedding", dim, n_planes, n_tables))
     q = sigs.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         "table",
@@ -442,8 +444,7 @@ def semantic_dedup(
     embeddings: DataFrame,
     n_clusters: int = 8,
     threshold: float = 0.99,
-    return_cached: bool = False,
-):
+) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): partition
     the embedding space into clusters, then mark every vector that has a
     same-cluster neighbor with cosine >= threshold and a smaller vec_id as
@@ -462,8 +463,8 @@ def semantic_dedup(
     clusters at web scale), and the pair join is an equi-join shuffling on
     cluster id, never a global cross join. `assigned` feeds both self-join
     sides AND the final left join, so it is persisted (the planner would
-    recompute the argmax per branch otherwise); pass return_cached=True to
-    receive it for explicit unpersist (band_candidates' cleanup pattern).
+    recompute the argmax per branch otherwise) and released by the
+    caller's ``frames.scope()``.
     """
     base = emb_with_dups(embeddings).withColumn(
         # norm once per vector, BEFORE the K-way centroid fan-out and the
@@ -482,13 +483,12 @@ def semantic_dedup(
     )
     csim = _dot(F.col("embedding"), F.col("cvec")) / (F.col("en") * F.col("cn"))
     w = Window.partitionBy("vec_id").orderBy(F.col("csim").desc(), F.col("cid").asc())
-    assigned = (
+    assigned = persist(
         base.crossJoin(F.broadcast(cents))
         .withColumn("csim", csim)
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("vec_id", F.col("cid").alias("cluster"), "embedding", "en")
-        .persist()
     )
     a = assigned.select(
         F.col("vec_id").alias("vec_a"), "cluster",
@@ -507,7 +507,7 @@ def semantic_dedup(
         .select(F.col("vec_b").alias("vec_id"))
         .distinct()
     )
-    out = (
+    return (
         assigned.select("vec_id", "cluster")
         .join(dups.withColumn("dup", F.lit(1)), "vec_id", "left")
         .select(
@@ -516,4 +516,3 @@ def semantic_dedup(
             F.when(F.col("dup").isNull(), 1).otherwise(0).cast("int").alias("kept"),
         )
     )
-    return (out, assigned) if return_cached else out

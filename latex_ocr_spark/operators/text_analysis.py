@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..frames import local_checkpoint, persist, release, scope
+
 # Per-language marker lexicons for the whole-word stopword heuristic:
 # ~25 high-frequency function words per language (ASCII-only so the literals
 # embed safely in the mirrored DuckDB SQL; apostrophe forms excluded for the
@@ -266,10 +268,10 @@ def curate_by_percentile(
     feeds THREE subtrees (threshold agg, keeper agg, keeper-join row
     stream) — persisted so the language/word-count gate expressions
     evaluate once per row, not once per subtree (the curate_corpus
-    pattern; lifetime follows the caller's clearCache/unpersist cycle).
+    pattern; the caller's ``frames.scope()`` releases it).
     """
     words = F.split(F.col("text"), " ")
-    gated = (
+    gated = persist(
         corpus.select(
             "doc_id",
             "text",
@@ -277,7 +279,6 @@ def curate_by_percentile(
             F.size(F.filter(words, lambda w: w != "")).cast("long").alias("n_words"),
         )
         .filter(F.col("lang_pred") == lang)
-        .persist()
     )
     thr = gated.groupBy("lang_pred").agg(
         F.percentile("n_words", F.lit(float(p))).alias("thr")
@@ -310,28 +311,17 @@ def curate_corpus(corpus: DataFrame, lang: str = "en") -> DataFrame:
     — it is persisted so the gate expressions evaluate once per row, not
     once per side (measured: the gates alone are ~45 % of this operator's
     wall; the shuffle stays the narrow (fp_md5, doc_id) aggregation + an
-    AQE-chosen broadcast of the keepers, never the text). A caller that
-    must release that cache uses ``curate_with_gated``."""
-    return curate_with_gated(corpus, lang)[0]
-
-
-def curate_with_gated(
-    corpus: DataFrame, lang: str = "en"
-) -> tuple[DataFrame, DataFrame]:
-    """``curate_corpus`` plus its persisted gated frame: ``(curated,
-    gated)``. The caller unpersists ``gated`` once ``curated`` has been
-    consumed (the curate stage hands it to its write's cleanup)."""
+    AQE-chosen broadcast of the keepers, never the text); the caller's
+    ``frames.scope()`` releases that cache."""
     fp = F.md5(F.lower(F.regexp_replace(F.col("text"), r"\s+", " ")))
-    gated = (
+    gated = persist(
         corpus.filter(
             (_lang_pred_expr(F.col("text")) == lang)
             & _quality_keep_expr(F.col("text"))
-        )
-        .withColumn("fp_md5", fp)
-        .persist()
+        ).withColumn("fp_md5", fp)
     )
     keepers = gated.groupBy("fp_md5").agg(F.min("doc_id").alias("doc_id"))
-    return gated.join(keepers, ["fp_md5", "doc_id"]).select("doc_id", "text"), gated
+    return gated.join(keepers, ["fp_md5", "doc_id"]).select("doc_id", "text")
 
 
 # Block-level tags whose entire content is boilerplate (dropped content and
@@ -713,8 +703,6 @@ def learn_bpe_merges(corpus: DataFrame, num_merges: int = 20) -> DataFrame:
     pure-python BPE reference in tests/test_bpe_learn.py instead of a
     DuckDB oracle (the driver records the rows-only check).
     """
-    from .dedup import _free_local_checkpoint
-
     wf = (
         corpus.select(
             F.explode(
@@ -730,9 +718,9 @@ def learn_bpe_merges(corpus: DataFrame, num_merges: int = 20) -> DataFrame:
             "cnt",
         )
     )
-    syms = wf.localCheckpoint(eager=True)
     merges: list[tuple[str, str, int]] = []
-    try:
+    with scope():
+        syms = local_checkpoint(wf)
         for _ in range(num_merges):
             arr = F.col("syms")
             pairs = F.transform(
@@ -753,13 +741,13 @@ def learn_bpe_merges(corpus: DataFrame, num_merges: int = 20) -> DataFrame:
                 break
             a, b, freq = best[0].a, best[0].b, int(best[0].freq)
             merges.append((a, b, freq))
-            nxt = syms.select(
-                _apply_merge_expr(F.col("syms"), a, b).alias("syms"), "cnt"
-            ).localCheckpoint(eager=True)
-            _free_local_checkpoint(syms)
+            nxt = local_checkpoint(
+                syms.select(
+                    _apply_merge_expr(F.col("syms"), a, b).alias("syms"), "cnt"
+                )
+            )
+            release(syms)
             syms = nxt
-    finally:
-        _free_local_checkpoint(syms)
     spark = corpus.sparkSession
     return spark.createDataFrame(
         [(i + 1, a, b, f) for i, (a, b, f) in enumerate(merges)],

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import ModelConfig, PipelineConfig
+from .frames import persist
 from .fixtures.vocab import N_TOK
 from .kernels.weights import init_weights
 from .operators.inference import decode_media
@@ -166,7 +167,7 @@ def composed_training_pipeline(
     from .operators import dedup as D
 
     flat = extract_spans(spark, corpus_dir, cfg=cfg, parts=parts)
-    rebuilt = flat_text(reassemble(flat)).persist()
+    rebuilt = persist(flat_text(reassemble(flat)))
     rebuilt.createOrReplaceTempView("__rebuilt_pipeline")
     withdups = spark.sql(
         D.CORPUS_WITH_DUPS_SQL_SPARK.format(src="__rebuilt_pipeline")
@@ -176,8 +177,9 @@ def composed_training_pipeline(
 
 def curate_and_budget(docs: DataFrame, keep_text: bool = False) -> DataFrame:
     """Curation + near-dup dedup + token budget over a (doc_id, text)
-    corpus — the downstream half of the daily pipeline, shared by the
-    composed gate query and the ``job.py --stage curate`` production path:
+    corpus — the downstream half of the daily pipeline as one lazy frame,
+    for the composed gate query (``job.py`` runs the same chain as the
+    separately materialized stages of ``operators/checkpoint.py``):
     curate_corpus (language + quality gates + exact fingerprint dedup) →
     MinHash-LSH pair generation → dedup_apply (keeper-only corpus) →
     token_count (words / greedy-BPE subwords / chars per survivor).
@@ -185,11 +187,12 @@ def curate_and_budget(docs: DataFrame, keep_text: bool = False) -> DataFrame:
     The curated frame is persisted because BOTH sides of the near-dup
     stage consume it (the corpus being filtered and the pair-generation
     input); without the persist the curation gates and their upstream
-    recompute once per side."""
+    recompute once per side. Every frame the chain persists or
+    checkpoints is released by the caller's ``frames.scope()``."""
     from .operators import dedup as D
     from .operators import text_analysis as TA
 
-    curated = TA.curate_corpus(docs).persist()
+    curated = persist(TA.curate_corpus(docs))
     survivors = D.dedup_apply(
         curated, D.minhash_lsh_pairs(curated, n=3, threshold=0.5)
     )

@@ -22,14 +22,13 @@ def _split(spark):
 
 
 def test_incremental_links_new_to_index_only(spark):
+    from latex_ocr_spark.frames import scope
     from latex_ocr_spark.operators.dedup import incremental_neardup_pairs
 
     new, idx = _split(spark)
-    pairs, sh_new, sh_idx = incremental_neardup_pairs(
-        new, idx, threshold=0.5, return_cached=True
-    )
-    got = {(r.index_doc, r.new_doc): r.jaccard for r in pairs.collect()}
-    sh_new.unpersist(), sh_idx.unpersist()
+    with scope():
+        pairs = incremental_neardup_pairs(new, idx, threshold=0.5)
+        got = {(r.index_doc, r.new_doc): r.jaccard for r in pairs.collect()}
     assert got[(1, 101)] == 1.0  # exact copy
     assert (1, 102) in got and got[(1, 102)] < 1.0  # near-dup
     # intra-batch duplicate pair 103/104 is out of scope by contract

@@ -81,6 +81,18 @@ def test_downsample_every_second_pixel():
     assert np.array_equal(out, img[::2, ::2])
 
 
+def test_preprocess_canvas_owns_its_buffer():
+    """The downsampled canvas is a copy, not a strided view that would keep
+    the 4x larger padded canvas alive while a batch's canvases are held."""
+    rgb = render_formula("x^2 + y", 3)
+    canvas, *_ = image_ops.preprocess(rgb)
+    assert canvas.base is None and canvas.flags.c_contiguous
+    full, *_ = image_ops.pad_to_bucket(
+        image_ops.crop_to_content(image_ops.greyscale(rgb))[0]
+    )
+    assert np.array_equal(canvas, full[::2, ::2])
+
+
 def test_pad_batch_images():
     a = np.zeros((2, 3), dtype=np.uint8)
     b = np.ones((3, 2), dtype=np.uint8)

@@ -99,16 +99,17 @@ def test_lm_min_count_prunes_model_but_not_normalization(spark):
 
 
 def test_lm_fluency_gate_drops_high_ce_tail(spark):
+    from latex_ocr_spark.frames import scope
     from latex_ocr_spark.operators.lm import lm_fluency_gate
 
     rows = [(i, "the cat sat on the mat again") for i in range(4)]
     rows.append((10, "zx qy wk jv bn pm"))  # unique bigrams -> high CE
     rows.append((11, "solo"))  # <2 tokens -> no LM evidence, dropped
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    kept, scores = lm_fluency_gate(df, top_frac=0.75)
-    ids = {r.doc_id for r in kept.collect()}
-    ce = {r.doc_id: r.cross_entropy for r in scores.collect()}
-    scores.unpersist()
+    with scope():
+        kept, scores = lm_fluency_gate(df, top_frac=0.75)
+        ids = {r.doc_id for r in kept.collect()}
+        ce = {r.doc_id: r.cross_entropy for r in scores.collect()}
     assert ids == {0, 1, 2, 3}
     assert ce[10] > ce[0]
     assert 11 not in ce
@@ -120,16 +121,17 @@ def test_lm_fluency_gate_percentile_is_bounded_cardinality(spark):
     corpus size (r7 verdict scale-cliff #1). Tie-dense corpus: many docs
     share one exact score; the boundary doc whose ROUNDED score equals the
     threshold is kept (<=), docs strictly above are dropped."""
+    from latex_ocr_spark.frames import scope
     from latex_ocr_spark.operators.lm import lm_fluency_gate, lm_score
 
     # 8 clones (identical CE) + 2 high-CE outliers
     rows = [(i, "the cat sat on the mat") for i in range(8)]
     rows += [(100, "qz wv xj kp bn md"), (101, "zq vw jx pk nb dm")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    kept, scores = lm_fluency_gate(df, top_frac=0.8)
-    ids = {r.doc_id for r in kept.collect()}
-    ce = {r.doc_id: round(r.cross_entropy, 4) for r in scores.collect()}
-    scores.unpersist()
+    with scope():
+        kept, scores = lm_fluency_gate(df, top_frac=0.8)
+        ids = {r.doc_id for r in kept.collect()}
+        ce = {r.doc_id: round(r.cross_entropy, 4) for r in scores.collect()}
     # threshold = percentile of rounded scores at 0.8 over
     # [c]*8 + [h1, h2]: index 0.8*(10-1) = 7.2 → between c (rank 7) and the
     # 9th value; with 8 ties at c the interpolated value sits on/above c, so
@@ -237,15 +239,14 @@ def _py_semantic_dedup(rows, n_clusters, threshold):
 
 
 def test_semantic_dedup_matches_python_reference(spark):
+    from latex_ocr_spark.frames import scope
     from latex_ocr_spark.operators.similarity import semantic_dedup
 
     rows = _synthetic_embeddings()
     emb = spark.createDataFrame(rows, ["vec_id", "embedding", "label"])
-    out, cached = semantic_dedup(
-        emb, n_clusters=3, threshold=0.99, return_cached=True
-    )
-    got = {r.vec_id: (r.cluster, r.kept) for r in out.collect()}
-    cached.unpersist()
+    with scope():
+        out = semantic_dedup(emb, n_clusters=3, threshold=0.99)
+        got = {r.vec_id: (r.cluster, r.kept) for r in out.collect()}
     want = _py_semantic_dedup(rows, n_clusters=3, threshold=0.99)
     assert got == want
     # the augmented copies (vec_id 0 and 20) are exact near-dups of their

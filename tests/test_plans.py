@@ -14,6 +14,7 @@ from __future__ import annotations
 import pytest
 
 from latex_ocr_spark.config import ModelConfig
+from latex_ocr_spark.frames import scope
 from latex_ocr_spark.operators import dedup as D
 from latex_ocr_spark.operators import relational as R
 from latex_ocr_spark.operators import similarity as S
@@ -46,7 +47,7 @@ def _docs(spark):
     return _table(spark, "documents")
 
 
-# name → (spark, corpus) → DataFrame, or (DataFrame, *frames it persisted)
+# name → (spark, corpus) → DataFrame
 QUERIES = {
     "minhash_lsh_pairs": lambda spark, corpus: D.minhash_lsh_pairs(
         D.corpus_with_dups(spark, SF_DIR), threshold=0.5
@@ -65,10 +66,9 @@ QUERIES = {
         _docs(spark).filter("doc_id % 2 = 1"),
         _docs(spark).filter("doc_id % 2 = 0"),
         threshold=0.5,
-        return_cached=True,
     ),
     "semantic_dedup": lambda spark, corpus: S.semantic_dedup(
-        _table(spark, "embeddings"), n_clusters=8, return_cached=True
+        _table(spark, "embeddings"), n_clusters=8
     ),
     "lm_score": lambda spark, corpus: lm_score(_docs(spark), alpha=0.5),
     "curate_corpus": lambda spark, corpus: TA.curate_corpus(
@@ -94,16 +94,13 @@ QUERIES = {
 @pytest.fixture(scope="module")
 def plan(spark, corpus):
     """``plan(name)`` → the planned nodes of ``QUERIES[name]``, built once
-    per module; frames a query function hands back persisted are released."""
+    per module inside a ``scope()`` that releases what the query persisted."""
     built = {}
 
     def nodes(key):
         if key not in built:
-            out = QUERIES[key](spark, corpus)
-            df, *cached = out if isinstance(out, tuple) else (out,)
-            built[key] = planned_nodes(df)
-            for c in cached:
-                c.unpersist()
+            with scope():
+                built[key] = planned_nodes(QUERIES[key](spark, corpus))
         return built[key]
 
     return nodes
@@ -314,6 +311,9 @@ def test_jaccard_cap_is_broadcast_anti_join(spark):
     """The hot-shingle cap is an anti-join that adaptive execution
     broadcasts from the blacklist's measured size. max_freq=2 makes the
     blacklist non-empty at this scale; an empty one is planned away."""
-    jc = D.jaccard_pairs(D.corpus_with_dups(spark, SF_DIR), threshold=0.5, max_freq=2)
-    anti = [j for j in _joins(executed_nodes(jc)) if _join_type(j) == "LeftAnti"]
+    with scope():
+        jc = D.jaccard_pairs(
+            D.corpus_with_dups(spark, SF_DIR), threshold=0.5, max_freq=2
+        )
+        anti = [j for j in _joins(executed_nodes(jc)) if _join_type(j) == "LeftAnti"]
     assert anti and all(name(j) == "BroadcastHashJoinExec" for j in anti)

@@ -131,6 +131,7 @@ def test_job_cli_staged_pipeline(spark, tmp_path_factory):
         _lineage_records,
         stage_done,
     )
+    from latex_ocr_spark.frames import scope
     from latex_ocr_spark.pipeline import curate_and_budget
     from latex_ocr_spark.sources import build_corpus
     from tests.conftest import SF_DIR
@@ -184,10 +185,11 @@ def test_job_cli_staged_pipeline(spark, tmp_path_factory):
 
     # end-to-end agreement with the library path over the same extraction
     docs = spark.read.parquet(f"{out}/docs")
-    expect = {
-        (r.doc_id, r.n_subwords)
-        for r in curate_and_budget(flat_text(docs)).collect()
-    }
+    with scope():
+        expect = {
+            (r.doc_id, r.n_subwords)
+            for r in curate_and_budget(flat_text(docs)).collect()
+        }
     got = {(r.doc_id, r.n_subwords) for r in budgeted.collect()}
     assert got == expect
 

@@ -88,6 +88,7 @@ def test_minhash_band_join_aqe_skew_split(spark):
     AQEShuffleRead marked 'skewed' — the hot partitions were split into
     subpartition tasks — and (b) return exactly the same candidate set as
     an unsplit run (skew handling is a physical rewrite, never semantic)."""
+    from latex_ocr_spark.frames import scope
     from latex_ocr_spark.operators.dedup import minhash_band_candidates
 
     n_docs, n_hot = 1200, 400
@@ -121,13 +122,12 @@ def test_minhash_band_join_aqe_skew_split(spark):
         spark.conf.set(
             "spark.sql.adaptive.skewJoin.enabled", str(skew_enabled).lower()
         )
-        cand, sh, banded = minhash_band_candidates(
-            corpus, n=3, num_hashes=8, bands=4, max_freq=None
-        )
-        pairs = {(r.doc_a, r.doc_b) for r in cand.collect()}
-        plan = cand._jdf.queryExecution().executedPlan().toString()
-        sh.unpersist()
-        banded.unpersist()
+        with scope():
+            cand, _sh, _banded = minhash_band_candidates(
+                corpus, n=3, num_hashes=8, bands=4, max_freq=None
+            )
+            pairs = {(r.doc_a, r.doc_b) for r in cand.collect()}
+            plan = cand._jdf.queryExecution().executedPlan().toString()
         return pairs, plan
 
     try:
@@ -141,7 +141,6 @@ def test_minhash_band_join_aqe_skew_split(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-        spark.catalog.clearCache()
 
     # the skewed scenario is real: every hot pair is a candidate (identical
     # docs agree on every band — LSH cannot miss them)

@@ -17,6 +17,7 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E
+from latex_ocr_spark.frames import scope
 from latex_ocr_spark.session import get_spark
 
 TABLES = [
@@ -59,7 +60,9 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            # each query's caches and checkpoints are freed before the next
+            with scope():
+                sdf = fn(spark, sf_dir).toPandas()
         except Exception as ex:  # noqa: BLE001
             failures.append(name)
             print(f"FAIL  {name}: spark error: {ex}")
