@@ -347,53 +347,35 @@ def _q_topk_tokens_per_lang(spark, sf_dir):
     )
 
 
-def _q_exact_match_score(spark, sf_dir):
-    """A3: fraction of rows where ref == hyp (hyp = mutated copy for
-    doc_id%10==0) — the reference ExactMatchScore aggregation."""
-    docs = _documents(spark, sf_dir)
-    pairs = docs.select(
-        "doc_id",
+def _ref_hyp_pairs(spark, sf_dir):
+    """The standard mutated (ref, hyp) pairs the A3/A4/A5 scores run over:
+    hyp drops the first 5 words of every doc_id%10==0 document and equals
+    ref elsewhere."""
+    words = F.split("text", " ")
+    return _documents(spark, sf_dir).select(
         F.col("text").alias("ref"),
         F.when(
             F.col("doc_id") % 10 == 0,
-            F.concat_ws(
-                " ", F.slice(F.split("text", " "), 6, F.size(F.split("text", " ")))
-            ),
+            F.concat_ws(" ", F.slice(words, 6, F.size(words))),
         )
         .otherwise(F.col("text"))
         .alias("hyp"),
     )
-    return pairs.agg(
-        F.round(F.avg((F.col("ref") == F.col("hyp")).cast("double")), 4)
-        .cast("double")
-        .alias("exact_match")
-    )
+
+
+def _q_exact_match_score(spark, sf_dir):
+    """A3: fraction of rows where ref == hyp — the reference ExactMatchScore
+    aggregation."""
+    from latex_ocr_spark.eval.metrics import exact_match_rate
+
+    return exact_match_rate(_ref_hyp_pairs(spark, sf_dir))
 
 
 def _q_edit_distance_score(spark, sf_dir):
     """A5: 1 - Σlevenshtein/Σmax(len) over the same ref/hyp pairs."""
-    docs = _documents(spark, sf_dir)
-    pairs = docs.select(
-        F.col("text").alias("ref"),
-        F.when(
-            F.col("doc_id") % 10 == 0,
-            F.concat_ws(
-                " ", F.slice(F.split("text", " "), 6, F.size(F.split("text", " ")))
-            ),
-        )
-        .otherwise(F.col("text"))
-        .alias("hyp"),
-    )
-    return pairs.agg(
-        F.round(
-            1.0
-            - F.sum(F.levenshtein("ref", "hyp"))
-            / F.sum(F.greatest(F.length("ref"), F.length("hyp"))),
-            4,
-        )
-        .cast("double")
-        .alias("edit_distance_score")
-    )
+    from latex_ocr_spark.eval.metrics import edit_distance_score
+
+    return edit_distance_score(_ref_hyp_pairs(spark, sf_dir))
 
 
 def _q_events_agg(spark, sf_dir):
@@ -495,19 +477,7 @@ def _q_bleu_score(spark, sf_dir):
     count join, scalar expression) over the standard mutated ref/hyp pairs."""
     from latex_ocr_spark.eval.metrics import bleu4_relational
 
-    docs = _documents(spark, sf_dir)
-    pairs = docs.select(
-        F.col("text").alias("ref"),
-        F.when(
-            F.col("doc_id") % 10 == 0,
-            F.concat_ws(
-                " ", F.slice(F.split("text", " "), 6, F.size(F.split("text", " ")))
-            ),
-        )
-        .otherwise(F.col("text"))
-        .alias("hyp"),
-    )
-    return bleu4_relational(pairs)
+    return bleu4_relational(_ref_hyp_pairs(spark, sf_dir))
 
 
 def _q_main_content_extract(spark, sf_dir):

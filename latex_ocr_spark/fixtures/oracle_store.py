@@ -26,9 +26,10 @@ import pyarrow.parquet as pq
 from ..config import ModelConfig, PipelineConfig
 from ..kernels import KERNELS_VERSION
 from ..kernels.oracle import Model, oracle_decode_images
+from ..operators import similarity as S
+from ..sources import corpus_dir
 from .corpus import formula_for
 from .glyphs import render_formula
-from ..sources import corpus_dir
 
 
 def _fp(payload: dict) -> str:
@@ -340,17 +341,17 @@ def _topk_rows(
     norms: list[float],
     qi: int,
     cand: set[int],
-    k: int,
 ):
-    """Exact re-rank of candidate indexes for query row qi: (sim DESC rounded,
-    neighbor_id ASC) — the same rounded-sim row_number ordering as
-    similarity.with_cosine + the rank window."""
+    """Exact re-rank of candidate indexes for query row qi: the TOPK_K best
+    by (sim DESC rounded, neighbor_id ASC) — the same ordering as
+    similarity._top_k."""
     scored = []
     for ci in cand:
         sim = _round4(_fold_dot(vecs[qi], vecs[ci]) / (norms[qi] * norms[ci]))
         scored.append((sim, ids[ci]))
     scored.sort(key=lambda t: (-t[0], t[1]))
-    return [(ids[qi], nid, sim, r) for r, (sim, nid) in enumerate(scored[:k], 1)]
+    top = scored[: S.TOPK_K]
+    return [(ids[qi], nid, sim, r) for r, (sim, nid) in enumerate(top, 1)]
 
 
 def _write_topk(path: str, rows: list[tuple[int, int, float, int]]) -> str:
@@ -371,140 +372,87 @@ def _write_topk(path: str, rows: list[tuple[int, int, float, int]]) -> str:
     return path
 
 
-def oracle_lsh_topk_path(
-    sf_dir: str,
-    k: int = 5,
-    n_queries: int = 50,
-    dim: int = 64,
-    n_planes: int = 8,
-    n_tables: int = 12,
-    probe_bits: int = 1,
-) -> str:
-    from ..operators.similarity import SRP_SEED
-
+def oracle_lsh_topk_path(sf_dir: str) -> str:
     fp = _fp(
         {
-            "seed": SRP_SEED, "k": k, "q": n_queries, "dim": dim,
-            "planes": n_planes, "tables": n_tables, "probe": probe_bits,
+            "seed": S.SRP_SEED, "k": S.TOPK_K, "q": S.TOPK_QUERIES,
+            "dim": S.SRP_DIM, "planes": S.SRP_PLANES, "tables": S.TOPK_TABLES,
+            "probe": 1,  # 1-bit query-side multi-probe (similarity._probe_sigs)
         }
     )
     return os.path.join(corpus_dir(sf_dir), f"oracle_lsh_topk_{fp}.parquet")
 
 
-def ensure_oracle_lsh_topk(
-    sf_dir: str,
-    k: int = 5,
-    n_queries: int = 50,
-    dim: int = 64,
-    n_planes: int = 8,
-    n_tables: int = 12,
-    probe_bits: int = 1,
-) -> str:
-    """Single-process SRP-LSH top-k ground truth: the same plane matrices
-    (similarity._srp_planes), the same sign-bit signatures, the same 1-bit
-    query-side multi-probe, exact re-rank — replayed in one process."""
-    from ..operators.similarity import _srp_planes
-
-    path = oracle_lsh_topk_path(
-        sf_dir, k, n_queries, dim, n_planes, n_tables, probe_bits
-    )
+def ensure_oracle_lsh_topk(sf_dir: str) -> str:
+    """Single-process SRP-LSH top-k ground truth: the same plane matrix and
+    sign-bit signatures (similarity.srp_sigs), the same 1-bit query-side
+    multi-probe, exact re-rank — replayed in one process."""
+    path = oracle_lsh_topk_path(sf_dir)
     if os.path.exists(path):
         return path
     ids, vecs = _load_embeddings(sf_dir)
-    arr = np.array(vecs, dtype=np.float64)
-    # identical matmul formulation to similarity.srp_signatures_all
-    planes = np.concatenate(
-        [np.asarray(_srp_planes(dim, n_planes, t)) for t in range(n_tables)]
-    ).T.astype(np.float64)
-    weights = 1 << np.arange(n_planes, dtype=np.int64)
-    bits = (arr @ planes) >= 0.0
-    sigs = bits.reshape(len(ids), n_tables, n_planes).astype(np.int64) @ weights
+    sigs = S.srp_sigs(
+        np.array(vecs, dtype=np.float64), S.srp_plane_matrix(S.TOPK_TABLES)
+    )
     buckets: dict[tuple[int, int], list[int]] = {}
     for i in range(len(ids)):
-        for t in range(n_tables):
+        for t in range(S.TOPK_TABLES):
             buckets.setdefault((t, int(sigs[i, t])), []).append(i)
     norms = [_fold_norm(v) for v in vecs]
     rows: list[tuple[int, int, float, int]] = []
     for qi, qid in enumerate(ids):
-        if qid >= n_queries:
+        if qid >= S.TOPK_QUERIES:
             continue
         cand: set[int] = set()
-        for t in range(n_tables):
+        for t in range(S.TOPK_TABLES):
             s = int(sigs[qi, t])
-            probes = [s]
-            if probe_bits >= 1:
-                probes += [s ^ (1 << b) for b in range(n_planes)]
-            for p in probes:
+            for p in [s] + [s ^ (1 << b) for b in range(S.SRP_PLANES)]:
                 cand.update(buckets.get((t, p), ()))
         cand.discard(qi)
-        rows.extend(_topk_rows(ids, vecs, norms, qi, cand, k))
+        rows.extend(_topk_rows(ids, vecs, norms, qi, cand))
     return _write_topk(path, rows)
 
 
-def oracle_ivf_topk_path(
-    sf_dir: str,
-    k: int = 5,
-    n_queries: int = 50,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    train_sample: int = 2048,
-    kmeans_iters: int = 5,
-) -> str:
-    from ..operators.similarity import SRP_SEED
-
+def oracle_ivf_topk_path(sf_dir: str) -> str:
     fp = _fp(
         {
-            "seed": SRP_SEED, "k": k, "q": n_queries, "cent": n_centroids,
-            "probe": n_probe, "train": train_sample, "iters": kmeans_iters,
+            "seed": S.SRP_SEED, "k": S.TOPK_K, "q": S.TOPK_QUERIES,
+            "cent": S.IVF_CENTROIDS, "probe": S.IVF_PROBE,
+            "train": S.IVF_TRAIN_SAMPLE, "iters": S.IVF_KMEANS_ITERS,
         }
     )
     return os.path.join(corpus_dir(sf_dir), f"oracle_ivf_topk_{fp}.parquet")
 
 
-def ensure_oracle_ivf_topk(
-    sf_dir: str,
-    k: int = 5,
-    n_queries: int = 50,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    train_sample: int = 2048,
-    kmeans_iters: int = 5,
-) -> str:
+def ensure_oracle_ivf_topk(sf_dir: str) -> str:
     """Single-process IVF top-k ground truth: trains centroids with the SAME
     BLAS-free similarity.ivf_train (bit-identical doubles), then replays
     assignment / probe / re-rank with left-fold dot products matching Spark's
     F.aggregate expression order."""
-    from ..operators.similarity import ivf_train
-
-    path = oracle_ivf_topk_path(
-        sf_dir, k, n_queries, n_centroids, n_probe, train_sample, kmeans_iters
-    )
+    path = oracle_ivf_topk_path(sf_dir)
     if os.path.exists(path):
         return path
     ids, vecs = _load_embeddings(sf_dir)
-    order = sorted(range(len(ids)), key=lambda i: ids[i])[:train_sample]
+    order = sorted(range(len(ids)), key=lambda i: ids[i])[: S.IVF_TRAIN_SAMPLE]
     sample = np.array([vecs[i] for i in order], dtype=np.float64)
-    cent = ivf_train(sample, n_centroids, kmeans_iters)
-    centl = [[float(v) for v in cent[c]] for c in range(n_centroids)]
-
-    def cent_dots(v: list[float]) -> list[float]:
-        return [_fold_dot(v, centl[c]) for c in range(n_centroids)]
+    cent = S.ivf_train(sample, S.IVF_CENTROIDS)
+    centl = [[float(v) for v in c] for c in cent]
 
     # assignment: first-index-of-max == array_position(dots, array_max(dots))
     cells: dict[int, list[int]] = {}
-    dots_all = [cent_dots(v) for v in vecs]
+    dots_all = [[_fold_dot(v, c) for c in centl] for v in vecs]
     for i, d in enumerate(dots_all):
         cells.setdefault(d.index(max(d)), []).append(i)
     norms = [_fold_norm(v) for v in vecs]
     rows: list[tuple[int, int, float, int]] = []
     for qi, qid in enumerate(ids):
-        if qid >= n_queries:
+        if qid >= S.TOPK_QUERIES:
             continue
         d = dots_all[qi]
-        probed = sorted(range(n_centroids), key=lambda c: (-d[c], c))[:n_probe]
+        probed = sorted(range(S.IVF_CENTROIDS), key=lambda c: (-d[c], c))
         cand: set[int] = set()
-        for c in probed:
+        for c in probed[: S.IVF_PROBE]:
             cand.update(cells.get(c, ()))
         cand.discard(qi)
-        rows.extend(_topk_rows(ids, vecs, norms, qi, cand, k))
+        rows.extend(_topk_rows(ids, vecs, norms, qi, cand))
     return _write_topk(path, rows)

@@ -21,6 +21,7 @@ import math
 import numpy as np
 
 from ..config import ModelConfig
+from .image_ops import normalize
 
 
 def _pad_same(x: np.ndarray, kh: int, kw: int, sh: int, sw: int, value: float) -> np.ndarray:
@@ -175,18 +176,17 @@ def encode(
 ) -> np.ndarray:
     """uint8 (N,H,W) → encoded float32 (N,H',W',C).
 
-    Includes the normalize step (img-128)/128 exactly as the reference fuses it
-    into the encoder (model/encoder.py:25-27). ``cfg.encoder_cnn`` selects the
-    variant like the reference's getModel(model_name)
-    (model/img2seq_torch.py:69-83): vanilla | cnn here, simple_cnn | resnet9 |
-    densenet in kernels/encoder_zoo.py.
+    Includes the P6 normalize step (``image_ops.normalize``) exactly as the
+    reference fuses it into the encoder (model/encoder.py:25-27).
+    ``cfg.encoder_cnn`` selects the variant like the reference's
+    getModel(model_name) (model/img2seq_torch.py:69-83): vanilla | cnn here,
+    simple_cnn | resnet9 | densenet in kernels/encoder_zoo.py.
     """
     if cfg.encoder_cnn not in ("vanilla", "cnn"):
         from .encoder_zoo import ZOO
 
         return ZOO[cfg.encoder_cnn](batch_u8, weights, cfg)
-    x = (batch_u8.astype(np.float32) - 128.0) / 128.0
-    x = x[:, :, :, None]
+    x = normalize(batch_u8)[:, :, :, None]
     # relu after each pool, on the pooled (smaller) map: max commutes with
     # relu, so this is exact
     x = conv2d(x, weights["conv0_W"], weights["conv0_b"], "SAME")

@@ -26,6 +26,7 @@ import numpy as np
 
 from ..config import ModelConfig
 from .encoder import _pad_same, conv2d, max_pool
+from .image_ops import normalize
 
 
 def leaky_relu(x: np.ndarray, alpha: float = 0.01) -> np.ndarray:
@@ -46,8 +47,7 @@ def encode_simple_cnn(
     spatial (the reference avg-pools to 1×1 for its fc head; a seq2seq
     encoder needs regions). Pooling is applied only while H,W ≥ 2 so narrow
     formula strips never collapse to zero size."""
-    x = (batch_u8.astype(np.float32) - 128.0) / 128.0
-    x = x[:, :, :, None]
+    x = normalize(batch_u8)[:, :, :, None]
     for i in range(5):
         x = conv2d(x, w[f"scnn{i}_W"], w[f"scnn{i}_b"], "SAME")
         x = leaky_relu(batchnorm(x, w, f"scnn_bn{i}"))
@@ -72,8 +72,7 @@ def encode_resnet9(batch_u8: np.ndarray, w: dict, cfg: ModelConfig) -> np.ndarra
     """ResNet(BasicBlock, [1,1,1,1]): stem conv+bn+relu+pool, then one basic
     block per stage with channel doubling; stage downsampling via 2×2 maxpool
     while the map is large enough."""
-    x = (batch_u8.astype(np.float32) - 128.0) / 128.0
-    x = x[:, :, :, None]
+    x = normalize(batch_u8)[:, :, :, None]
     x = conv2d(x, w["rn_stem_W"], w["rn_stem_b"], "SAME")
     x = np.maximum(batchnorm(x, w, "rn_stem_bn"), 0.0)
     x = max_pool(x, (2, 2), (2, 2))
@@ -88,8 +87,7 @@ def encode_densenet(batch_u8: np.ndarray, w: dict, cfg: ModelConfig) -> np.ndarr
     """One dense block: each growth layer sees the CONCAT of all previous
     feature maps (the densenet connectivity), then a 1×1 transition conv maps
     to conv_channels[-1] for the decoder."""
-    x = (batch_u8.astype(np.float32) - 128.0) / 128.0
-    x = x[:, :, :, None]
+    x = normalize(batch_u8)[:, :, :, None]
     x = conv2d(x, w["dn_stem_W"], w["dn_stem_b"], "SAME")
     x = np.maximum(batchnorm(x, w, "dn_stem_bn"), 0.0)
     x = max_pool(x, (2, 2), (2, 2))

@@ -112,9 +112,11 @@ def _write_and_mark(
     (output-then-mark: a record implies its write committed, so a crash
     re-runs at most the in-flight unit, and the overwrite makes that retry
     idempotent). An extraction partition (``part`` ≥ 0) lands in
-    ``out_dir/docs/part=<k>/`` (the caller sets dynamic partition
-    overwrite); a corpus-wide stage (part -1, never colliding with
-    partition resume) overwrites ``out_dir/<status>``.
+    ``out_dir/docs/part=<k>/`` through a dynamic partition overwrite set on
+    the write itself — never on the session conf, which another thread's
+    write (the streaming sink's) could reset mid-job to the static mode that
+    deletes every other ``part=`` directory; a corpus-wide stage (part -1,
+    never colliding with partition resume) overwrites ``out_dir/<status>``.
 
     The record's metrics — ``n_docs`` plus the named ``aggs`` — ride the
     write job itself (``df.observe``): one pass, no post-write re-read of
@@ -126,7 +128,9 @@ def _write_and_mark(
         "overwrite"
     )
     if part >= 0:
-        writer.partitionBy("part").parquet(os.path.join(out_dir, "docs"))
+        writer.option("partitionOverwriteMode", "dynamic").partitionBy("part").parquet(
+            os.path.join(out_dir, "docs")
+        )
     else:
         writer.parquet(os.path.join(out_dir, status))
     stats = obs.get
@@ -190,21 +194,16 @@ def run_with_checkpoint(
         F.sum(tokens_per_doc).alias("n_tokens"),
     )
     processed: list[int] = []
-    prev_overwrite = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        for i, part in enumerate(todo):
-            if fail_after is not None and i >= fail_after:
-                raise RuntimeError(f"injected failure before partition {part}")
-            flat = extract_spans(
-                spark, corpus_dir, cfg=cfg, pipe=pipe, parts=[part], weights_bc=weights_bc
-            )
-            _write_and_mark(
-                spark, out_dir, reassemble(flat), "done", aggs, part=part, run_id=run_id
-            )
-            processed.append(part)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_overwrite)
+    for i, part in enumerate(todo):
+        if fail_after is not None and i >= fail_after:
+            raise RuntimeError(f"injected failure before partition {part}")
+        flat = extract_spans(
+            spark, corpus_dir, cfg=cfg, pipe=pipe, parts=[part], weights_bc=weights_bc
+        )
+        _write_and_mark(
+            spark, out_dir, reassemble(flat), "done", aggs, part=part, run_id=run_id
+        )
+        processed.append(part)
     return processed
 
 

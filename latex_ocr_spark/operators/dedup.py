@@ -128,12 +128,23 @@ def shingles(corpus: DataFrame, n: int = 3, max_freq: int | None = None) -> Data
     return sh
 
 
-def _jaccard_from_inter(inter: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
-    """(doc_a, doc_b, inter) + shingle-set sizes → (doc_a, doc_b, jaccard ≥ t)."""
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+def _jaccard_from_inter(
+    inter: DataFrame, sh_a: DataFrame, sh_b: DataFrame, threshold: float
+) -> DataFrame:
+    """(doc_a, doc_b, inter) + shingle-set sizes, doc_a's from ``sh_a`` and
+    doc_b's from ``sh_b`` → (doc_a, doc_b, jaccard ≥ t)."""
+
+    def sizes(sh: DataFrame, doc: str, n: str) -> DataFrame:
+        return (
+            sh.groupBy("doc_id")
+            .agg(F.count("*").alias("n_sh"))
+            .withColumnRenamed("doc_id", doc)
+            .withColumnRenamed("n_sh", n)
+        )
+
     return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "na"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "nb"), "doc_b")
+        inter.join(sizes(sh_a, "doc_a", "na"), "doc_a")
+        .join(sizes(sh_b, "doc_b", "nb"), "doc_b")
         .withColumn(
             "jaccard",
             F.round(
@@ -168,36 +179,38 @@ def jaccard_pairs(
         )
         .agg(F.count("*").alias("inter"))
     )
-    return _jaccard_from_inter(inter, sh, threshold)
+    return _jaccard_from_inter(inter, sh, sh, threshold)
 
 
 def candidate_jaccard(
-    candidates: DataFrame, sh: DataFrame, threshold: float
+    candidates: DataFrame, sh_a: DataFrame, sh_b: DataFrame, threshold: float
 ) -> DataFrame:
-    """Exact Jaccard for CANDIDATE pairs only — the LSH verification step.
+    """Exact Jaccard for CANDIDATE pairs only — the LSH verification step of
+    both the self-join (``sh_a`` and ``sh_b`` the same table) and the
+    incremental path (the index's and the batch's shingle tables).
 
-    Joins the pair list to the shingle table twice: fan (doc_a, doc_b) out by
-    doc_a's shingles, then equi-join on (doc_b, shingle) to count the
-    intersection per pair. Cost is O(candidates × avg shingles/doc), never the
-    full corpus self-join — this is what makes the LSH actually prune at
-    10^12-doc scale. Pairs with empty intersection drop out of the inner join,
-    which is correct for any threshold > 0.
+    Joins the pair list to the shingle tables twice: fan (doc_a, doc_b) out
+    by doc_a's shingles in ``sh_a``, then equi-join on (doc_b, shingle) with
+    ``sh_b`` to count the intersection per pair. Cost is O(candidates × avg
+    shingles/doc), never the full corpus self-join — this is what makes the
+    LSH actually prune at 10^12-doc scale. Pairs with empty intersection
+    drop out of the inner join, which is correct for any threshold > 0.
 
     Join strategy is left to AQE on BOTH joins: candidate volume scales with
     the true-duplicate count, so an unconditional broadcast hint would blow
     the driver on duplicate-heavy corpora at exactly the scale the LSH path
     serves. AQE sees the real candidate size at runtime and broadcasts when
     small (the common case), falling back to a shuffle join otherwise."""
-    fan = sh.withColumnRenamed("doc_id", "doc_a").join(candidates, "doc_a")
+    fan = sh_a.withColumnRenamed("doc_id", "doc_a").join(candidates, "doc_a")
     inter = (
         fan.join(
-            sh.select(F.col("doc_id").alias("doc_b"), "shingle"),
+            sh_b.select(F.col("doc_id").alias("doc_b"), "shingle"),
             ["doc_b", "shingle"],
         )
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("inter"))
     )
-    return _jaccard_from_inter(inter, sh, threshold)
+    return _jaccard_from_inter(inter, sh_a, sh_b, threshold)
 
 
 def minhash_banded(
@@ -347,7 +360,7 @@ def minhash_lsh_pairs(
     candidates, sh, _banded = minhash_band_candidates(
         corpus, n=n, num_hashes=num_hashes, bands=bands, max_freq=max_freq
     )
-    return candidate_jaccard(candidates, sh, threshold)
+    return candidate_jaccard(candidates, sh, sh, threshold)
 
 
 def incremental_neardup_pairs(
@@ -378,9 +391,12 @@ def incremental_neardup_pairs(
     diverge from one computed jointly); instead ``blacklist`` takes the
     production artifact — a hot-shingle table maintained ON THE INDEX —
     applied as a hint-free LEFT ANTI join on both sides (same degrade-safe
-    shape as ngram_jaccard's). Verification is exact Jaccard on candidate
-    pairs only, sizes from each side's own shingle table. Both shingle
-    tables are persisted (each feeds banding + verification + sizes)."""
+    shape as ngram_jaccard's). Verification is ``candidate_jaccard`` — the
+    self-join path's exact Jaccard on candidate pairs only — with each
+    pair's shingles and sizes read from its own side's table. (A union of
+    the two tables would defeat their caches when both sides derive from
+    one source, as they do in the query registry.) Both shingle tables are
+    persisted (each feeds banding + verification + sizes)."""
     sh_new = shingles(new_docs, n=n, max_freq=None)
     sh_idx = shingles(index_docs, n=n, max_freq=None)
     if blacklist is not None:
@@ -397,36 +413,13 @@ def incremental_neardup_pairs(
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket")),
         )
-        .select(
-            F.col("a.doc_id").alias("index_doc"),
-            F.col("b.doc_id").alias("new_doc"),
-        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    fan = sh_idx.withColumnRenamed("doc_id", "index_doc").join(
-        candidates, "index_doc"
-    )
-    inter = (
-        fan.join(
-            sh_new.select(F.col("doc_id").alias("new_doc"), "shingle"),
-            ["new_doc", "shingle"],
-        )
-        .groupBy("index_doc", "new_doc")
-        .agg(F.count("*").alias("inter"))
-    )
-    size_idx = sh_idx.groupBy("doc_id").agg(F.count("*").alias("na"))
-    size_new = sh_new.groupBy("doc_id").agg(F.count("*").alias("nb"))
-    return (
-        inter.join(size_idx.withColumnRenamed("doc_id", "index_doc"), "index_doc")
-        .join(size_new.withColumnRenamed("doc_id", "new_doc"), "new_doc")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 4
-            ).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("index_doc", "new_doc", "jaccard")
+    return candidate_jaccard(candidates, sh_idx, sh_new, threshold).select(
+        F.col("doc_a").alias("index_doc"),
+        F.col("doc_b").alias("new_doc"),
+        "jaccard",
     )
 
 

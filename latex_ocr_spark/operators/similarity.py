@@ -1,16 +1,33 @@
-"""Similarity search over the embeddings table (vec_id, embedding float[64],
-label).
+"""Similarity search and embedding dedup over the embeddings table
+(vec_id, embedding float[64], label).
 
-Two paths, same result shape (query_id, neighbor_id, sim):
+Three top-k paths, same result shape (query_id, neighbor_id, sim, rank):
   - ``cosine_topk``      — exact brute force: query-set ⋈ corpus with the dot
     product as a built-in zip_with/aggregate expression (JVM, codegen). The
     correctness baseline; at scale only for bounded query sets (the broadcast
     side is the query set).
-  - ``lsh_cosine_topk``  — random-hyperplane (SRP) LSH-bucketed variant: only
-    candidates sharing a hyperplane signature with the query are scored, then
-    exact re-rank; multiple hash tables (signature rotations) trade recall for
-    fan-in. The 100 TB path: candidate generation is an equi-join on
-    (table, signature); no cross join anywhere.
+  - ``lsh_cosine_topk``  — random-hyperplane (SRP) LSH: only candidates
+    sharing a hyperplane signature with a multi-probed query
+    (``srp_topk_candidates``) are scored; multiple hash tables trade recall
+    for fan-in. Candidate generation is an equi-join on (table, signature);
+    no cross join anywhere.
+  - ``ivf_cosine_topk``  — inverted file: k-means cells trained on a bounded
+    driver-side sample, each query probes its nearest cells, candidate
+    generation is an equi-join on the cell id.
+All three end in the same re-rank (``_top_k``): exact cosine on the
+candidate pairs, then the k best per query.
+
+Two dedup operators, over the embeddings plus planted shifted copies
+(``emb_with_dups``):
+  - ``embedding_neardup_pairs`` — (vec_a, vec_b, sim ≥ threshold) pairs from
+    an SRP-bucketed self-join, exact-verified.
+  - ``semantic_dedup``  — SemDeDup: cluster, then mark every vector with a
+    closer-than-threshold, smaller-id neighbor in its cluster.
+
+The index shapes (SRP_*, *_TABLES, IVF_*) are module constants because
+they have one value each; the single-process oracle replicas in
+fixtures/oracle_store.py read the same constants, so operator and replica
+cannot drift apart.
 
 Float determinism: similarities are computed in double and rounded to 4dp,
 ranked with a (sim DESC, neighbor_id ASC) tie-break so row_number is stable.
@@ -26,6 +43,17 @@ from pyspark.sql import functions as F
 from ..frames import persist
 
 SRP_SEED = 0x51A_2026
+SRP_DIM = 64  # embedding width
+SRP_PLANES = 8  # hyperplanes per table: 2^8 buckets per table
+TOPK_TABLES = 12  # lsh_cosine_topk: multi-probed on the query side
+NEARDUP_TABLES = 14  # embedding_neardup_pairs: unprobed self-join
+IVF_CENTROIDS = 16
+IVF_PROBE = 4  # cells each query probes
+IVF_TRAIN_SAMPLE = 2048  # lowest vec_ids the centroids train on
+IVF_KMEANS_ITERS = 5
+# the query rows' k and query-set size, which the oracle replicas replay
+TOPK_K = 5
+TOPK_QUERIES = 50
 
 
 def _dot(a, b):
@@ -46,120 +74,114 @@ def _norm(a):
     )
 
 
-def with_cosine(pairs: DataFrame, a: str = "qv", b: str = "nv") -> DataFrame:
-    return pairs.withColumn(
-        "sim",
-        F.round(_dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b))), 4),
-    )
-
-
-def _cosine_prenormed(pairs: DataFrame, a: str, b: str, an: str, bn: str):
-    """Cosine when each side's norm was precomputed BEFORE the join: the
-    per-pair work drops from three array reductions to one (the dot).
-    ``an``/``bn`` must be exactly ``_norm(side_vec)`` so round(dot/(an*bn), 4)
-    multiplies the identical doubles the inline formula would — bit-identical
-    output, evaluated O(rows) instead of O(pairs) times."""
-    return pairs.withColumn(
-        "sim",
-        F.round(_dot(F.col(a), F.col(b)) / (F.col(an) * F.col(bn)), 4),
-    )
-
-
-def cosine_topk(
-    embeddings: DataFrame, k: int = 5, n_queries: int = 50
+def _side(
+    df: DataFrame, id_col: str, p: str, *extra, norm: str | None = None
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for vec_id < n_queries (excluding self)."""
-    queries = embeddings.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        _norm(F.col("embedding")).alias("qn"),
+    """One side of a scored pair join: (vec_id, embedding) →
+    (``id_col``, ``<p>v``, ``<p>n``, *extra), ``p`` being "q" or "n". The
+    norm is taken here, once per vector and before the join, unless
+    ``norm`` names a column that already holds it."""
+    n = F.col(norm) if norm else _norm(F.col("embedding"))
+    return df.select(
+        F.col("vec_id").alias(id_col),
+        F.col("embedding").alias(f"{p}v"),
+        n.alias(f"{p}n"),
+        *extra,
     )
-    corpus = embeddings.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("nv"),
-        _norm(F.col("embedding")).alias("nn"),
+
+
+def _cosine(pairs: DataFrame) -> DataFrame:
+    """Add ``sim`` to pairs joined from a "q" and an "n" ``_side``. With
+    each norm precomputed per side, the per-pair work is one array
+    reduction (the dot) instead of three; qn/nn are exactly ``_norm`` of
+    each vector, so round(dot/(qn*nn), 4) multiplies the same doubles an
+    inline formula would — bit-identical output."""
+    return pairs.withColumn(
+        "sim",
+        F.round(_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn")), 4),
     )
-    scored = _cosine_prenormed(
-        F.broadcast(queries).crossJoin(corpus).filter(
-            F.col("query_id") != F.col("neighbor_id")
-        ),
-        "qv", "nv", "qn", "nn",
-    )
+
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """The shared re-rank: exact cosine on (query_id, neighbor_id) candidate
+    pairs, then each query's k best by (sim DESC, neighbor_id ASC)."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id").asc()
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        _cosine(pairs)
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "sim", "rank")
     )
 
 
-def _srp_planes(dim: int, n_planes: int, table: int) -> list[list[float]]:
-    rng = np.random.default_rng(SRP_SEED + table)
-    return rng.standard_normal((n_planes, dim)).tolist()
-
-
-def _probe_sigs(sig, n_planes: int, probe_bits: int):
-    """Multi-probe signature set: the signature itself plus every 1-bit flip
-    (probe_bits=1). Probing the QUERY side only keeps the corpus-side index
-    exact while recovering pairs that straddle one hyperplane — the standard
-    multi-probe LSH trade: ×(n_planes+1) probe fan-out on the small side buys
-    2^(n_planes-4)× smaller buckets on the big side."""
-    probes = [sig]
-    if probe_bits >= 1:
-        probes += [sig.bitwiseXOR(F.lit(1 << b).cast("long")) for b in range(n_planes)]
-    return F.array(*probes)
-
-
-def srp_signatures_all(
-    df: DataFrame,
-    vec_col: str,
-    dim: int,
-    n_planes: int,
-    n_tables: int,
-    id_col: str = "vec_id",
+def cosine_topk(
+    embeddings: DataFrame, k: int = TOPK_K, n_queries: int = TOPK_QUERIES
 ) -> DataFrame:
-    """All tables' SRP signatures in ONE Arrow-batched matmul:
-    (id, embedding) → (id, table, sig).
+    """Exact top-k cosine neighbors for vec_id < n_queries (excluding self)."""
+    queries = _side(embeddings.filter(F.col("vec_id") < n_queries), "query_id", "q")
+    corpus = _side(embeddings, "neighbor_id", "n")
+    return _top_k(
+        F.broadcast(queries)
+        .crossJoin(corpus)
+        .filter(F.col("query_id") != F.col("neighbor_id")),
+        k,
+    )
 
-    Bit b of a table's signature is set iff embedding · plane_b >= 0. A
-    built-in expression would evaluate n_tables·n_planes interpreted
+
+def srp_plane_matrix(n_tables: int) -> np.ndarray:
+    """(SRP_DIM, n_tables·SRP_PLANES) float64: table t's SRP_PLANES
+    hyperplanes, drawn from seed SRP_SEED + t, stacked so one matmul signs
+    a vector against every table."""
+    return np.concatenate(
+        [
+            np.random.default_rng(SRP_SEED + t).standard_normal((SRP_PLANES, SRP_DIM))
+            for t in range(n_tables)
+        ]
+    ).T
+
+
+def srp_sigs(vecs: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """(n, SRP_DIM) float64 vectors → (n, n_tables) int64 signatures: bit b
+    of table t's signature is set iff vec · plane_b(t) >= 0. The Spark UDF
+    and the single-process oracle replica both sign through this."""
+    n_tables = planes.shape[1] // SRP_PLANES
+    bits = (vecs @ planes) >= 0.0  # (n, T*P)
+    weights = 1 << np.arange(SRP_PLANES, dtype=np.int64)  # bit b = plane b
+    return bits.reshape(len(vecs), n_tables, SRP_PLANES).astype(np.int64) @ weights
+
+
+def srp_signatures_all(df: DataFrame, n_tables: int) -> DataFrame:
+    """All tables' SRP signatures in ONE Arrow-batched matmul:
+    (vec_id, embedding) → (vec_id, table, sig).
+
+    A built-in expression would evaluate n_tables·SRP_PLANES interpreted
     higher-order aggregates per row (≈100 lambda reductions); stacking every
-    plane into a (dim × n_tables·n_planes) matrix and letting numpy do
-    batch @ planes is the vectorized-pandas-UDF fast path when built-ins
-    can't express the op efficiently."""
-    planes = np.concatenate(
-        [np.asarray(_srp_planes(dim, n_planes, t)) for t in range(n_tables)]
-    ).T.astype(np.float64)  # (dim, n_tables*n_planes)
-    weights = (1 << np.arange(n_planes, dtype=np.int64))  # bit b = plane b
+    plane into one matrix and letting numpy do batch @ planes is the
+    vectorized-pandas-UDF fast path when built-ins can't express the op
+    efficiently."""
+    planes = srp_plane_matrix(n_tables)
 
     def run(batches):
         import pandas as pd
 
         for pdf in batches:
-            vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            vecs = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             if len(vecs) == 0:
-                yield pd.DataFrame({"_id": [], "table": [], "sig": []})
+                yield pd.DataFrame({"vec_id": [], "table": [], "sig": []})
                 continue
-            bits = (vecs @ planes) >= 0.0  # (n, T*P)
-            sigs = (
-                bits.reshape(len(vecs), n_tables, n_planes).astype(np.int64)
-                @ weights
-            )  # (n, T)
-            ids = np.repeat(pdf["_id"].values, n_tables)
             yield pd.DataFrame(
                 {
-                    "_id": ids,
+                    "vec_id": np.repeat(pdf["vec_id"].values, n_tables),
                     "table": np.tile(np.arange(n_tables, dtype=np.int32), len(vecs)),
-                    "sig": sigs.reshape(-1),
+                    "sig": srp_sigs(vecs, planes).reshape(-1),
                 }
             )
 
-    out = df.select(F.col(id_col).alias("_id"), vec_col).mapInPandas(
-        run, schema="_id long, table int, sig long"
+    return df.select("vec_id", "embedding").mapInPandas(
+        run, schema="vec_id long, table int, sig long"
     )
-    return out.select(F.col("_id").alias(id_col), "table", "sig")
 
 
 # Planted near-duplicate embeddings: for vec_id % 20 == 0 add a copy with a
@@ -189,37 +211,27 @@ def emb_with_dups(embeddings: DataFrame) -> DataFrame:
 
 
 def embedding_neardup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.99,
-    dim: int = 64,
-    n_planes: int = 8,
-    n_tables: int = 14,
-    probe_bits: int = 0,
+    embeddings: DataFrame, threshold: float = 0.99
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs ≥ threshold, LSH-pruned then
     exact-verified (the embedding analog of minhash_lsh_pairs): SRP signatures
     bucket candidates with an equi-join — never a cross join — and only
     candidates are scored.
 
-    NO multi-probing on the self-join (probe_bits=0): here BOTH join sides are
-    the full corpus, so a ×(n_planes+1) probe fan-out would shuffle 9× the
+    NO multi-probing on the self-join: here BOTH join sides are the full
+    corpus, so a ×(SRP_PLANES+1) probe fan-out would shuffle 9× the
     signature table — the fan-out trick only pays when one side is a bounded
-    query set (srp_topk_candidates). Recall is held by 2 extra unprobed tables
-    instead: at sim ≥ 0.99 (θ ≤ 0.1415 rad, per-bit agree p ≥ 0.955) one
-    8-plane table catches w.p. p^8 ≥ 0.69, so P(miss over 14 tables) ≤
-    0.31^14 ≈ 7e-8 — vs ≈1e-21 for the old probed-12-table setup, both far
-    below anything observable, at 14/108ths the candidate-generation shuffle
-    volume. Same LSH-only-prunes contract as the MinHash path (dedup.py),
-    with 2^8 buckets/table for corpus-scale headroom."""
+    query set (srp_topk_candidates). Recall is held by 2 extra unprobed
+    tables instead (NEARDUP_TABLES = 14): at sim ≥ 0.99 (θ ≤ 0.1415 rad,
+    per-bit agree p ≥ 0.955) one 8-plane table catches w.p. p^8 ≥ 0.69, so
+    P(miss over 14 tables) ≤ 0.31^14 ≈ 7e-8 — vs ≈1e-21 for a probed
+    12-table setup, both far below anything observable, at 14/108ths the
+    candidate-generation shuffle volume. Same LSH-only-prunes contract as
+    the MinHash path (dedup.py), with 2^8 buckets/table for corpus-scale
+    headroom."""
     base = emb_with_dups(embeddings)
-    sigs = persist(srp_signatures_all(base, "embedding", dim, n_planes, n_tables))
+    sigs = persist(srp_signatures_all(base, NEARDUP_TABLES))
     a = sigs.alias("a")
-    if probe_bits >= 1:
-        a = sigs.select(
-            "vec_id",
-            "table",
-            F.explode(_probe_sigs(F.col("sig"), n_planes, probe_bits)).alias("sig"),
-        ).alias("a")
     b = sigs.alias("b")
     cands = (
         a.join(
@@ -231,24 +243,17 @@ def embedding_neardup_pairs(
         .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
         .distinct()
     )
-    va = base.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("qv"),
-        _norm(F.col("embedding")).alias("qn"),
-    )
-    vb = base.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("nv"),
-        _norm(F.col("embedding")).alias("nn"),
-    )
-    scored = _cosine_prenormed(
-        cands.join(va, "vec_a").join(vb, "vec_b"), "qv", "nv", "qn", "nn"
+    scored = _cosine(
+        cands.join(_side(base, "vec_a", "q"), "vec_a").join(
+            _side(base, "vec_b", "n"), "vec_b"
+        )
     )
     return scored.filter(F.col("sim") >= threshold).select("vec_a", "vec_b", "sim")
 
 
-def ivf_train(sample: np.ndarray, n_centroids: int, kmeans_iters: int) -> np.ndarray:
-    """Seeded spherical k-means on a bounded driver-side sample (float64).
+def ivf_train(sample: np.ndarray, n_centroids: int) -> np.ndarray:
+    """Seeded spherical k-means (IVF_KMEANS_ITERS rounds) on a bounded
+    driver-side sample (float64).
 
     Deliberately BLAS-free (einsum without optimize never dispatches to GEMM):
     reduction order is then fixed by numpy's C loops, so the trained centroids
@@ -258,7 +263,7 @@ def ivf_train(sample: np.ndarray, n_centroids: int, kmeans_iters: int) -> np.nda
     sample = sample / np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
     rng = np.random.default_rng(SRP_SEED)
     cent = sample[rng.choice(len(sample), size=n_centroids, replace=False)]
-    for _ in range(kmeans_iters):
+    for _ in range(IVF_KMEANS_ITERS):
         assign = np.argmax(np.einsum("ij,kj->ik", sample, cent), axis=1)
         for c in range(n_centroids):
             members = sample[assign == c]
@@ -270,36 +275,33 @@ def ivf_train(sample: np.ndarray, n_centroids: int, kmeans_iters: int) -> np.nda
 
 def ivf_cosine_topk(
     embeddings: DataFrame,
-    k: int = 5,
-    n_queries: int = 50,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    train_sample: int = 2048,
-    kmeans_iters: int = 5,
+    k: int = TOPK_K,
+    n_queries: int = TOPK_QUERIES,
+    n_centroids: int = IVF_CENTROIDS,
+    n_probe: int = IVF_PROBE,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k cosine: k-means centroids trained
-    on a driver-side sample (standard IVF practice — the index is trained on a
-    bounded sample, then applied distributed), every vector assigned to its
-    nearest centroid with built-in expressions, queries probe only the
-    ``n_probe`` nearest cells, exact re-rank inside the probed cells.
+    on the IVF_TRAIN_SAMPLE lowest-id vectors (standard IVF practice — the
+    index is trained on a bounded sample, then applied distributed), every
+    vector assigned to its nearest centroid with built-in expressions,
+    queries probe only the ``n_probe`` nearest cells, exact re-rank inside
+    the probed cells.
 
     The scale path vs brute force: candidate generation is an equi-join on
     centroid_id (cells shard the corpus), so the scored set shrinks by
     ~n_probe/n_centroids. Approximate (rows-only oracle); recall vs
     ``cosine_topk`` is asserted in tests."""
-    from pyspark.sql import Window
-
     base = embeddings.select("vec_id", "embedding")
     # --- train: seeded spherical k-means on a deterministic sample ----------
     sample = np.array(
         base.orderBy("vec_id")
-        .limit(train_sample)
+        .limit(IVF_TRAIN_SAMPLE)
         .select("embedding")
         .toPandas()["embedding"]
         .tolist(),
         dtype=np.float64,
     )
-    cent = ivf_train(sample, n_centroids, kmeans_iters)
+    cent = ivf_train(sample, n_centroids)
     # --- assign: nearest-centroid id as one built-in expression --------------
     def _cent_dots(vec_col):
         return F.array(
@@ -325,15 +327,13 @@ def ivf_cosine_topk(
         .alias("cid"),
     )
     # --- probe: each query expands to its n_probe nearest cells --------------
-    qdots = (
-        base.filter(F.col("vec_id") < n_queries)
-        .withColumn("dots", _cent_dots("embedding"))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            _norm(F.col("embedding")).alias("qn"),
-            F.posexplode("dots").alias("cid", "cdot"),
-        )
+    qdots = _side(
+        base.filter(F.col("vec_id") < n_queries).withColumn(
+            "dots", _cent_dots("embedding")
+        ),
+        "query_id",
+        "q",
+        F.posexplode("dots").alias("cid", "cdot"),
     )
     wp = Window.partitionBy("query_id").orderBy(F.col("cdot").desc(), F.col("cid").asc())
     probes = (
@@ -342,47 +342,39 @@ def ivf_cosine_topk(
         .select("query_id", "qv", "qn", F.col("cid").cast("int").alias("cid"))
     )
     # --- candidate gen: equi-join on cell id, then exact re-rank -------------
-    cands = probes.join(
-        assigned.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("nv"),
-            _norm(F.col("embedding")).alias("nn"),
-            "cid",
-        ),
-        "cid",
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = _cosine_prenormed(cands, "qv", "nv", "qn", "nn")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
+    cands = probes.join(_side(assigned, "neighbor_id", "n", "cid"), "cid").filter(
+        F.col("query_id") != F.col("neighbor_id")
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
+    return _top_k(cands, k)
+
+
+def _probe_sigs(sig):
+    """Multi-probe signature set: the signature itself plus every 1-bit
+    flip. Probing the QUERY side only keeps the corpus-side index exact
+    while recovering pairs that straddle one hyperplane — the standard
+    multi-probe LSH trade: ×(SRP_PLANES+1) probe fan-out on the small side
+    buys 2^(SRP_PLANES-4)× smaller buckets on the big side."""
+    return F.array(
+        sig, *[sig.bitwiseXOR(F.lit(1 << b).cast("long")) for b in range(SRP_PLANES)]
     )
 
 
 def srp_topk_candidates(
-    embeddings: DataFrame,
-    n_queries: int = 50,
-    dim: int = 64,
-    n_planes: int = 8,
-    n_tables: int = 12,
-    probe_bits: int = 1,
+    embeddings: DataFrame, n_queries: int = TOPK_QUERIES
 ) -> DataFrame:
     """SRP-LSH candidate pairs for the top-k path: corpus side indexed with
-    exact n_planes-bit signatures (2^n_planes buckets/table — the knob that
-    keeps buckets small at corpus scale), query side multi-probed
-    (signature + every ≤probe_bits flip) to hold recall. Candidate generation
-    stays an equi-join on (table, sig); never a cross join."""
-    base = embeddings.select("vec_id", "embedding")
+    exact SRP_PLANES-bit signatures (2^SRP_PLANES buckets/table — the knob
+    that keeps buckets small at corpus scale) in TOPK_TABLES tables, query
+    side multi-probed (signature + every 1-bit flip) to hold recall.
+    Candidate generation stays an equi-join on (table, sig); never a cross
+    join."""
     # all tables' signatures in ONE vectorized matmul (linear plan, one scan),
     # persisted because both join sides read it
-    sigs = persist(srp_signatures_all(base, "embedding", dim, n_planes, n_tables))
+    sigs = persist(srp_signatures_all(embeddings, TOPK_TABLES))
     q = sigs.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         "table",
-        F.explode(_probe_sigs(F.col("sig"), n_planes, probe_bits)).alias("sig"),
+        F.explode(_probe_sigs(F.col("sig"))).alias("sig"),
     )
     return (
         q.join(sigs, ["table", "sig"])
@@ -393,50 +385,26 @@ def srp_topk_candidates(
 
 
 def lsh_cosine_topk(
-    embeddings: DataFrame,
-    k: int = 5,
-    n_queries: int = 50,
-    dim: int = 64,
-    n_planes: int = 8,
-    n_tables: int = 12,
-    probe_bits: int = 1,
+    embeddings: DataFrame, k: int = TOPK_K, n_queries: int = TOPK_QUERIES
 ) -> DataFrame:
     """SRP-LSH candidate generation + exact re-rank (approximate top-k).
 
     Scale parameterization (measured at sf0.01, 500 vectors, 50 queries):
-    n_planes=8 + 1-bit multi-probe yields ~0.45× the candidate volume of the
-    old n_planes=4 exact-probe setup at HIGHER recall (per-pair collision
+    8 planes + 1-bit multi-probe yields ~0.45× the candidate volume of the
+    old 4-plane exact-probe setup at HIGHER recall (per-pair collision
     ≥0.74 across 12 tables for neighbors at cosine ≥0.25); bucket count per
-    table is 2^8=256, so candidate volume scales ~n²·(n_planes+1)/2^n_planes
+    table is 2^8=256, so candidate volume scales ~n²·(planes+1)/2^planes
     per table instead of n²/16 — the 100× corpus headroom the 4-plane
     parameterization lacked."""
-    base = embeddings.select("vec_id", "embedding")
-    cands = srp_topk_candidates(
-        embeddings, n_queries, dim, n_planes, n_tables, probe_bits
-    )
     # query side pruned to the actual query set before the broadcast (the
     # unpruned frame shipped the whole corpus's vectors for a 50-key join)
-    qv = base.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        _norm(F.col("embedding")).alias("qn"),
-    )
-    nv = base.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("nv"),
-        _norm(F.col("embedding")).alias("nn"),
-    )
-    scored = _cosine_prenormed(
-        cands.join(F.broadcast(qv), "query_id").join(nv, "neighbor_id"),
-        "qv", "nv", "qn", "nn",
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
+    qv = _side(embeddings.filter(F.col("vec_id") < n_queries), "query_id", "q")
+    nv = _side(embeddings, "neighbor_id", "n")
+    return _top_k(
+        srp_topk_candidates(embeddings, n_queries)
+        .join(F.broadcast(qv), "query_id")
+        .join(nv, "neighbor_id"),
+        k,
     )
 
 
@@ -488,21 +456,12 @@ def semantic_dedup(
         .withColumn("csim", csim)
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("cid").alias("cluster"), "embedding", "en")
+        .select("vec_id", "embedding", "en", F.col("cid").alias("cluster"))
     )
-    a = assigned.select(
-        F.col("vec_id").alias("vec_a"), "cluster",
-        F.col("embedding").alias("qv"), F.col("en").alias("qn"),
-    )
-    b = assigned.select(
-        F.col("vec_id").alias("vec_b"), "cluster",
-        F.col("embedding").alias("nv"), F.col("en").alias("nn"),
-    )
+    a = _side(assigned, "vec_a", "q", "cluster", norm="en")
+    b = _side(assigned, "vec_b", "n", "cluster", norm="en")
     dups = (
-        _cosine_prenormed(
-            a.join(b, ["cluster"]).filter(F.col("vec_a") < F.col("vec_b")),
-            "qv", "nv", "qn", "nn",
-        )
+        _cosine(a.join(b, ["cluster"]).filter(F.col("vec_a") < F.col("vec_b")))
         .filter(F.col("sim") >= threshold)
         .select(F.col("vec_b").alias("vec_id"))
         .distinct()

@@ -8,7 +8,7 @@ DuckDB oracle formula in __spark_entry__.oracle_sql.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..frames import local_checkpoint, persist, release, scope
@@ -253,6 +253,14 @@ def quality_percentiles(
     return agg.select(*sel).orderBy("lang_pred")
 
 
+def content_fp(text: str = "text") -> Column:
+    """The normalized-content fingerprint: md5 of the lower-cased,
+    whitespace-collapsed text (md5 is engine-stable, unlike xxhash64, which
+    DuckDB lacks). ``fingerprint``, both curation keepers and
+    streaming.streaming_dedup key on it."""
+    return F.md5(F.lower(F.regexp_replace(F.col(text), r"\s+", " ")))
+
+
 def curate_by_percentile(
     corpus: DataFrame, lang: str = "en", p: float = 0.5
 ) -> DataFrame:
@@ -286,10 +294,7 @@ def curate_by_percentile(
     kept = (
         gated.join(F.broadcast(thr), "lang_pred")
         .filter(F.col("n_words") >= F.col("thr"))
-        .withColumn(
-            "fp_md5",
-            F.md5(F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))),
-        )
+        .withColumn("fp_md5", content_fp())
     )
     keepers = kept.groupBy("fp_md5").agg(F.min("doc_id").alias("doc_id"))
     return kept.join(keepers, ["fp_md5", "doc_id"]).select("doc_id", "text")
@@ -299,9 +304,8 @@ def curate_corpus(corpus: DataFrame, lang: str = "en") -> DataFrame:
     """The end-to-end curation pass a training pipeline runs before
     tokenization: language gate (marker-lexicon argmax == ``lang``), quality
     gate (length + stopword-ratio), then near-exact dedup on the normalized
-    content fingerprint (lower + whitespace-collapse md5, same normalization
-    as ``fingerprint``) keeping the min-doc_id representative. Emits the
-    surviving (doc_id, text) rows.
+    content fingerprint (``content_fp``) keeping the min-doc_id
+    representative. Emits the surviving (doc_id, text) rows.
 
     Scale notes (100 TB): both gates are pure expressions applied BEFORE the
     pass's only shuffle, so the fingerprint aggregation and keeper equi-join
@@ -313,12 +317,11 @@ def curate_corpus(corpus: DataFrame, lang: str = "en") -> DataFrame:
     wall; the shuffle stays the narrow (fp_md5, doc_id) aggregation + an
     AQE-chosen broadcast of the keepers, never the text); the caller's
     ``frames.scope()`` releases that cache."""
-    fp = F.md5(F.lower(F.regexp_replace(F.col("text"), r"\s+", " ")))
     gated = persist(
         corpus.filter(
             (_lang_pred_expr(F.col("text")) == lang)
             & _quality_keep_expr(F.col("text"))
-        ).withColumn("fp_md5", fp)
+        ).withColumn("fp_md5", content_fp())
     )
     keepers = gated.groupBy("fp_md5").agg(F.min("doc_id").alias("doc_id"))
     return gated.join(keepers, ["fp_md5", "doc_id"]).select("doc_id", "text")
@@ -463,13 +466,10 @@ def extract_main_content_dom(df: DataFrame, html_col: str = "html") -> DataFrame
 
 
 def fingerprint(corpus: DataFrame) -> DataFrame:
-    """Document fingerprint: md5 over the whitespace/case-normalized text
-    (md5 is engine-stable, unlike xxhash64 which DuckDB lacks)."""
-    norm = F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))
+    """Document fingerprint (``content_fp``) and its 8-hex prefix."""
+    fp = content_fp()
     return corpus.select(
-        "doc_id",
-        F.md5(norm).alias("fp_md5"),
-        F.substring(F.md5(norm), 1, 8).alias("fp_prefix"),
+        "doc_id", fp.alias("fp_md5"), F.substring(fp, 1, 8).alias("fp_prefix")
     )
 
 

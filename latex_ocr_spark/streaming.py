@@ -116,12 +116,11 @@ def streaming_dedup(
     docs: DataFrame, text_col: str = "text", state_ttl_ms: int | None = None
 ) -> DataFrame:
     """Cross-batch exact dedup for streaming ingestion: keyed state per
-    normalized-content fingerprint (lower + whitespace-collapse md5 — the
-    same normalization as the batch ``fingerprint`` / ``curate_corpus``
-    keeper stage) emits only the FIRST-seen document per fingerprint across
-    all micro-batches; duplicates arriving later (replays, re-crawls,
-    mirror copies) are dropped before the expensive extraction path ever
-    sees them.
+    normalized-content fingerprint (text_analysis.content_fp, the key of
+    the batch ``fingerprint`` / ``curate_corpus`` keeper stage) emits only
+    the FIRST-seen document per fingerprint across all micro-batches;
+    duplicates arriving later (replays, re-crawls, mirror copies) are
+    dropped before the expensive extraction path ever sees them.
 
     State is a single marker per distinct fingerprint — the minimal dedup
     state a long-running ingestion keeps. At 10^12-doc scale the state
@@ -147,9 +146,12 @@ def streaming_dedup(
     state_schema = "seen int"
     timeout_conf = "NoTimeout" if state_ttl_ms is None else "ProcessingTimeTimeout"
 
-    fp = F.md5(F.lower(F.regexp_replace(F.col(text_col), r"\s+", " ")))
+    from .operators.text_analysis import content_fp
+
     keyed = docs.select(
-        "doc_id", fp.alias("fp_md5"), F.col(text_col).alias("text")
+        "doc_id",
+        content_fp(text_col).alias("fp_md5"),
+        F.col(text_col).alias("text"),
     )
 
     def first_seen(key, pdfs, state: GroupState):
@@ -320,21 +322,14 @@ def extraction_sink(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        sess = batch_df.sparkSession
-        prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            flat = extract_spans_from_docs(
-                sess, batch_df, media_tbl, cfg=cfg, pipe=pipe,
-                weights_bc=weights_bc,
-            )
-            reassemble(flat).withColumn(
-                "batch_id", F.lit(int(batch_id))
-            ).write.mode("overwrite").partitionBy("part", "batch_id").parquet(
-                out_docs
-            )
-        finally:
-            sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        flat = extract_spans_from_docs(
+            batch_df.sparkSession, batch_df, media_tbl, cfg=cfg, pipe=pipe,
+            weights_bc=weights_bc,
+        )
+        out = reassemble(flat).withColumn("batch_id", F.lit(int(batch_id)))
+        out.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("part", "batch_id").parquet(out_docs)
 
     return (
         stream_docs(spark, corpus_dir)

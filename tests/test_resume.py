@@ -90,6 +90,27 @@ def test_no_resume_clears_checkpoint_via_fs_api(spark, corpus, tmp_path_factory)
     assert set(processed) == set(cfg_parts), "cleared checkpoint must reprocess"
 
 
+def test_partition_write_keeps_earlier_partitions(spark, tmp_path):
+    """An extraction partition's write replaces only its own ``part=``
+    directory while the session conf stays at its default static overwrite
+    mode: the dynamic mode rides the write itself, so no conf toggle by
+    another thread can turn the next partition's write into a wipe of the
+    partitions already done."""
+    from latex_ocr_spark.operators.checkpoint import _write_and_mark
+
+    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    assert mode.lower() == "static"
+    out = str(tmp_path)
+    for part in (0, 1):
+        df = spark.createDataFrame(
+            [(f"doc-{part}", part, "text")], "doc_id string, part int, text string"
+        )
+        _write_and_mark(spark, out, df, "done", part=part)
+    dirs = {d for d in os.listdir(f"{out}/docs") if d.startswith("part=")}
+    assert dirs == {"part=0", "part=1"}
+    assert spark.read.parquet(f"{out}/docs").count() == 2
+
+
 def test_job_cli_end_to_end_and_resume(spark, tmp_path_factory):
     """job.py main(): fresh run processes every partition; second invocation
     resumes to a no-op (all partitions checkpointed)."""
