@@ -51,26 +51,27 @@ def token_edit_distance_score(
 ) -> DataFrame:
     """Token-level variant (the reference's exact semantics) — map tokens of
     each row to single unicode codepoints, then levenshtein on those proxy
-    strings; pure built-in expressions via a per-row vocabulary."""
+    strings; pure built-in expressions via a per-row vocabulary. The token
+    arrays and the vocabulary are columns computed once per row below the
+    encoding lambdas (a split inside a lambda is re-run per token)."""
+    rw, hw, toks = F.col("_rw"), F.col("_hw"), F.col("_toks")
 
-    def to_codes(c_ref, c_hyp):
-        toks = F.array_distinct(
-            F.concat(F.split(c_ref, " "), F.split(c_hyp, " "))
+    def enc(words):
+        return F.concat_ws(
+            "",
+            F.transform(words, lambda t: F.chr(F.array_position(toks, t) + 192)),
         )
-        def enc(col):
-            return F.concat_ws(
-                "",
-                F.transform(
-                    F.split(col, " "),
-                    lambda t: F.chr(F.array_position(toks, t) + 192),
-                ),
-            )
-        return enc(c_ref), enc(c_hyp)
 
-    r, h = to_codes(F.col(ref), F.col(hyp))
-    agg = pairs.select(r.alias("_r"), h.alias("_h")).agg(
-        F.sum(F.levenshtein("_r", "_h")).alias("lev"),
-        F.sum(F.greatest(F.length("_r"), F.length("_h"))).alias("den"),
+    agg = (
+        pairs.select(
+            F.split(F.col(ref), " ").alias("_rw"), F.split(F.col(hyp), " ").alias("_hw")
+        )
+        .select(rw, hw, F.array_distinct(F.concat(rw, hw)).alias("_toks"))
+        .select(enc(rw).alias("_r"), enc(hw).alias("_h"))
+        .agg(
+            F.sum(F.levenshtein("_r", "_h")).alias("lev"),
+            F.sum(F.greatest(F.length("_r"), F.length("_h"))).alias("den"),
+        )
     )
     return agg.select(
         F.round(1.0 - F.col("lev") / F.col("den"), 4).alias("token_edit_distance_score")

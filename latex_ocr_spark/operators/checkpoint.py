@@ -229,6 +229,22 @@ _STAGE_STATUS = {
     "budget": "budgeted",
     "mix": "mixed",
 }
+# stage name → the schema of the output it writes. The next stage reads its
+# predecessor's output with it: a schema-less parquet read would run a
+# footer-inference job per read. The mix stage's output is read by no stage
+# and its columns depend on its options, so it has none.
+_STAGE_SCHEMA = {
+    "curate": "doc_id bigint, text string",
+    "dedup": "doc_id bigint, text string",
+    "budget": "doc_id bigint, text string, n_words int, n_subwords bigint, n_chars int",
+}
+
+
+def _read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
+    """``stage``'s materialized output, read with its declared schema."""
+    return spark.read.schema(_STAGE_SCHEMA[stage]).parquet(
+        os.path.join(out_dir, _STAGE_STATUS[stage])
+    )
 
 
 def stage_done(spark: SparkSession, out_dir: str, stage: str) -> bool:
@@ -256,8 +272,7 @@ def run_curate_stage(
     flattened extraction output → ``out_dir/curated`` (doc_id, text)."""
     from . import text_analysis as TA
 
-    docs = spark.read.parquet(os.path.join(extracted_dir, "docs"))
-    curated = TA.curate_corpus(flat_text(docs))
+    curated = TA.curate_corpus(flat_text(read_docs(spark, extracted_dir)))
     return _write_and_mark(spark, out_dir, curated, _STAGE_STATUS["curate"])
 
 
@@ -269,7 +284,7 @@ def run_dedup_stage(spark: SparkSession, out_dir: str) -> dict:
     curation gates."""
     from . import dedup as D
 
-    curated = spark.read.parquet(os.path.join(out_dir, "curated"))
+    curated = _read_stage(spark, out_dir, "curate")
     survivors = D.dedup_apply(
         curated, D.minhash_lsh_pairs(curated, n=3, threshold=0.5)
     )
@@ -282,7 +297,7 @@ def run_budget_stage(spark: SparkSession, out_dir: str) -> dict:
     deduped survivors → ``out_dir/budgeted`` (doc_id, text + counts)."""
     from . import text_analysis as TA
 
-    deduped = spark.read.parquet(os.path.join(out_dir, "deduped"))
+    deduped = _read_stage(spark, out_dir, "dedup")
     budget = TA.token_count(deduped, keep_text=True)
     return _write_and_mark(
         spark,
@@ -331,9 +346,7 @@ def run_mix_stage(
     the sampled output when budgets or upsample factors apply."""
     from . import text_analysis as TA
 
-    corpus = spark.read.parquet(os.path.join(out_dir, "budgeted")).select(
-        "doc_id", "text"
-    )
+    corpus = _read_stage(spark, out_dir, "budget").select("doc_id", "text")
     mixed = (
         TA.repetition_ratio(corpus, keep_text=True)
         .filter(F.col("rep_ratio") <= max_rep_ratio)

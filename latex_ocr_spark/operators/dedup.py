@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..frames import local_checkpoint, persist, release
@@ -81,8 +81,14 @@ def shingles(corpus: DataFrame, n: int = 3, max_freq: int | None = None) -> Data
 
     ``max_freq`` drops shingles appearing in more than that many docs before
     any self-join — the skew cap that keeps the join tractable at scale.
+
+    Each text is split ONCE into a words column below the ``transform``:
+    Spark does not eliminate common subexpressions inside a lambda, so a
+    ``split`` written into the lambda's ``element_at`` calls re-splits the
+    whole text for every word of it — quadratic in document length
+    (tests/test_plans.py pins that no split sits under a lambda).
     """
-    words = F.split(F.col("text"), " ")
+    words = F.col("_words")
 
     def _shingle(i):
         parts = []
@@ -93,7 +99,8 @@ def shingles(corpus: DataFrame, n: int = 3, max_freq: int | None = None) -> Data
         return F.concat(*parts)  # concat (not concat_ws): NULL word → NULL shingle
 
     sh = (
-        corpus.select(
+        corpus.select("doc_id", F.split(F.col("text"), " ").alias("_words"))
+        .select(
             "doc_id",
             F.explode(
                 F.transform(
@@ -128,32 +135,16 @@ def shingles(corpus: DataFrame, n: int = 3, max_freq: int | None = None) -> Data
     return sh
 
 
-def _jaccard_from_inter(
-    inter: DataFrame, sh_a: DataFrame, sh_b: DataFrame, threshold: float
-) -> DataFrame:
-    """(doc_a, doc_b, inter) + shingle-set sizes, doc_a's from ``sh_a`` and
-    doc_b's from ``sh_b`` → (doc_a, doc_b, jaccard ≥ t)."""
+def shingle_sets(sh: DataFrame) -> DataFrame:
+    """Distinct shingle rows → one row per doc: (doc_id, shingles
+    array<string>), the table the LSH path signs and verifies from."""
+    return sh.groupBy("doc_id").agg(F.collect_list("shingle").alias("shingles"))
 
-    def sizes(sh: DataFrame, doc: str, n: str) -> DataFrame:
-        return (
-            sh.groupBy("doc_id")
-            .agg(F.count("*").alias("n_sh"))
-            .withColumnRenamed("doc_id", doc)
-            .withColumnRenamed("n_sh", n)
-        )
 
-    return (
-        inter.join(sizes(sh_a, "doc_a", "na"), "doc_a")
-        .join(sizes(sh_b, "doc_b", "nb"), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 4
-            ).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+def _jaccard(inter: Column, na: Column, nb: Column) -> Column:
+    """inter/(|A|+|B|-inter) rounded to 4 places — the one formula the
+    exact and the candidate verification share, so both emit equal values."""
+    return F.round(inter / (na + nb - inter), 4).cast("double").alias("jaccard")
 
 
 def jaccard_pairs(
@@ -179,44 +170,80 @@ def jaccard_pairs(
         )
         .agg(F.count("*").alias("inter"))
     )
-    return _jaccard_from_inter(inter, sh, sh, threshold)
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    return (
+        inter.join(sizes.toDF("doc_a", "na"), "doc_a")
+        .join(sizes.toDF("doc_b", "nb"), "doc_b")
+        .select("doc_a", "doc_b", _jaccard(F.col("inter"), F.col("na"), F.col("nb")))
+        .filter(F.col("jaccard") >= threshold)
+    )
 
 
 def candidate_jaccard(
-    candidates: DataFrame, sh_a: DataFrame, sh_b: DataFrame, threshold: float
+    candidates: DataFrame, sets_a: DataFrame, sets_b: DataFrame, threshold: float
 ) -> DataFrame:
     """Exact Jaccard for CANDIDATE pairs only — the LSH verification step of
-    both the self-join (``sh_a`` and ``sh_b`` the same table) and the
-    incremental path (the index's and the batch's shingle tables).
+    both the self-join (``sets_a`` and ``sets_b`` the same table) and the
+    incremental path (the index's and the batch's tables).
 
-    Joins the pair list to the shingle tables twice: fan (doc_a, doc_b) out
-    by doc_a's shingles in ``sh_a``, then equi-join on (doc_b, shingle) with
-    ``sh_b`` to count the intersection per pair. Cost is O(candidates × avg
-    shingles/doc), never the full corpus self-join — this is what makes the
-    LSH actually prune at 10^12-doc scale. Pairs with empty intersection
-    drop out of the inner join, which is correct for any threshold > 0.
+    ``sets_a``/``sets_b`` are per-doc shingle-set tables (``shingle_sets``):
+    each candidate (doc_a, doc_b) picks up doc_a's set from ``sets_a`` and
+    doc_b's from ``sets_b`` through two ``doc_id`` joins, and the pair's
+    intersection is ``size(array_intersect(a, b))`` — a per-row expression,
+    so verification adds no aggregate and shuffles no shingle rows. Cost is
+    O(candidates × avg shingles/doc), never the full corpus self-join — this
+    is what makes the LSH actually prune at 10^12-doc scale. (The sets are
+    distinct, so the intersection size is the shared-shingle count the
+    row-table formulation counts; a pair sharing none scores 0 and drops
+    for any threshold > 0.)
 
     Join strategy is left to AQE on BOTH joins: candidate volume scales with
     the true-duplicate count, so an unconditional broadcast hint would blow
     the driver on duplicate-heavy corpora at exactly the scale the LSH path
-    serves. AQE sees the real candidate size at runtime and broadcasts when
-    small (the common case), falling back to a shuffle join otherwise."""
-    fan = sh_a.withColumnRenamed("doc_id", "doc_a").join(candidates, "doc_a")
-    inter = (
-        fan.join(
-            sh_b.select(F.col("doc_id").alias("doc_b"), "shingle"),
-            ["doc_b", "shingle"],
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
+    serves. AQE sees the real sizes at runtime and broadcasts when small
+    (the common case), falling back to a shuffle join otherwise."""
+    sa, sb = F.col("sa"), F.col("sb")
+    inter = F.size(F.array_intersect(sa, sb))
+    return (
+        candidates.join(sets_a.toDF("doc_a", "sa"), "doc_a")
+        .join(sets_b.toDF("doc_b", "sb"), "doc_b")
+        .select("doc_a", "doc_b", _jaccard(inter, F.size(sa), F.size(sb)))
+        .filter(F.col("jaccard") >= threshold)
     )
-    return _jaccard_from_inter(inter, sh_a, sh_b, threshold)
+
+
+# Shingle keys per slice of the signing UDF's hash matrix: each slice is a
+# (SIGN_SLICE_KEYS × num_hashes) int64 array — 4 MiB at 128 hashes.
+SIGN_SLICE_KEYS = 4096
+
+
+def _min_hashes(
+    x: np.ndarray, offsets: np.ndarray, A: np.ndarray, B: np.ndarray, p: int
+) -> np.ndarray:
+    """(docs, len(A)) int64 minima of h_i(x) = (A_i·x + B_i) mod p, doc d's
+    keys being ``x[offsets[d]:offsets[d+1]]`` (every doc non-empty).
+
+    The hash matrix is built SIGN_SLICE_KEYS keys at a time; a doc whose
+    keys straddle a slice boundary folds its per-slice minima together, so
+    the result does not depend on where the boundaries fall."""
+    out = np.full((len(offsets) - 1, len(A)), p, dtype=np.int64)  # p > any h
+    for s in range(0, len(x), SIGN_SLICE_KEYS):
+        e = min(s + SIGN_SLICE_KEYS, len(x))
+        h = x[s:e, None] * A  # < 2^62: exact in int64
+        h += B
+        h %= p
+        d0 = np.searchsorted(offsets, s, "right") - 1  # the doc holding key s
+        d1 = np.searchsorted(offsets, e, "left")  # docs starting before e
+        seg = np.minimum.reduceat(h, np.maximum(offsets[d0:d1], s) - s, axis=0)
+        np.minimum(out[d0:d1], seg, out=out[d0:d1])
+    return out
 
 
 def minhash_banded(
-    sh: DataFrame, num_hashes: int = 128, bands: int = 64
+    sets: DataFrame, num_hashes: int = 128, bands: int = 64
 ) -> DataFrame:
-    """(doc_id, band, bucket) banded MinHash signatures for a shingle table.
+    """(doc_id, band, bucket) banded MinHash signatures for a per-doc
+    shingle-set table (``shingle_sets``, whose sets are never empty).
 
     Factored out of ``minhash_band_candidates`` so the incremental path can
     sign today's batch and the historical index with the SAME fixed hash
@@ -228,67 +255,65 @@ def minhash_banded(
 
     The 128 permutation-free min-hashes h_i(x) = (a_i·x + b_i) mod p
     (p = 2^31−1, x = pmod(xxhash64(shingle), p)) are computed VECTORIZED in
-    numpy behind one hash exchange on doc_id: the JVM computes the shingle
-    key x (so the heavy shingle string never reaches Python), the narrow
-    (doc_id, x) rows shuffle once, and a mapInPandas does one
-    (rows × 128) broadcast-multiply-mod + segment-min per Arrow batch with
-    cross-batch minima folding (a doc's rows may span batches of its
-    partition). A 128-column JVM min-aggregate computes the same thing but
-    its generated update method is too large for wholestage codegen/JIT —
-    measured 1.9× slower at equal shuffle volume (the old agg's map-side
-    partial combine shuffled (doc × 128 longs); this shuffles the
-    (doc_id, x) rows — ~same bytes at ~64 shingles/doc). Bucket =
+    numpy, one input row per doc: the JVM turns each doc's shingle array
+    into an array of keys x (so the shingle strings never reach Python),
+    and a stateless ``mapInArrow`` computes each Arrow batch's
+    (keys × 128) hash matrix and takes every doc's minima with
+    ``np.minimum.reduceat`` over the list offsets. No exchange and no
+    cross-batch state: a doc's keys arrive in one row. Bucket =
     xxhash64(h0, h1) is computed back in the JVM so banding stays
-    join-compatible with any previously persisted signature index; output
-    rows are bit-identical to the aggregate formulation (int64 arithmetic
-    is exact in both, asserted in tests/test_incremental_dedup.py).
-    Python memory is bounded: O(batch × 128) for the hash matrix plus the
-    per-partition minima map — the same per-partition state the JVM
-    aggregate held."""
+    join-compatible with any previously persisted signature index; the
+    signatures are the exact int64 minima every earlier formulation
+    computed (same A, B, p; 64 bands × 2 rows).
+
+    Python memory per Arrow batch of D docs holding K keys in all, with
+    H = num_hashes: the keys (8·K bytes), the minima (8·D·H) and one hash
+    slice plus its segment minima (≤ 2 · 8·SIGN_SLICE_KEYS·H = 8 MiB at
+    H = 128) — independent of how many shingles one doc has (SCALE.md)."""
     rows_per_band = num_hashes // bands
+    assert rows_per_band == 2, "banding layout assumes 2 rows per band"
     p = 2147483647  # 2^31 - 1
     rng = np.random.default_rng(0x31A5_2026)
     A = (1 + rng.integers(0, p - 1, num_hashes)).astype(np.int64)
     B = rng.integers(0, p, num_hashes).astype(np.int64)
-    n_bands = bands
+    band_ids = np.arange(bands, dtype=np.int32)
 
-    keyed = sh.select(
-        "doc_id", F.pmod(F.xxhash64("shingle"), F.lit(p)).cast("long").alias("x")
+    keyed = sets.select(
+        "doc_id",
+        F.transform(
+            "shingles", lambda s: F.pmod(F.xxhash64(s), F.lit(p)).cast("long")
+        ).alias("x"),
     )
 
     def sig(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        acc: dict = {}  # doc_id -> (num_hashes,) int64 minima
-        for pdf in batches:
-            if not len(pdf):
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            x = pdf["x"].to_numpy(dtype=np.int64)
-            h = (x[:, None] * A[None, :] + B[None, :]) % p
-            df = pd.DataFrame(h)
-            df.insert(0, "_d", pdf["doc_id"].to_numpy())
-            gm = df.groupby("_d", sort=False).min()
-            for d, row in zip(gm.index.to_numpy(), gm.to_numpy()):
-                prev = acc.get(d)
-                acc[d] = row if prev is None else np.minimum(prev, row)
-        if acc:
-            docs = np.fromiter(acc.keys(), dtype=np.int64, count=len(acc))
-            m = np.stack(list(acc.values()))  # (ndocs, num_hashes)
-            # band b's rows are hashes [b·rpb, (b+1)·rpb) — rpb = 2 here
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.repeat(docs, n_bands),
-                    "band": np.tile(
-                        np.arange(n_bands, dtype=np.int32), len(docs)
-                    ),
-                    "h0": m[:, 0::rows_per_band].reshape(-1),
-                    "h1": m[:, 1::rows_per_band].reshape(-1),
-                }
+            xs = rb.column("x")
+            offsets = xs.offsets.to_numpy()
+            m = _min_hashes(
+                xs.flatten().to_numpy(zero_copy_only=False),
+                offsets - offsets[0],
+                A,
+                B,
+                p,
+            )
+            # band b's rows are hashes [2b, 2b + 1]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column("doc_id").take(np.repeat(np.arange(rb.num_rows), bands)),
+                    pa.array(np.tile(band_ids, rb.num_rows)),
+                    pa.array(m[:, 0::2].reshape(-1)),
+                    pa.array(m[:, 1::2].reshape(-1)),
+                ],
+                names=["doc_id", "band", "h0", "h1"],
             )
 
-    assert rows_per_band == 2, "banding layout assumes 2 rows per band"
-    per_band = keyed.repartition("doc_id").mapInPandas(
-        sig, schema="doc_id long, band int, h0 long, h1 long"
+    doc_type = sets.schema["doc_id"].dataType.simpleString()
+    per_band = keyed.mapInArrow(
+        sig, schema=f"doc_id {doc_type}, band int, h0 long, h1 long"
     )
     # bucket key is xxhash64 (a long, internal-only — the oracle never sees
     # banding), computed JVM-side so signatures stay join-compatible with
@@ -307,19 +332,21 @@ def minhash_band_candidates(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """MinHash signature build + LSH banding → candidate pairs.
 
-    Returns ``(candidates, sh, banded)``: the distinct (doc_a, doc_b)
-    candidate pairs from the band-bucket equi-join, the persisted shingle
-    table the caller verifies against (``candidate_jaccard``), and the
-    persisted banded-signature table (both released by the caller's
-    ``frames.scope()``). Split out of ``minhash_lsh_pairs`` so the band
-    self-join — the one shuffle in this suite whose key CAN skew (a bucket
-    shared by a large clone family holds every clone's row) — is directly
-    inspectable; tests/test_skew.py drives this stage under AQE skew-split
-    and checks the join's partition handling, not the verified output."""
-    sh = persist(shingles(corpus, n=n, max_freq=max_freq))
+    Returns ``(candidates, sets, banded)``: the distinct (doc_a, doc_b)
+    candidate pairs from the band-bucket equi-join, the persisted per-doc
+    shingle-set table (``shingle_sets`` of the capped, distinct shingles)
+    that both signing and the caller's verification (``candidate_jaccard``)
+    read, and the persisted banded-signature table (both released by the
+    caller's ``frames.scope()``). Split out of ``minhash_lsh_pairs`` so the
+    band self-join — the one shuffle in this suite whose key CAN skew (a
+    bucket shared by a large clone family holds every clone's row) — is
+    directly inspectable; tests/test_skew.py drives this stage under AQE
+    skew-split and checks the join's partition handling, not the verified
+    output."""
+    sets = persist(shingle_sets(shingles(corpus, n=n, max_freq=max_freq)))
     # persisted: the self-join below reads banded on BOTH sides — without this
-    # the 128-aggregate signature build runs twice (measured 2× stage cost)
-    banded = persist(minhash_banded(sh, num_hashes=num_hashes, bands=bands))
+    # the signature build runs twice (measured 2× stage cost)
+    banded = persist(minhash_banded(sets, num_hashes=num_hashes, bands=bands))
     a = banded.alias("a")
     b = banded.alias("b")
     candidates = (
@@ -334,7 +361,7 @@ def minhash_band_candidates(
         )
         .distinct()
     )
-    return candidates, sh, banded
+    return candidates, sets, banded
 
 
 def minhash_lsh_pairs(
@@ -348,19 +375,18 @@ def minhash_lsh_pairs(
     """MinHash + LSH near-dup pairs, exact-verified on candidates only.
 
     signature: 128 permutation-free min-hashes h_i(s) = (a_i*x + b_i) mod p
-    (p = 2^31-1; a_i*x fits a 64-bit long, so the whole signature stays in
-    JVM long arithmetic inside whole-stage codegen) over xxhash64 shingle
-    keys; banding (64 bands × 2 rows) buckets candidate pairs with an
-    equi-join (never a cross join); candidates are then verified with exact
-    Jaccard computed ONLY for the candidate pairs (candidate_jaccard — the
-    full-corpus self-join is never built), so output = true pairs ≥ threshold
-    (LSH only prunes). At 64×2 banding, P(miss) for s ≥ 0.6 is
-    ≤ (1-0.36)^64 ≈ 4e-13.
+    (p = 2^31-1; a_i*x fits a 64-bit long) over xxhash64 shingle keys
+    (``minhash_banded``); banding (64 bands × 2 rows) buckets candidate
+    pairs with an equi-join (never a cross join); candidates are then
+    verified with exact Jaccard computed ONLY for the candidate pairs
+    (candidate_jaccard — the full-corpus self-join is never built), so
+    output = true pairs ≥ threshold (LSH only prunes). At 64×2 banding,
+    P(miss) for s ≥ 0.6 is ≤ (1-0.36)^64 ≈ 4e-13.
     """
-    candidates, sh, _banded = minhash_band_candidates(
+    candidates, sets, _banded = minhash_band_candidates(
         corpus, n=n, num_hashes=num_hashes, bands=bands, max_freq=max_freq
     )
-    return candidate_jaccard(candidates, sh, sh, threshold)
+    return candidate_jaccard(candidates, sets, sets, threshold)
 
 
 def incremental_neardup_pairs(
@@ -375,7 +401,7 @@ def incremental_neardup_pairs(
     """Daily-batch incremental near-dup detection: (index_doc, new_doc,
     jaccard ≥ threshold) pairs linking each NEW document to the EXISTING
     corpus documents it near-duplicates. doc_ids must be globally unique
-    across both inputs (they key the Jaccard size lookups).
+    across both inputs (they key the verification's set lookups).
 
     This is the operation a running 100 TB pipeline performs daily: dedup
     today's crawl against the accumulated index WITHOUT re-joining the index
@@ -393,19 +419,19 @@ def incremental_neardup_pairs(
     applied as a hint-free LEFT ANTI join on both sides (same degrade-safe
     shape as ngram_jaccard's). Verification is ``candidate_jaccard`` — the
     self-join path's exact Jaccard on candidate pairs only — with each
-    pair's shingles and sizes read from its own side's table. (A union of
-    the two tables would defeat their caches when both sides derive from
-    one source, as they do in the query registry.) Both shingle tables are
-    persisted (each feeds banding + verification + sizes)."""
+    pair's set read from its own side's table. (A union of the two tables
+    would defeat their caches when both sides derive from one source, as
+    they do in the query registry.) Both shingle-set tables are persisted
+    (each feeds banding + verification)."""
     sh_new = shingles(new_docs, n=n, max_freq=None)
     sh_idx = shingles(index_docs, n=n, max_freq=None)
     if blacklist is not None:
         sh_new = sh_new.join(blacklist.select("shingle"), "shingle", "left_anti")
         sh_idx = sh_idx.join(blacklist.select("shingle"), "shingle", "left_anti")
-    sh_new = persist(sh_new)
-    sh_idx = persist(sh_idx)
-    b_new = minhash_banded(sh_new, num_hashes=num_hashes, bands=bands)
-    b_idx = minhash_banded(sh_idx, num_hashes=num_hashes, bands=bands)
+    sets_new = persist(shingle_sets(sh_new))
+    sets_idx = persist(shingle_sets(sh_idx))
+    b_new = minhash_banded(sets_new, num_hashes=num_hashes, bands=bands)
+    b_idx = minhash_banded(sets_idx, num_hashes=num_hashes, bands=bands)
     candidates = (
         b_idx.alias("a")
         .join(
@@ -416,7 +442,7 @@ def incremental_neardup_pairs(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    return candidate_jaccard(candidates, sh_idx, sh_new, threshold).select(
+    return candidate_jaccard(candidates, sets_idx, sets_new, threshold).select(
         F.col("doc_a").alias("index_doc"),
         F.col("doc_b").alias("new_doc"),
         "jaccard",
@@ -433,9 +459,12 @@ def dedup_components(pairs: DataFrame) -> DataFrame:
     Iterative min-label propagation with pointer halving: each round every
     node takes the min label over itself and its neighbors (self-edges fold
     the "own label" case into the one join+agg), then jumps to its label's
-    label — converging in O(log diameter) rounds. The driver loop's only
-    scalar action is a changed-row count per round — no data ever collects
-    to the driver.
+    label — converging in O(log diameter) rounds. Every label starts as the
+    node's own id, so round 1 needs no label table: it is ``min(b)`` over
+    the edges. Each round's aggregate also reads the node's previous label
+    off its self-edge, and the changed-label count is an ``Observation`` on
+    the round's one materialization — no extra join and no count job, and
+    no data ever collects to the driver.
 
     Iteration state is cut from lineage with ``localCheckpoint`` (the
     standard Spark iterative-algorithm pattern): per-round plans reference a
@@ -477,57 +506,45 @@ def dedup_components(pairs: DataFrame) -> DataFrame:
         .select("e.a", "e.b")
         .distinct()
     )
-    labels = local_checkpoint(
-        edges.select(F.col("a").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-    )
+    # (a, b, nl): every edge with b's current label — round 1's labels are
+    # the ids themselves
+    labelled = edges.withColumn("nl", F.col("b"))
+    labels = None
     while True:
-        # one materialization per round: propagate + pointer-halve + attach
-        # the previous label, checkpoint the wide (doc_id, label, old) frame,
-        # then read the changed-count off the materialized RDD — a narrow
-        # scan, not the shuffle join the old 3-job round paid. ``stepped``
-        # is deliberately NOT checkpointed: its two references share one
+        # one materialization per round: propagate, read the old label off
+        # the self-edge, pointer-halve, checkpoint. ``stepped`` is
+        # deliberately NOT checkpointed: its two references share one
         # subtree whose exchange the planner reuses (ReusedExchange), so
         # folding it into the round's single job drops a whole
         # materialize+job cycle per round with no recompute.
-        stepped = (
-            edges.join(
-                labels.select(
-                    F.col("doc_id").alias("b"), F.col("label").alias("nl")
-                ),
-                "b",
-            )
-            .groupBy("a")
-            .agg(F.min("nl").alias("label"))
-            .select(F.col("a").alias("doc_id"), "label")
+        stepped = labelled.groupBy(F.col("a").alias("doc_id")).agg(
+            F.min("nl").alias("label"),
+            F.max(F.when(F.col("a") == F.col("b"), F.col("nl"))).alias("old"),
         )
         # pointer halving: label ← label(label) (min-monotone, only lowers)
+        halved = stepped.join(
+            stepped.select(F.col("doc_id").alias("label"), F.col("label").alias("l2")),
+            "label",
+            "left",
+        ).select("doc_id", F.coalesce("l2", "label").alias("label"), "old")
+        obs = Observation()
         new_labels = local_checkpoint(
-            stepped.join(
-                stepped.select(
-                    F.col("doc_id").alias("label"), F.col("label").alias("l2")
-                ),
-                "label",
-                "left",
-            )
-            .join(
-                labels.select("doc_id", F.col("label").alias("old")), "doc_id"
-            )
-            .select(
-                "doc_id", F.coalesce("l2", "label").alias("label"), "old"
-            )
-        )
-        changed = (
-            new_labels.filter(F.col("label") != F.col("old")).count()
+            halved.observe(
+                obs, F.count(F.when(F.col("label") != F.col("old"), 1)).alias("changed")
+            ).select("doc_id", "label")
         )
         # new_labels is materialized and carries everything the next round
         # needs — free the previous round's checkpoint so storage stays
         # O(1) across rounds
-        release(labels)
+        if labels is not None:
+            release(labels)
         labels = new_labels
-        if changed == 0:
+        if obs.get["changed"] == 0:
             break
+        labelled = edges.join(
+            labels.select(F.col("doc_id").alias("b"), F.col("label").alias("nl")),
+            "b",
+        )
     release(edges)  # converged: no further propagation rounds
     return labels.select("doc_id", F.col("label").alias("keeper_id"))
 

@@ -95,7 +95,9 @@ def chunk_dedup(corpus: DataFrame, chunk_words: int = 20) -> DataFrame:
     (doc_id, text [surviving chunks joined], n_chunks, n_kept); a fully
     duplicated doc survives as an empty string with n_kept = 0.
     """
-    words = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
+    # the words are a column below the chunking lambda: a split written
+    # inside it would re-split the text once per chunk
+    words = F.col("_words")
     n_chunks = F.ceil(F.size(words) / F.lit(chunk_words)).cast("int")
     chunks = F.when(F.size(words) > 0, F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
@@ -104,8 +106,9 @@ def chunk_dedup(corpus: DataFrame, chunk_words: int = 20) -> DataFrame:
         ),
     )).otherwise(F.array().cast("array<string>"))
     exploded = corpus.select(
-        "doc_id", F.posexplode_outer(chunks).alias("idx", "chunk")
-    )
+        "doc_id",
+        F.filter(F.split(F.col("text"), " "), lambda t: t != "").alias("_words"),
+    ).select("doc_id", F.posexplode_outer(chunks).alias("idx", "chunk"))
     # phase 1: first occurrence per chunk content (hash agg, partial combine)
     keepers = (
         exploded.filter(F.col("chunk").isNotNull())

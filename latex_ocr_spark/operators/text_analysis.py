@@ -537,7 +537,9 @@ def decontaminate(
     Emits every corpus doc with ``n_hits`` (0 = clean) so the caller
     chooses the policy (drop, downweight, audit)."""
     def grams(df: DataFrame) -> DataFrame:
-        words = F.split(F.lower(F.col("text")), " ")
+        # the words column is split once below the lambda (Spark does not
+        # share a split written inside it across the lambda's calls)
+        words = F.col("_words")
         gram = F.transform(
             F.sequence(
                 F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1))
@@ -546,9 +548,12 @@ def decontaminate(
                 " ", F.slice(words, i, F.lit(n))
             ),
         )
-        return df.select(
-            "doc_id", F.explode(gram).alias("g")
-        ).filter(F.size(F.split(F.col("g"), " ")) == n).distinct()
+        return (
+            df.select("doc_id", F.split(F.lower(F.col("text")), " ").alias("_words"))
+            .select("doc_id", F.explode(gram).alias("g"))
+            .filter(F.size(F.split(F.col("g"), " ")) == n)
+            .distinct()
+        )
 
     bench_g = grams(benchmark).select("g").distinct()
     hits = (
@@ -579,23 +584,40 @@ def repetition_ratio(
     end; the only cost is the transform over each doc's own token list.
     ``keep_text`` carries the document through so a pipeline stage can gate
     on the ratio without a join back (the gate query wants the scores
-    alone)."""
-    words = F.split(F.lower(F.col("text")), " ")
-    grams = F.filter(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(words, i, F.lit(n))),
-        ),
-        lambda g: F.size(F.split(g, " ")) == n,
-    )
+    alone).
+
+    The words and the n-gram array are each computed once per row, as
+    columns below the expressions that read them: Spark does not share a
+    subexpression across a lambda's calls, so a ``split`` inside the
+    ``transform`` would re-split the text per n-gram (quadratic in document
+    length). A doc shorter than n words has no n-grams."""
+    words, grams = F.col("_words"), F.col("_grams")
     total = F.size(grams)
-    return corpus.select(
-        "doc_id",
-        *(["text"] if keep_text else []),
-        total.alias("n_grams"),
-        F.when(total > 0,
-               F.round(1.0 - F.size(F.array_distinct(grams)) / total, 4)
-               ).otherwise(F.lit(0.0)).cast("double").alias("rep_ratio"),
+    return (
+        corpus.select(
+            "doc_id", "text", F.split(F.lower(F.col("text")), " ").alias("_words")
+        )
+        .select(
+            "doc_id",
+            "text",
+            F.when(
+                F.size(words) >= n,
+                F.transform(
+                    F.sequence(F.lit(1), F.size(words) - (n - 1)),
+                    lambda i: F.concat_ws(" ", F.slice(words, i, F.lit(n))),
+                ),
+            )
+            .otherwise(F.array().cast("array<string>"))
+            .alias("_grams"),
+        )
+        .select(
+            "doc_id",
+            *(["text"] if keep_text else []),
+            total.alias("n_grams"),
+            F.when(total > 0,
+                   F.round(1.0 - F.size(F.array_distinct(grams)) / total, 4)
+                   ).otherwise(F.lit(0.0)).cast("double").alias("rep_ratio"),
+        )
     )
 
 

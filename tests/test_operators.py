@@ -4,6 +4,7 @@ tools/check_oracles.py and the driver's correctness gate)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -62,6 +63,25 @@ def test_minhash_lsh_equals_exact_jaccard(spark, dup_corpus):
         for r in D.minhash_lsh_pairs(dup_corpus, n=3, threshold=0.5).collect()
     }
     assert lsh == exact  # verify step removes FPs; banding recall = 1.0 here
+
+
+def test_min_hashes_fold_across_slice_boundaries():
+    """The signing kernel builds its hash matrix SIGN_SLICE_KEYS keys at a
+    time; docs that straddle one or two slice boundaries sign exactly as a
+    direct (keys × hashes) numpy reference does."""
+    k = D.SIGN_SLICE_KEYS
+    rng = np.random.default_rng(7)
+    p = 2147483647
+    A = 1 + rng.integers(0, p - 1, 128)
+    B = rng.integers(0, p, 128)
+    sizes = [3, k - 2, k + 5, 2 * k + 7, 1]  # boundaries fall inside docs 1-3
+    offsets = np.concatenate([[0], np.cumsum(sizes)])
+    x = rng.integers(0, p, offsets[-1])
+    want = np.stack([
+        ((x[a:b, None] * A + B) % p).min(axis=0)
+        for a, b in zip(offsets[:-1], offsets[1:])
+    ])
+    np.testing.assert_array_equal(D._min_hashes(x, offsets, A, B, p), want)
 
 
 def test_simhash_identical_for_exact_dups_and_close_for_near_dups(spark, dup_corpus):

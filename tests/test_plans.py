@@ -12,15 +12,17 @@ chunk_dedup's window-free keeper (test_packing.py)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from latex_ocr_spark.config import ModelConfig
+from latex_ocr_spark.eval.metrics import token_edit_distance_score
 from latex_ocr_spark.frames import scope
 from latex_ocr_spark.operators import dedup as D
 from latex_ocr_spark.operators import relational as R
 from latex_ocr_spark.operators import similarity as S
 from latex_ocr_spark.operators import text_analysis as TA
 from latex_ocr_spark.operators.lm import lm_score
-from latex_ocr_spark.operators.packing import pack_sequences
+from latex_ocr_spark.operators.packing import chunk_dedup, pack_sequences
 from latex_ocr_spark.pipeline import composed_training_pipeline
 from latex_ocr_spark.sources import read_docs
 from tests.conftest import SF_DIR
@@ -317,3 +319,41 @@ def test_jaccard_cap_is_broadcast_anti_join(spark):
         )
         anti = [j for j in _joins(executed_nodes(jc)) if _join_type(j) == "LeftAnti"]
     assert anti and all(name(j) == "BroadcastHashJoinExec" for j in anti)
+
+
+def _split_under_lambda(df) -> set[str]:
+    """The ``split``/``lower`` expressions (by class) that sit inside a
+    lambda function anywhere in ``df``'s optimized plan."""
+    found, nodes = set(), [df._jdf.queryExecution().optimizedPlan()]
+    while nodes:
+        node = nodes.pop()
+        nodes += seq(node.children())
+        exprs = [(e, False) for e in seq(node.expressions())]
+        while exprs:
+            e, in_lambda = exprs.pop()
+            if in_lambda and name(e) in ("StringSplit", "Lower"):
+                found.add(name(e))
+            in_lambda = in_lambda or name(e) == "LambdaFunction"
+            exprs += [(c, in_lambda) for c in seq(e.children())]
+    return found
+
+
+SPLITTING_QUERIES = {
+    "shingles": lambda docs: D.shingles(docs, n=3),
+    "repetition_ratio": lambda docs: TA.repetition_ratio(docs, keep_text=True),
+    "decontaminate": lambda docs: TA.decontaminate(docs, docs.limit(5)),
+    "chunk_dedup": lambda docs: chunk_dedup(docs, chunk_words=20),
+    "token_edit_distance": lambda docs: token_edit_distance_score(
+        docs.select(F.col("text").alias("ref"), F.upper("text").alias("hyp"))
+    ),
+}
+
+
+@pytest.mark.parametrize("key", SPLITTING_QUERIES)
+def test_text_split_once_per_row(spark, key):
+    """Operators that index into a text's words inside a lambda split the
+    text once per row, below the lambda. Spark does not share a
+    subexpression across a lambda's calls, so a split inside one re-splits
+    the whole text for every element it produces: quadratic in document
+    length."""
+    assert _split_under_lambda(SPLITTING_QUERIES[key](_docs(spark))) == set()

@@ -150,6 +150,7 @@ def test_job_cli_staged_pipeline(spark, tmp_path_factory):
     from latex_ocr_spark.operators.checkpoint import (
         DOWNSTREAM_STAGES,
         _lineage_records,
+        _read_stage,
         stage_done,
     )
     from latex_ocr_spark.frames import scope
@@ -181,6 +182,9 @@ def test_job_cli_staged_pipeline(spark, tmp_path_factory):
     assert set(mixed.columns) == {"doc_id", "text", "lang", "n_words", "rate"}
     assert curated.count() >= deduped.count() == budgeted.count() > 0
     assert 0 < mixed.count() <= budgeted.count()
+    # each stage writes exactly the schema the next stage reads it with
+    for stage, written in (("curate", curated), ("dedup", deduped), ("budget", budgeted)):
+        assert _read_stage(spark, out, stage).schema == written.schema, stage
 
     # lineage: exactly one row per downstream stage, partition rows untouched
     for status in ("curated", "deduped", "budgeted", "mixed"):
@@ -252,6 +256,40 @@ def test_dedup_stage_releases_lsh_caches(spark, tmp_path, monkeypatch):
     assert row["n_docs"] == 2  # the near-dup pair collapses to its keeper
     assert len(cached) == 2
     assert [f.storageLevel for f in cached] == [StorageLevel.NONE] * 2
+
+
+# Spark jobs the dedup stage runs on the fixture below: 45 (every run) when
+# the LSH path signed and verified shingle rows; 29-31 since it signs and
+# verifies per-doc shingle sets (adaptive execution's stage-submission
+# timing moves the two propagation rounds' count by up to two)
+DEDUP_STAGE_MAX_JOBS = 31
+
+
+def test_dedup_stage_job_count(spark, tmp_path):
+    """At daily-batch sizes the dedup stage pays per Spark job, not per
+    row: on a fixed 10-doc fixture (a 4-doc near-dup cluster, an exact
+    copy, 5 unique docs; two propagation rounds) it keeps the right
+    survivors in at most DEDUP_STAGE_MAX_JOBS jobs."""
+    from latex_ocr_spark.operators.checkpoint import run_dedup_stage
+
+    words = [f"w{i}" for i in range(60)]
+    rows = [(10 + k, " ".join(words[2 * k : 2 * k + 24])) for k in range(4)]
+    rows.append((20, rows[0][1]))
+    rows += [(30 + k, " ".join(f"u{k}x{i}" for i in range(15))) for k in range(5)]
+    out = str(tmp_path)
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        f"{out}/curated"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("dedup-stage-jobs", "dedup stage")
+    try:
+        row = run_dedup_stage(spark, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    survivors = {r.doc_id for r in spark.read.parquet(f"{out}/deduped").collect()}
+    assert survivors == {10, 30, 31, 32, 33, 34} and row["n_docs"] == 6
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("dedup-stage-jobs"))
+    assert n_jobs <= DEDUP_STAGE_MAX_JOBS, n_jobs
 
 
 def test_curate_stage_releases_gated_cache(spark, tmp_path, monkeypatch):
