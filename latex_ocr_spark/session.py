@@ -26,6 +26,13 @@ where they cannot, the first UDF fails with the daemon's
 spark-defaults and makes the package importable by the executors' Python at
 start-up (site-packages or the executors' ``PYTHONPATH``): the daemon imports
 it before any task has run.
+
+Every master, ``None`` included, sizes Spark's generated-class cache
+(``spark.sql.codegen.cache.maxEntries``) to 1000 entries. At Spark's default
+of 100, a warm daily pass, whose chain needs about 140 classes, evicted each
+class before its next use and recompiled 124-130 of them per pass (SCALE.md,
+pathology 10). It is a static conf, fixed when the session is built: a
+``getOrCreate`` that finds a running session keeps that session's value.
 """
 
 from __future__ import annotations
@@ -126,7 +133,7 @@ def get_spark(
     job.py passes None so ``spark-submit --master yarn/k8s --py-files ...``
     controls placement). Local masters set the workers'
     ``OPENBLAS_CORETYPE`` (``worker_blas_core``) and their daemon module
-    (``worker_daemon``); an ``extra`` entry for either wins."""
+    (``worker_daemon``). An ``extra`` entry wins over any of these confs."""
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -157,6 +164,17 @@ def get_spark(
         # file count >> cores, load-bearing for small partitions of a pruned
         # read).
         .config("spark.sql.files.minPartitionNum", str(cores))
+        # Generated classes kept per JVM, an LRU (Spark's default 100): a
+        # loop over more classes than it holds evicts each before its next
+        # use. Compilations on an emptied cache, 4 cores: the daily chain
+        # (run_with_checkpoint plus the four stages) 136-141 on sf0.01 and
+        # 137 on perfbench's daily_job; composed_training_pipeline 121, the
+        # registry's largest query. At 100, each warm daily_job pass
+        # recompiled 124-130 classes (0.9-1.3 s of Janino); at 1000, 0-13,
+        # the adaptive planner's plan variants. An entry pins about 8 kB of
+        # metaspace (SCALE.md, pathology 10). Static: the JVM sizes the
+        # cache once, at its first compile.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if master is not None and master.startswith("local"):
         core = worker_blas_core(loaded_blas_core(), _cpu_flags())

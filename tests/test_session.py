@@ -132,7 +132,8 @@ def test_python_workers_load_the_core_the_rule_picks(spark):
 def test_caller_extra_blas_core_wins():
     """A caller's own ``spark.executorEnv.OPENBLAS_CORETYPE`` and
     ``spark.python.daemon.module`` are what the built session holds and what
-    its workers run. Runs in a subprocess: executor env and the daemon are
+    its workers run; its own ``spark.sql.codegen.cache.maxEntries`` is the
+    session's too. Runs in a subprocess: executor env and the daemon are
     fixed when the SparkContext starts."""
     script = textwrap.dedent(
         """
@@ -142,8 +143,10 @@ def test_caller_extra_blas_core_wins():
         from tests.test_session import worker_core, worker_zip_state
         s = get_spark("blas-extra", cores=1, shuffle_partitions=1,
                       extra={"spark.executorEnv.OPENBLAS_CORETYPE": "Prescott",
-                             "spark.python.daemon.module": "pyspark.daemon"})
+                             "spark.python.daemon.module": "pyspark.daemon",
+                             "spark.sql.codegen.cache.maxEntries": "50"})
         conf = s.sparkContext.getConf()
+        print("CODEGEN", s.conf.get("spark.sql.codegen.cache.maxEntries"))
         print("CONF", conf.get("spark.executorEnv.OPENBLAS_CORETYPE"))
         print("WORKER", worker_core(s) or "-")
         print("DAEMON_CONF", conf.get("spark.python.daemon.module"))
@@ -156,8 +159,9 @@ def test_caller_extra_blas_core_wins():
         [sys.executable, "-c", script, REPO], env=env, cwd=REPO,
         capture_output=True, text=True, timeout=300, check=True,
     ).stdout
-    keys = ("CONF ", "WORKER ", "DAEMON_CONF ", "DAEMON ")
+    keys = ("CONF ", "WORKER ", "DAEMON_CONF ", "DAEMON ", "CODEGEN ")
     lines = dict(ln.split(" ", 1) for ln in out.splitlines() if ln.startswith(keys))
     assert lines["CONF"] == "Prescott"
     assert lines["WORKER"] in ("Prescott", "-")
     assert lines["DAEMON_CONF"] == lines["DAEMON"] == "pyspark.daemon"
+    assert lines["CODEGEN"] == "50"
