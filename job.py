@@ -55,6 +55,11 @@ def build_config(profile: str, decoding: str | None) -> ModelConfig:
     return cfg
 
 
+def _parse_kv(spec: str, cast) -> dict:
+    """'en=10000,fr=4000' → {'en': cast('10000'), 'fr': cast('4000')}."""
+    return {k: cast(v) for k, v in (kv.split("=", 1) for kv in spec.split(","))}
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--input", required=True, help="corpus dir (docs/ + media/)")
@@ -163,15 +168,9 @@ def main(argv: list[str] | None = None) -> int:
             if args.benchmark:
                 mix_opts["benchmark_dir"] = args.benchmark
             if args.budgets:
-                mix_opts["budgets"] = {
-                    kv.split("=")[0]: int(kv.split("=")[1])
-                    for kv in args.budgets.split(",")
-                }
+                mix_opts["budgets"] = _parse_kv(args.budgets, int)
             if args.upsample:
-                mix_opts["upsample_factors"] = {
-                    kv.split("=")[0]: float(kv.split("=")[1])
-                    for kv in args.upsample.split(",")
-                }
+                mix_opts["upsample_factors"] = _parse_kv(args.upsample, float)
             results = run_daily_pipeline(
                 spark, extracted, args.output, stages=stages, resume=resume,
                 mix_opts=mix_opts,

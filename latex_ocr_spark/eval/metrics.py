@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators import text_analysis as TA
+
 
 def exact_match_rate(pairs: DataFrame, ref: str = "ref", hyp: str = "hyp") -> DataFrame:
     """avg(ref == hyp) — whole-token-sequence equality on the joined strings."""
@@ -64,7 +66,7 @@ def token_edit_distance_score(
 
     agg = (
         pairs.select(
-            F.split(F.col(ref), " ").alias("_rw"), F.split(F.col(hyp), " ").alias("_hw")
+            TA.tokens(F.col(ref)).alias("_rw"), TA.tokens(F.col(hyp)).alias("_hw")
         )
         .select(rw, hw, F.array_distinct(F.concat(rw, hw)).alias("_toks"))
         .select(enc(rw).alias("_r"), enc(hw).alias("_h"))
@@ -82,17 +84,6 @@ def _ngram_counts(tokens: list[str], n: int) -> Counter:
     return Counter(tuple(tokens[i : i + n]) for i in range(len(tokens) - n + 1))
 
 
-def _grams_expr(words_col: str, n: int):
-    """Array of space-joined n-grams as a built-in expression. The size guard
-    matters: sequence(1, 0) yields a DESCENDING [1, 0], not an empty array."""
-    return F.expr(
-        f"CASE WHEN size({words_col}) >= {n} THEN "
-        f"transform(sequence(1, size({words_col}) - {n - 1}), "
-        f"i -> array_join(slice({words_col}, i, {n}), ' ')) "
-        f"ELSE array() END"
-    )
-
-
 def bleu4_relational(pairs: DataFrame, ref: str = "ref", hyp: str = "hyp") -> DataFrame:
     """Corpus BLEU-4 as a single relational plan (no UDF, no driver math):
     n-grams for orders 1–4 exploded in one pass, clipped counts via a
@@ -108,8 +99,8 @@ def bleu4_relational(pairs: DataFrame, ref: str = "ref", hyp: str = "hyp") -> Da
     # (min(2a,2b) = 2·min(a,b) when the pairs are equal).
     base = pairs.select(
         F.xxhash64(F.col(ref), F.col(hyp)).alias("pair_id"),
-        F.split(F.col(ref), " ").alias("rw"),
-        F.split(F.col(hyp), " ").alias("hw"),
+        TA.tokens(F.col(ref)).alias("rw"),
+        TA.tokens(F.col(hyp)).alias("hw"),
     )
 
     def gram_counts(words_col: str):
@@ -120,7 +111,8 @@ def bleu4_relational(pairs: DataFrame, ref: str = "ref", hyp: str = "hyp") -> Da
 
         structs = F.flatten(
             F.array(
-                *[F.transform(_grams_expr(words_col, n), tag(n)) for n in range(1, 5)]
+                *[F.transform(TA.ngrams(F.col(words_col), n), tag(n))
+                  for n in range(1, 5)]
             )
         )
         return (

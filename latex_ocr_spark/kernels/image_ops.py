@@ -82,15 +82,3 @@ def preprocess(rgb: np.ndarray, buckets=BUCKETS) -> tuple[np.ndarray, int, int, 
     cropped, ok = crop_to_content(gray)
     canvas, bw, bh = pad_to_bucket(cropped, buckets=buckets)
     return downsample(canvas), bw, bh, ok
-
-
-def pad_batch_images(images: list[np.ndarray]) -> np.ndarray:
-    """G3 — pad a list of (H,W) uint8 images to the per-batch max shape with
-    255 and stack (/root/reference/model/utils/image.py:15-44). Returns
-    uint8 (N, H*, W*)."""
-    hs = [im.shape[0] for im in images]
-    ws = [im.shape[1] for im in images]
-    out = np.full((len(images), max(hs), max(ws)), 255, dtype=np.uint8)
-    for i, im in enumerate(images):
-        out[i, : im.shape[0], : im.shape[1]] = im
-    return out

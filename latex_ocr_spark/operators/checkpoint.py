@@ -18,6 +18,7 @@ import json
 import os
 import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -25,8 +26,10 @@ from pyspark.sql import functions as F
 from ..config import ModelConfig, PipelineConfig
 from ..frames import scope
 from ..pipeline import broadcast_weights, extract_spans
-from ..operators.reassemble import flat_text, reassemble
 from ..sources import read_docs
+from . import dedup as D
+from . import text_analysis as TA
+from .reassemble import flat_text, reassemble
 
 
 def _ckpt_path(out_dir: str) -> str:
@@ -186,7 +189,7 @@ def run_with_checkpoint(
         F.lit(0),
         lambda acc, s: acc
         + F.when(
-            s["kind"] == F.lit("media"), F.size(F.split(s["text"], " "))
+            s["kind"] == F.lit("media"), F.size(TA.tokens(s["text"]))
         ).otherwise(0),
     )
     aggs = (
@@ -221,30 +224,32 @@ def run_with_checkpoint(
 # checkpointed once the write has run.
 # ---------------------------------------------------------------------------
 
-DOWNSTREAM_STAGES = ("curate", "dedup", "budget", "mix")
-# stage name → lineage status, which also names the stage's output subdir
-_STAGE_STATUS = {
-    "curate": "curated",
-    "dedup": "deduped",
-    "budget": "budgeted",
-    "mix": "mixed",
+class _Stage(NamedTuple):
+    # lineage status, which also names the stage's output subdir
+    status: str
+    # the schema of the output the stage writes. The next stage reads its
+    # predecessor's output with it: a schema-less parquet read would run a
+    # footer-inference job per read. The mix stage's output is read by no
+    # stage and its columns depend on its options, so it has none.
+    schema: str | None
+
+
+_STAGES = {
+    "curate": _Stage("curated", "doc_id bigint, text string"),
+    "dedup": _Stage("deduped", "doc_id bigint, text string"),
+    "budget": _Stage(
+        "budgeted",
+        "doc_id bigint, text string, n_words int, n_subwords bigint, n_chars int",
+    ),
+    "mix": _Stage("mixed", None),
 }
-# stage name → the schema of the output it writes. The next stage reads its
-# predecessor's output with it: a schema-less parquet read would run a
-# footer-inference job per read. The mix stage's output is read by no stage
-# and its columns depend on its options, so it has none.
-_STAGE_SCHEMA = {
-    "curate": "doc_id bigint, text string",
-    "dedup": "doc_id bigint, text string",
-    "budget": "doc_id bigint, text string, n_words int, n_subwords bigint, n_chars int",
-}
+DOWNSTREAM_STAGES = tuple(_STAGES)
 
 
 def _read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
     """``stage``'s materialized output, read with its declared schema."""
-    return spark.read.schema(_STAGE_SCHEMA[stage]).parquet(
-        os.path.join(out_dir, _STAGE_STATUS[stage])
-    )
+    status, schema = _STAGES[stage]
+    return spark.read.schema(schema).parquet(os.path.join(out_dir, status))
 
 
 def stage_done(spark: SparkSession, out_dir: str, stage: str) -> bool:
@@ -260,7 +265,7 @@ def stage_done(spark: SparkSession, out_dir: str, stage: str) -> bool:
     newest: dict[str, int] = {}
     for _, status, mtime in _lineage_records(spark, out_dir):
         newest[status] = max(newest.get(status, 0), mtime)
-    status = _STAGE_STATUS[stage]
+    status = _STAGES[stage].status
     return status in newest and newest[status] >= newest.get("done", 0)
 
 
@@ -270,40 +275,31 @@ def run_curate_stage(
 ) -> dict:
     """Stage 2: language + quality gates + exact fingerprint dedup over the
     flattened extraction output → ``out_dir/curated`` (doc_id, text)."""
-    from . import text_analysis as TA
-
     curated = TA.curate_corpus(flat_text(read_docs(spark, extracted_dir)))
-    return _write_and_mark(spark, out_dir, curated, _STAGE_STATUS["curate"])
+    return _write_and_mark(spark, out_dir, curated, _STAGES["curate"].status)
 
 
 @scope()
 def run_dedup_stage(spark: SparkSession, out_dir: str) -> dict:
-    """Stage 3: MinHash-LSH near-dup pair generation + dedup_apply over the
+    """Stage 3: the near-dup step (``dedup.drop_near_dups``) over the
     materialized curated corpus → ``out_dir/deduped`` (doc_id, text). Both
     consumers of the curated frame scan its parquet — no recompute of the
     curation gates."""
-    from . import dedup as D
-
-    curated = _read_stage(spark, out_dir, "curate")
-    survivors = D.dedup_apply(
-        curated, D.minhash_lsh_pairs(curated, n=3, threshold=0.5)
-    )
-    return _write_and_mark(spark, out_dir, survivors, _STAGE_STATUS["dedup"])
+    survivors = D.drop_near_dups(_read_stage(spark, out_dir, "curate"))
+    return _write_and_mark(spark, out_dir, survivors, _STAGES["dedup"].status)
 
 
 @scope()
 def run_budget_stage(spark: SparkSession, out_dir: str) -> dict:
     """Stage 4: token budget (words / greedy-BPE subwords / chars) over the
     deduped survivors → ``out_dir/budgeted`` (doc_id, text + counts)."""
-    from . import text_analysis as TA
-
     deduped = _read_stage(spark, out_dir, "dedup")
     budget = TA.token_count(deduped, keep_text=True)
     return _write_and_mark(
         spark,
         out_dir,
         budget,
-        _STAGE_STATUS["budget"],
+        _STAGES["budget"].status,
         (F.sum("n_subwords").alias("n_tokens"),),
     )
 
@@ -344,8 +340,6 @@ def run_mix_stage(
     Unset knobs skip their gate, so the stage degrades gracefully from the
     full mix to a repetition-only pass. The n_words lineage metric rides
     the sampled output when budgets or upsample factors apply."""
-    from . import text_analysis as TA
-
     corpus = _read_stage(spark, out_dir, "budget").select("doc_id", "text")
     mixed = (
         TA.repetition_ratio(corpus, keep_text=True)
@@ -370,17 +364,12 @@ def run_mix_stage(
         )
     if upsample_factors:
         if "lang" not in mixed.columns:
-            mixed = mixed.withColumn(
-                "lang", TA._lang_pred_expr(F.col("text"))
-            )
+            mixed = mixed.withColumn("lang", TA.lang_pred_expr(F.col("text")))
         mixed = TA.upsample_mix(
             mixed, upsample_factors, keep_text=True
-        ).withColumn(
-            "n_words",
-            F.size(F.filter(F.split(F.col("text"), " "), lambda t: t != "")),
-        )
+        ).withColumn("n_words", TA.n_words(F.col("text")))
     aggs = (F.sum("n_words").alias("n_tokens"),) if budgets or upsample_factors else ()
-    return _write_and_mark(spark, out_dir, mixed, _STAGE_STATUS["mix"], aggs)
+    return _write_and_mark(spark, out_dir, mixed, _STAGES["mix"].status, aggs)
 
 
 def run_daily_pipeline(

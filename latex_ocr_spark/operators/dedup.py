@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..frames import local_checkpoint, persist, release
+from . import text_analysis as TA
 
 # Skew cap: shingles appearing in more than this many documents are dropped
 # before ANY join (both the exact self-join and the LSH signature build).
@@ -99,7 +100,7 @@ def shingles(corpus: DataFrame, n: int = 3, max_freq: int | None = None) -> Data
         return F.concat(*parts)  # concat (not concat_ws): NULL word → NULL shingle
 
     sh = (
-        corpus.select("doc_id", F.split(F.col("text"), " ").alias("_words"))
+        corpus.select("doc_id", TA.tokens(F.col("text")).alias("_words"))
         .select(
             "doc_id",
             F.explode(
@@ -570,6 +571,24 @@ def dedup_apply(corpus: DataFrame, pairs: DataFrame) -> DataFrame:
     return corpus.join(non_keepers, "doc_id", "left_anti")
 
 
+# The daily near-dup step's shingle width and Jaccard threshold.
+NEAR_DUP_N = 3
+NEAR_DUP_THRESHOLD = 0.5
+
+
+def drop_near_dups(corpus: DataFrame) -> DataFrame:
+    """The daily pipeline's near-dup step: MinHash-LSH pairs at
+    ``NEAR_DUP_N``-word shingles and Jaccard ≥ ``NEAR_DUP_THRESHOLD``, then
+    ``dedup_apply``. The composed ``curate_and_budget`` and the staged
+    dedup job both call it, so the two cannot drift apart. ``corpus`` feeds
+    both the pair generation and the anti-join: pass a persisted or
+    materialized frame."""
+    return dedup_apply(
+        corpus,
+        minhash_lsh_pairs(corpus, n=NEAR_DUP_N, threshold=NEAR_DUP_THRESHOLD),
+    )
+
+
 def simhash_64(corpus: DataFrame) -> DataFrame:
     """64-bit SimHash per document from md5-derived word-hash bits —
     (doc_id, simhash).
@@ -580,12 +599,11 @@ def simhash_64(corpus: DataFrame) -> DataFrame:
     DuckDB oracle can derive the exact same bits from string ops; the whole
     thing stays built-in expressions inside whole-stage codegen, no UDF.
     """
-    words = corpus.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.col("w") != "")
     hexd = F.md5("w")
     # 16 hex-digit values (0..15), one projection
-    vals = words.select(
+    vals = corpus.select(
+        "doc_id", F.explode(TA.words(F.col("text"))).alias("w")
+    ).select(
         "doc_id",
         *[
             (F.instr(F.lit("0123456789abcdef"), F.substring(hexd, d + 1, 1)) - 1)

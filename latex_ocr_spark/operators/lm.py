@@ -30,17 +30,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..frames import persist
+from . import text_analysis as TA
 
 
 def doc_bigrams(corpus: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, w1, w2) — one row per in-document bigram occurrence.
 
-    Tokenization is the module-standard whitespace split with empties
-    dropped (same as token_count). Docs with < 2 tokens contribute no rows:
-    the `when` guard leaves NULL and explode drops it — no separate filter
-    pass, and no Spark `sequence(a, b)` descending-sequence trap.
+    The tokens are the text's words (``text_analysis.words``, as in
+    token_count). Docs with < 2 words contribute no rows: the `when` guard
+    leaves NULL and explode drops it — no separate filter pass, and no
+    Spark `sequence(a, b)` descending-sequence trap.
     """
-    toks = F.filter(F.split(F.col(text_col), " "), lambda w: w != F.lit(""))
+    toks = TA.words(F.col(text_col))
     pairs = F.when(
         F.size(toks) >= 2,
         F.zip_with(

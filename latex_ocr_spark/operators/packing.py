@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import text_analysis as TA
+
 
 def _shard_expr(col, n_shards: int):
     """Deterministic uniform shard in [0, n_shards): first 6 hex chars of
@@ -52,11 +54,10 @@ def pack_sequences(
     """
     if n_shards is None:
         n_shards = max(corpus.sparkSession.sparkContext.defaultParallelism, 16)
-    words = F.split(F.col("text"), " ")
     base = corpus.select(
         "doc_id",
         _shard_expr(F.col("doc_id"), n_shards).alias("shard"),
-        F.size(F.filter(words, lambda w: w != "")).alias("n_words"),
+        TA.n_words(F.col("text")).alias("n_words"),
     )
     w = (
         Window.partitionBy("shard")
@@ -106,8 +107,7 @@ def chunk_dedup(corpus: DataFrame, chunk_words: int = 20) -> DataFrame:
         ),
     )).otherwise(F.array().cast("array<string>"))
     exploded = corpus.select(
-        "doc_id",
-        F.filter(F.split(F.col("text"), " "), lambda t: t != "").alias("_words"),
+        "doc_id", TA.words(F.col("text")).alias("_words")
     ).select("doc_id", F.posexplode_outer(chunks).alias("idx", "chunk"))
     # phase 1: first occurrence per chunk content (hash agg, partial combine)
     keepers = (
@@ -154,19 +154,18 @@ def stratified_split(
     corpus: DataFrame,
     fractions: tuple = (("train", 0.98), ("val", 0.01), ("test", 0.01)),
 ) -> DataFrame:
-    """Deterministic train/val/test assignment: the first 8 hex chars of
-    md5(doc_id) are a uniform draw on [0, 16^8); cumulative fraction
-    boundaries (rendered as 8-hex string literals, so the comparison is
-    engine-exact — same device as ``sample_to_budget``) carve it into
-    splits. Membership is a pure function of doc_id: stable under
-    repartitioning, appends, and reruns, and any engine reproduces it.
+    """Deterministic train/val/test assignment: cumulative fraction
+    boundaries, rendered as 8-hex string literals, carve each document's
+    uniform ``doc_draw()`` into splits (engine-exact, as in
+    ``sample_to_budget``). Membership is a pure function of doc_id: stable
+    under repartitioning, appends, and reruns, and any engine reproduces it.
 
     Pure per-row expressions — zero shuffles. Emits (doc_id, lang, split).
     """
     total = sum(f for _, f in fractions)
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"fractions must sum to 1, got {total}")
-    h = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8)
+    h = TA.doc_draw()
     cum = 0.0
     expr = F.lit(fractions[-1][0])  # fallback = last split
     cases = []

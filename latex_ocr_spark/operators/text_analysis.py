@@ -4,6 +4,27 @@ quality scoring, token counting, document fingerprinting.
 Every operator is a pure built-in-expression DataFrame transform (JVM-side,
 whole-stage-codegen; no Python in the hot path) with an exactly-equivalent
 DuckDB oracle formula in __spark_entry__.oracle_sql.
+
+The word-level primitives every text operator of the package builds on are
+defined here once, as built-in Column expressions:
+
+- ``tokens(text)``: the raw tokens, ``split(text, ' ')``. A double, leading
+  or trailing space yields an empty token and ``''`` splits to ``['']``;
+- ``words(text)``: the non-empty tokens, and ``n_words(text)`` their count;
+- ``ngrams(toks, n)``: the space-joined n-grams of a token-array column,
+  empty below n tokens;
+- ``doc_draw()``: the uniform draw md5(doc_id) gives each document, and
+  ``draw_below(rate)``, true for a share ``rate`` of documents;
+- ``stopword_ratio(text)``: STOPWORDS hits per raw token, at 4 dp.
+
+Which split a signal reads is part of its definition, and the DuckDB
+oracles mirror it. Raw tokens: ``quality_score``'s counts and the stopword
+ratio (so the ``curate_corpus`` gate), the lexicon counts behind language
+ID, the repetition and decontamination n-grams, the dedup shingles, and the
+BLEU and token edit-distance metrics. Words: every word count a budget,
+sample or pack reads (``token_count``, ``quality_percentiles``,
+``sample_to_budget``, ``quality_weighted_sample``, packing, the mix stage),
+chunking, the LM bigrams, the tf-idf terms, SimHash and BPE learning.
 """
 
 from __future__ import annotations
@@ -105,9 +126,43 @@ def _bpe_subword_count(text_col):
     return (n_marks - n_seps).cast("long")
 
 
-def _count_words(text_col, words: list[str]):
-    """Tokens of ``text`` equal to any of ``words``:
-    size(filter(split(text, ' '), t -> t IN words)).
+def tokens(text_col: Column) -> Column:
+    """The raw single-space tokens of ``text_col``: split(text, ' ')."""
+    return F.split(text_col, " ")
+
+
+def words(text_col: Column) -> Column:
+    """The words of ``text_col``: its non-empty tokens."""
+    return F.filter(tokens(text_col), lambda t: t != "")
+
+
+def n_words(text_col: Column) -> Column:
+    """How many words ``text_col`` holds."""
+    return F.size(words(text_col))
+
+
+def ngrams(toks: Column, n: int) -> Column:
+    """The space-joined n-grams of the token array ``toks``; empty below n
+    tokens (the guard matters: ``sequence(1, 0)`` is the descending [1, 0],
+    not an empty array).
+
+    ``toks`` must be a column projected below this expression, never a
+    ``split``: Spark evaluates the lambda once per n-gram and shares no
+    subexpression across its calls, so a split inside it would re-split the
+    text per n-gram, quadratic in document length
+    (tests/test_plans.py::test_text_split_once_per_row)."""
+    return F.when(
+        F.size(toks) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, F.lit(n))),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def _count_words(text_col: Column, lexicon: list[str]) -> Column:
+    """Tokens of ``text`` equal to any of ``lexicon``:
+    size(filter(split(text, ' '), t -> t IN lexicon)).
 
     Exact even for adjacent repeats ("w w" counts 2) — the previous padded
     length-difference replace formula missed every second of an adjacent run
@@ -118,8 +173,40 @@ def _count_words(text_col, words: list[str]):
     len(list_filter(string_split(...), t -> t IN (...))) in DuckDB.
     """
     return F.size(
-        F.filter(F.split(text_col, " "), lambda t: t.isin(*words))
+        F.filter(tokens(text_col), lambda t: t.isin(*lexicon))
     ).cast("long")
+
+
+def stopword_ratio(text_col: Column) -> Column:
+    """STOPWORDS hits per raw token, rounded to 4 dp: the ``quality_score``
+    signal and half of its keep gate."""
+    return F.round(_count_words(text_col, STOPWORDS) / F.size(tokens(text_col)), 4)
+
+
+def doc_draw() -> Column:
+    """Each document's uniform draw on [0, 16^8): the first 8 hex chars of
+    md5(doc_id), compared as a string. md5 is engine-stable, so every
+    engine and every run draws the same value, and the id alone is hashed:
+    it is already unique, and hashing the text would cost a second
+    full-text pass for no extra entropy."""
+    return F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8)
+
+
+def draw_below(rate: Column) -> Column:
+    """True for a share ``rate`` of documents: ``doc_draw()`` sorts below
+    floor(rate · 16^8) rendered as 8 zero-padded hex digits. The threshold
+    is capped at 16^8 − 1: rate = 1.0 would render 9 hex digits, which lpad
+    truncates, while 'ffffffff' keeps all but the 1-in-4B exact match."""
+    threshold = F.lpad(
+        F.lower(F.hex(
+            F.least(
+                F.floor(rate * F.lit(4294967296.0)).cast("bigint"),
+                F.lit(4294967295),
+            )
+        )),
+        8, "0",
+    )
+    return doc_draw() < threshold
 
 
 def token_count(corpus: DataFrame, keep_text: bool = False) -> DataFrame:
@@ -128,11 +215,10 @@ def token_count(corpus: DataFrame, keep_text: bool = False) -> DataFrame:
     the number a training pipeline budgets against. ``keep_text`` carries
     the document text through (the materialized-corpus sink wants text +
     budget; the gate query wants the counts alone)."""
-    words = F.split(F.col("text"), " ")
     cols = ["doc_id"] + (["text"] if keep_text else [])
     return corpus.select(
         *cols,
-        F.size(F.filter(words, lambda w: w != "")).alias("n_words"),
+        n_words(F.col("text")).alias("n_words"),
         _bpe_subword_count(F.col("text")).alias("n_subwords"),
         F.length("text").alias("n_chars"),
     )
@@ -141,25 +227,20 @@ def token_count(corpus: DataFrame, keep_text: bool = False) -> DataFrame:
 def quality_score(corpus: DataFrame) -> DataFrame:
     """Length / punctuation / stopword-ratio quality signals, rounded to 4dp
     (float-stable across engines)."""
-    words = F.split(F.col("text"), " ")
-    n_words = F.size(words)
-    stop_hits = _count_words(F.col("text"), STOPWORDS)
+    n_tokens = F.size(tokens(F.col("text")))
     n_punct = F.length("text") - F.length(
         F.regexp_replace("text", r"[\.,;:!\?]", "")
     )
     avg_word_len = F.round(
-        (F.length("text") - (n_words - 1)) / n_words, 4
-    )  # chars excluding single separators / word count
+        (F.length("text") - (n_tokens - 1)) / n_tokens, 4
+    )  # chars excluding single separators / token count
     return corpus.select(
         "doc_id",
-        n_words.alias("n_words"),
-        F.round(stop_hits / n_words, 4).cast("double").alias("stopword_ratio"),
+        n_tokens.alias("n_words"),
+        stopword_ratio(F.col("text")).cast("double").alias("stopword_ratio"),
         F.round(n_punct / F.length("text"), 4).cast("double").alias("punct_ratio"),
         avg_word_len.cast("double").alias("avg_word_len"),
-        (
-            (n_words >= 8)
-            & (F.round(stop_hits / n_words, 4) >= 0.05)
-        ).cast("int").alias("quality_keep"),
+        _quality_keep_expr(F.col("text")).cast("int").alias("quality_keep"),
     )
 
 
@@ -170,7 +251,7 @@ def _lang_scores(text_col) -> dict:
     }
 
 
-def _lang_pred_expr(text_col, scores: dict | None = None):
+def lang_pred_expr(text_col, scores: dict | None = None):
     """argmax over marker-lexicon scores; alphabetical tie-break; 'und' when
     all scores are 0. Shared by language_id and curate_corpus."""
     scores = scores or _lang_scores(text_col)
@@ -188,12 +269,10 @@ def _lang_pred_expr(text_col, scores: dict | None = None):
 
 
 def _quality_keep_expr(text_col):
-    """The quality gate predicate (n_words >= 8 and stopword ratio >= 0.05)
-    with the exact rounding quality_score reports. Shared by quality_score
-    and curate_corpus."""
-    n_words = F.size(F.split(text_col, " "))
-    stop_hits = _count_words(text_col, STOPWORDS)
-    return (n_words >= 8) & (F.round(stop_hits / n_words, 4) >= 0.05)
+    """The quality gate predicate (at least 8 raw tokens and stopword ratio
+    >= 0.05) with the exact rounding quality_score reports. Shared by
+    quality_score and curate_corpus."""
+    return (F.size(tokens(text_col)) >= 8) & (stopword_ratio(text_col) >= 0.05)
 
 
 def language_id(corpus: DataFrame) -> DataFrame:
@@ -201,7 +280,7 @@ def language_id(corpus: DataFrame) -> DataFrame:
     whole-word marker hit count; ties broken by language code order; 'und'
     (undetermined) when all scores are 0."""
     scores = _lang_scores(F.col("text"))
-    sel = [corpus["doc_id"], _lang_pred_expr(F.col("text"), scores).alias("lang_pred")]
+    sel = [corpus["doc_id"], lang_pred_expr(F.col("text"), scores).alias("lang_pred")]
     sel += [scores[lang].alias(f"score_{lang}") for lang in sorted(scores)]
     return corpus.select(*sel)
 
@@ -225,13 +304,10 @@ def quality_percentiles(
     — so the exact path survives web-scale groups; for unbounded-
     cardinality signals switch to approx_percentile (t-digest sketch).
     """
-    words = F.split(F.col("text"), " ")
     per_doc = corpus.select(
-        _lang_pred_expr(F.col("text")).alias("lang_pred"),
-        F.size(F.filter(words, lambda w: w != "")).cast("long").alias("n_words"),
-        F.round(_count_words(F.col("text"), STOPWORDS) / F.size(words), 4)
-        .cast("double")
-        .alias("stopword_ratio"),
+        lang_pred_expr(F.col("text")).alias("lang_pred"),
+        n_words(F.col("text")).cast("long").alias("n_words"),
+        stopword_ratio(F.col("text")).cast("double").alias("stopword_ratio"),
     )
     pct = F.array(*[F.lit(float(p)) for p in ps])
     agg = per_doc.groupBy("lang_pred").agg(
@@ -278,13 +354,12 @@ def curate_by_percentile(
     evaluate once per row, not once per subtree (the curate_corpus
     pattern; the caller's ``frames.scope()`` releases it).
     """
-    words = F.split(F.col("text"), " ")
     gated = persist(
         corpus.select(
             "doc_id",
             "text",
-            _lang_pred_expr(F.col("text")).alias("lang_pred"),
-            F.size(F.filter(words, lambda w: w != "")).cast("long").alias("n_words"),
+            lang_pred_expr(F.col("text")).alias("lang_pred"),
+            n_words(F.col("text")).cast("long").alias("n_words"),
         )
         .filter(F.col("lang_pred") == lang)
     )
@@ -319,7 +394,7 @@ def curate_corpus(corpus: DataFrame, lang: str = "en") -> DataFrame:
     ``frames.scope()`` releases that cache."""
     gated = persist(
         corpus.filter(
-            (_lang_pred_expr(F.col("text")) == lang)
+            (lang_pred_expr(F.col("text")) == lang)
             & _quality_keep_expr(F.col("text"))
         ).withColumn("fp_md5", content_fp())
     )
@@ -488,11 +563,10 @@ def tfidf_top_terms(corpus: DataFrame, k: int = 3) -> DataFrame:
 
     Ranking tie-break is (tfidf DESC, term ASC) so top-k is deterministic
     and engine-independent."""
-    toks = corpus.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("term"),
-    ).filter(F.col("term") != "")
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    terms = corpus.select(
+        "doc_id", F.explode(words(F.lower(F.col("text")))).alias("term")
+    )
+    tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
     n_docs = corpus.agg(F.count("*").alias("n_docs"))
     w = Window.partitionBy("doc_id").orderBy(
@@ -537,21 +611,9 @@ def decontaminate(
     Emits every corpus doc with ``n_hits`` (0 = clean) so the caller
     chooses the policy (drop, downweight, audit)."""
     def grams(df: DataFrame) -> DataFrame:
-        # the words column is split once below the lambda (Spark does not
-        # share a split written inside it across the lambda's calls)
-        words = F.col("_words")
-        gram = F.transform(
-            F.sequence(
-                F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1))
-            ),
-            lambda i: F.concat_ws(
-                " ", F.slice(words, i, F.lit(n))
-            ),
-        )
         return (
-            df.select("doc_id", F.split(F.lower(F.col("text")), " ").alias("_words"))
-            .select("doc_id", F.explode(gram).alias("g"))
-            .filter(F.size(F.split(F.col("g"), " ")) == n)
+            df.select("doc_id", tokens(F.lower(F.col("text"))).alias("_words"))
+            .select("doc_id", F.explode(ngrams(F.col("_words"), n)).alias("g"))
             .distinct()
         )
 
@@ -586,30 +648,16 @@ def repetition_ratio(
     on the ratio without a join back (the gate query wants the scores
     alone).
 
-    The words and the n-gram array are each computed once per row, as
-    columns below the expressions that read them: Spark does not share a
-    subexpression across a lambda's calls, so a ``split`` inside the
-    ``transform`` would re-split the text per n-gram (quadratic in document
-    length). A doc shorter than n words has no n-grams."""
-    words, grams = F.col("_words"), F.col("_grams")
+    The tokens and the n-gram array are each a column below the
+    expressions that read them (see ``ngrams``). A doc shorter than n
+    tokens has no n-grams."""
+    grams = F.col("_grams")
     total = F.size(grams)
     return (
         corpus.select(
-            "doc_id", "text", F.split(F.lower(F.col("text")), " ").alias("_words")
+            "doc_id", "text", tokens(F.lower(F.col("text"))).alias("_words")
         )
-        .select(
-            "doc_id",
-            "text",
-            F.when(
-                F.size(words) >= n,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(words) - (n - 1)),
-                    lambda i: F.concat_ws(" ", F.slice(words, i, F.lit(n))),
-                ),
-            )
-            .otherwise(F.array().cast("array<string>"))
-            .alias("_grams"),
-        )
+        .select("doc_id", "text", ngrams(F.col("_words"), n).alias("_grams"))
         .select(
             "doc_id",
             *(["text"] if keep_text else []),
@@ -631,18 +679,17 @@ def sample_to_budget(
     100 TB).
 
     Mechanics: one aggregation computes each stratum's total word count;
-    rate = min(1, budget/total) becomes a zero-padded 8-hex threshold; a
-    doc survives iff the first 8 hex chars of md5(doc_id) sort below it —
-    uniform on [0, 16^8), engine-stable, reproducible run to run. The id
-    alone is hashed (not the text): it is already uniform and
-    deterministic, and hashing the full document would cost a second
-    full-text CPU pass at 100 TB for no extra entropy.
+    a doc survives iff ``draw_below(rate)`` for its stratum's
+    rate = min(1, budget/total): engine-stable, reproducible run to run.
     The expected surviving token mass is the budget (exact-fill needs a
     global sort; sampling is what scales). Strata totals ride a broadcast
     join; the corpus is scanned once and never shuffles."""
-    words = F.size(F.filter(F.split(F.col("text"), " "), lambda t: t != ""))
-    lang = _lang_pred_expr(F.col("text"))
-    base = corpus.select("doc_id", "text", lang.alias("lang"), words.alias("n_words"))
+    base = corpus.select(
+        "doc_id",
+        "text",
+        lang_pred_expr(F.col("text")).alias("lang"),
+        n_words(F.col("text")).alias("n_words"),
+    )
     budget_expr = F.create_map(
         *[F.lit(x) for kv in budgets.items() for x in kv]
     )
@@ -654,21 +701,9 @@ def sample_to_budget(
             "rate", F.least(F.lit(1.0), F.col("budget") / F.col("stratum_words"))
         )
     )
-    # cap at 16^8 - 1: rate = 1.0 would render 9 hex digits and lpad
-    # truncates — 'ffffffff' keeps everything but the 1-in-4B exact match
-    threshold = F.lpad(
-        F.lower(F.hex(
-            F.least(
-                F.floor(F.col("rate") * F.lit(4294967296.0)).cast("bigint"),
-                F.lit(4294967295),
-            )
-        )),
-        8, "0",
-    )
     return (
         base.join(F.broadcast(totals), "lang")
-        .filter(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8)
-                < threshold)
+        .filter(draw_below(F.col("rate")))
         .select("doc_id",
                 *(["text"] if keep_text else []),
                 "lang", "n_words",
@@ -726,12 +761,7 @@ def learn_bpe_merges(corpus: DataFrame, num_merges: int = 20) -> DataFrame:
     DuckDB oracle (the driver records the rows-only check).
     """
     wf = (
-        corpus.select(
-            F.explode(
-                F.filter(F.split(F.lower(F.col("text")), " "),
-                         lambda t: t != "")
-            ).alias("word")
-        )
+        corpus.select(F.explode(words(F.lower(F.col("text")))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
         .select(
@@ -788,18 +818,16 @@ def quality_weighted_sample(
 
     The per-doc quality score is the mean of two bounded signals already
     used by ``quality_score``: min(1, n_words/64) (length) and
-    min(1, stopword_ratio/0.25) (naturalness). The keep test is the same
-    deterministic md5(doc_id)-vs-8-hex-threshold device as
-    ``sample_to_budget`` — engine-exact, reproducible, zero shuffles: the
-    threshold is a pure per-row expression, so the whole pass is one scan
-    inside whole-stage codegen. Emits the survivors with their rate."""
-    words = F.split(F.col("text"), " ")
-    n_words = F.size(F.filter(words, lambda w: w != ""))
+    min(1, stopword_ratio/0.25) (naturalness). The keep test is
+    ``draw_below(rate)``, as in ``sample_to_budget`` — engine-exact,
+    reproducible, zero shuffles: the threshold is a pure per-row
+    expression, so the whole pass is one scan inside whole-stage codegen. Emits the survivors with their rate."""
+    n = n_words(F.col("text"))
     stop_hits = _count_words(F.col("text"), STOPWORDS)
     q = F.round(
         (
-            F.least(F.lit(1.0), n_words / F.lit(64.0))
-            + F.least(F.lit(1.0), (stop_hits / n_words) / F.lit(0.25))
+            F.least(F.lit(1.0), n / F.lit(64.0))
+            + F.least(F.lit(1.0), (stop_hits / n) / F.lit(0.25))
         )
         / 2.0,
         4,
@@ -809,22 +837,12 @@ def quality_weighted_sample(
     # q=0.5155 -> 0.56395); low + (high-low)*q over the already-4dp q is
     # bit-identical IEEE arithmetic on both engines
     rate = F.lit(low) + (F.lit(high) - F.lit(low)) * q
-    threshold = F.lpad(
-        F.lower(F.hex(
-            F.least(
-                F.floor(rate * F.lit(4294967296.0)).cast("bigint"),
-                F.lit(4294967295),
-            )
-        )),
-        8, "0",
-    )
     return (
-        corpus.filter(n_words > 0)
-        .filter(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8)
-                < threshold)
+        corpus.filter(n > 0)
+        .filter(draw_below(rate))
         .select(
             "doc_id",
-            n_words.cast("int").alias("n_words"),
+            n.cast("int").alias("n_words"),
             q.cast("double").alias("quality"),
             rate.cast("double").alias("rate"),
         )
@@ -916,10 +934,9 @@ def upsample_mix(
     """Repeat-factor data mixing (Llama/Pile-style epoch weighting): each
     language stratum is replicated ``factors[lang]`` times in expectation.
     floor(f) full copies always emit; the fractional remainder is one extra
-    copy iff the first 8 hex chars of md5(doc_id) sort below the
-    lpad-hex threshold frac(f)·16^8 — the same deterministic keep test as
-    sample_to_budget, so f < 1 degrades to plain downsampling and the two
-    operators compose into one mixing algebra. Strata absent from
+    copy iff ``draw_below(frac(f))`` — the keep test of sample_to_budget,
+    so f < 1 degrades to plain downsampling and the two operators compose
+    into one mixing algebra. Strata absent from
     ``factors`` emit zero copies (budgets define the mix exhaustively).
 
     Output grain is (doc_id, epoch): epoch ∈ [1, n_copies] numbers the
@@ -935,23 +952,9 @@ def upsample_mix(
         ].cast("double"),
         F.lit(0.0),
     )
-    frac = f_expr - F.floor(f_expr)
-    threshold = F.lpad(
-        F.lower(F.hex(
-            F.least(
-                F.floor(frac * F.lit(4294967296.0)).cast("bigint"),
-                F.lit(4294967295),
-            )
-        )),
-        8, "0",
-    )
     n_copies = (
         F.floor(f_expr).cast("int")
-        + F.when(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8)
-            < threshold,
-            1,
-        ).otherwise(0)
+        + F.when(draw_below(f_expr - F.floor(f_expr)), 1).otherwise(0)
     )
     base = corpus.select(
         "doc_id",

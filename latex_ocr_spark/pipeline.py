@@ -214,7 +214,4 @@ def curate_and_budget(docs: DataFrame, keep_text: bool = False) -> DataFrame:
     from .operators import text_analysis as TA
 
     curated = persist(TA.curate_corpus(docs))
-    survivors = D.dedup_apply(
-        curated, D.minhash_lsh_pairs(curated, n=3, threshold=0.5)
-    )
-    return TA.token_count(survivors, keep_text=keep_text)
+    return TA.token_count(D.drop_near_dups(curated), keep_text=keep_text)

@@ -93,14 +93,6 @@ def test_preprocess_canvas_owns_its_buffer():
     assert np.array_equal(canvas, full[::2, ::2])
 
 
-def test_pad_batch_images():
-    a = np.zeros((2, 3), dtype=np.uint8)
-    b = np.ones((3, 2), dtype=np.uint8)
-    batch = image_ops.pad_batch_images([a, b])
-    assert batch.shape == (2, 3, 3)
-    assert batch[0, 2, 0] == 255 and batch[1, 0, 2] == 255
-
-
 def test_tokenize_oov_and_truncate():
     ids = text_ops.tokenize(r"1 + \nosuchtok", TOK_TO_ID, ID_UNK)
     assert ids[0] == TOK_TO_ID["1"] and ids[2] == ID_UNK
